@@ -19,9 +19,9 @@ cross-multiplication, not float division).
 
 Scale notes (100 TB): shingling is a flatMap (no shuffle); the LSH
 bucket join shuffles (band, hash) pairs — O(docs x bands) rows of a
-few bytes; the Jaccard verify join runs only on LSH candidates. The
-all-pairs variant here is for oracle verification at test SF and as
-the verify stage; never run it on a full corpus.
+few bytes; the Jaccard verify joins only LSH candidates to
+per-document shingle arrays. The all-pairs variant here is the
+test-scale oracle of the verify stage; never run it on a full corpus.
 """
 
 from __future__ import annotations
@@ -191,66 +191,52 @@ def jaccard_verify(
     """Exact n-gram Jaccard computed ONLY on *candidates* pairs — the
     verify stage of the scale pipeline (``lsh_candidate_pairs`` →
     ``jaccard_verify``). Same integer threshold semantics and output
-    columns as :func:`ngram_jaccard_pairs`, but the shingle self-join
-    is replaced by routing shingles through the candidate pair list:
+    columns as :func:`ngram_jaccard_pairs`, so pairs sharing no
+    shingle are never reported.
 
-    1. shingles are semi-joined to docs that appear in any candidate
-       (at corpus scale this drops ~everything — candidates are sparse);
-    2. each candidate pair joins doc_a's shingles, then inner-joins
-       doc_b's on (doc_b, shingle) — the common count per pair.
+    The shingle frame is grouped into one array per document; each
+    candidate pair joins it on doc_a and on doc_b, and the counts are
+    array sizes: ``common = size(array_intersect(ga, gb))``, ``n_a =
+    size(ga)``, ``n_b = size(gb)``. Shuffle keys are doc ids only.
+    Memory bound: the largest array holds one document's distinct
+    shingles, bounded by the longest document, which is already one
+    input row; no array grows with a key's row count. Every document
+    is grouped, not only candidate documents, and over a cached
+    shingle frame the grouping runs once per join side (Spark reuses
+    no exchange above a cached relation).
 
-    Shuffle keys are doc ids and (doc, shingle); work is O(candidate
-    pairs × shingles-per-doc), never O(corpus²) — hot shingles cannot
-    quadratically explode because pairs are fixed by the LSH stage.
-
-    Pass *shingles_df* (e.g. a pinned :func:`shingles` frame shared
-    with the LSH candidate stage) to avoid recomputing the
-    split+explode+distinct chain — the composed dd2 pipeline computes
-    shingles exactly once that way.
+    *shingles_df* (e.g. a pinned :func:`shingles` frame shared with
+    the LSH stage) skips recomputing the shingles; its rows must be
+    unique per (doc_id, shingle). ``candidates_distinct=True`` skips
+    the pair-list ``distinct`` for a caller whose pairs are unique by
+    construction; otherwise a duplicated pair would be reported twice.
     """
-    # dedup the pair list: a caller may union several candidate
-    # generators (LSH + SimHash overlap), and a duplicated pair would
-    # multiply `common` and break the threshold arithmetic.
-    # ``candidates_distinct=True`` skips that full pair-set shuffle
-    # when the caller's frame is unique by construction (r17, guide
-    # §2.4 "a distinct on data that is already unique"):
-    # lsh_candidate_pairs ends in groupBy(doc_a, doc_b), so its
-    # output cannot hold duplicates.
-    # PINNED (r16): the pair list feeds three plan branches (both
-    # docs_in arms and the common join), and without the pin Catalyst
-    # re-executes the whole candidate-generation subtree — the LSH
-    # minhash agg + self-join — once per branch (measured 3x in the
-    # dd2 before plan, plans/r16/dd2_ngram_jaccard_before.txt).
     cand = candidates.select("doc_a", "doc_b")
     if not candidates_distinct:
         cand = cand.distinct()
-    cand = pin(cand)
-    docs_in = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
     base = shingles_df if shingles_df is not None else shingles(documents, n=n)
-    sh = pin(base.join(docs_in, "doc_id", "left_semi"))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        cand.join(sha, "doc_a")
-        .join(shb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    per_doc = base.groupBy("doc_id").agg(F.collect_list("shingle").alias("g"))
+    ga = per_doc.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
+    gb = per_doc.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            F.col("common") * threshold_den
-            >= (F.col("n_a") + F.col("n_b") - F.col("common")) * threshold_num
+        cand.join(ga, "doc_a")
+        .join(gb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("ga", "gb")).cast("bigint").alias("common"),
+            F.size("ga").cast("bigint").alias("n_a"),
+            F.size("gb").cast("bigint").alias("n_b"),
         )
-        .select("doc_a", "doc_b", "common", "n_a", "n_b")
+        # common * den >= (n_a + n_b - common) * num, rearranged so that
+        # `common` occurs once: Catalyst inlines it into the join
+        # condition, and every occurrence there runs array_intersect
+        # again. The floor of 1 drops pairs sharing no shingle when
+        # num = 0 (n_a and n_b are >= 1 here, so it is inert otherwise).
+        .filter(
+            F.col("common") * (threshold_den + threshold_num)
+            >= F.greatest((F.col("n_a") + F.col("n_b")) * threshold_num, F.lit(1))
+        )
     )
 
 
@@ -347,8 +333,10 @@ def verified_pairs(
     wants both should build THIS once (see :func:`dup_pipeline`)
     rather than compose the two stages twice.
 
-    One pinned shingle frame feeds the LSH stage and the verify stage,
-    so the split+explode+distinct chain executes once.
+    One pinned shingle frame feeds the LSH stage and the verify stage
+    (:func:`jaccard_verify`: per-document shingle arrays joined on doc
+    ids, never on a shingle), so the split+explode+distinct chain
+    executes once.
     """
     sh = pin(shingles(documents, n=n))
     cands = lsh_candidate_pairs(
@@ -363,7 +351,7 @@ def verified_pairs(
         shingles_df=sh,
         # lsh_candidate_pairs ends in groupBy(doc_a, doc_b) — unique
         # by construction, so the verify stage's guard distinct (one
-        # full pair-set shuffle) is provably redundant here (r17)
+        # full pair-set shuffle) is redundant here
         candidates_distinct=True,
     )
 
@@ -379,10 +367,10 @@ def dup_pipeline(
 ) -> tuple[DataFrame, DataFrame]:
     """Pipeline context for "pairs AND groups" consumers: returns
     ``(pairs, groups)`` where *pairs* is the PINNED
-    :func:`verified_pairs` frame and *groups* is
-    :func:`dup_groups` over that same materialized frame — the
-    LSH+verify stage (the most expensive dedup stage at scale)
-    executes exactly once, verified by executed-metrics test
+    :func:`verified_pairs` frame and *groups* is :func:`dup_groups`
+    over it. Building *groups* is eager: the edge checkpoint fills the
+    pin, so the LSH+verify stage (the most expensive dedup stage at
+    scale) executes exactly once, verified by an executed-metrics test
     (tests/test_curation_extras.py). Call
     ``aistore_spark.util.release_cached()`` when done."""
     pairs = pin(
@@ -666,21 +654,23 @@ def dup_groups(
     transitive duplicate groups, so one canonical document (the min
     doc_id) can be kept per group.
 
-    Hybrid strategy (the standard CC cutover):
+    Hybrid strategy (the standard CC cutover): the doubled edge frame
+    is checkpointed, then ONE bounded Arrow collect of at most
+    ``local_edges_threshold + 1`` edges both picks the path and carries
+    the graph (default threshold derived from ``spark.driver.memory``
+    via :func:`_local_edge_budget`, clamped to [500k, 8M]):
 
-    - **Small graph** (≤ ``local_edges_threshold`` edges, counted on
-      the already-materialized edge frame; default derived from
-      ``spark.driver.memory`` via :func:`_local_edge_budget`, clamped
-      to [500k, 8M]): array union-find on the driver. The edge list
-      arrives as two int64 numpy arrays via Arrow (``toPandas``) —
+    - **Small graph** (≤ ``local_edges_threshold`` directed edges):
+      array union-find on the driver over the collected int64 arrays —
       ~16 B/edge plus bounded temporaries, never per-row ``Row``
-      objects — so the fast path costs tens of MB, not GB, of driver
-      heap. Verified near-dup graphs are sparse — edges ≈ O(actual
-      dups) — so even a billion-doc corpus with 1% dup chains often
-      lands here, and the bounded collect replaces diameter-many
-      distributed rounds of pure scheduling overhead (profiled:
-      900-node graph, 9 rounds, >10× the local cost).
-    - **Large graph**: iterative min-label propagation — every node
+      objects — and no further Spark job. Verified near-dup graphs
+      are sparse — edges ≈ O(actual dups) — so even a billion-doc
+      corpus with 1% dup chains often lands here, and the bounded
+      collect replaces diameter-many distributed rounds of pure
+      scheduling overhead (profiled: 900-node graph, 9 rounds, >10×
+      the local cost).
+    - **Large graph** (the collect came back full): iterative
+      min-label propagation over the checkpointed edges — every node
       repeatedly takes the minimum label over itself and its
       neighbors until fixpoint. Each round is one edge join + one
       min-aggregation, O(E) shuffled rows of two ints; lineage is
@@ -714,11 +704,11 @@ def dup_groups(
 
     if local_edges_threshold is None:
         local_edges_threshold = _local_edge_budget(pairs.sparkSession)
-    if edges.count() <= local_edges_threshold:
+    pdf = edges.limit(local_edges_threshold + 1).toPandas()
+    if len(pdf) <= local_edges_threshold:
         import numpy as np
         import pandas as pd
 
-        pdf = edges.toPandas()  # Arrow transfer: two int64 columns
         src = pdf["src"].to_numpy(dtype=np.int64)
         dst = pdf["dst"].to_numpy(dtype=np.int64)
         nodes = np.unique(src)  # edges are doubled, so src covers all

@@ -376,11 +376,12 @@ _CENT_BLOCK = 8192
 
 
 def _collect_cents(centroids_q: DataFrame) -> tuple:
-    """Materialize a (K-row) quantized centroid frame ``(centroid_id,
-    cvec)`` to the driver as (ids int64[K], mat float64[K, d]), sorted
-    by centroid_id so vectorized tie-breaks (first max) equal the
-    declarative ones (lower centroid_id). K is sqrt(N) at worst — the
-    same K rows the old crossJoin(broadcast) shipped to every task."""
+    """Materialize a small quantized ``(id, vec)`` frame — centroids,
+    a PQ codebook or an ANN query set — to the driver as (ids
+    int64[K], mat float64[K, d]), sorted by id so vectorized
+    tie-breaks (first max) equal the declarative ones (lower id). For
+    centroids K is sqrt(N) at worst — the same K rows the old
+    crossJoin(broadcast) shipped to every task."""
     import numpy as np
 
     rows = sorted(centroids_q.collect(), key=lambda r: r[0])
@@ -450,7 +451,7 @@ def _assign_topk(
 
 def _cells(
     df: DataFrame,
-    centroids_b: DataFrame,
+    cents: tuple,
     out_id: str,
     nprobe: int,
     id_col: str,
@@ -458,17 +459,14 @@ def _cells(
 ) -> DataFrame:
     """Top-*nprobe* max-inner-product cells per vector, carrying the
     quantized vector along — the vectorized :func:`_assign_topk` under
-    the hood: the K-row centroid frame is collected once at plan build
-    (the same K rows a broadcast ships to every task) and each corpus
-    batch is scored by one blocked matmul; no crossJoin, no window
-    exchange, the corpus never shuffles."""
+    the hood: *cents* is the K-row centroid frame as collected by
+    :func:`_collect_cents` (the same K rows a broadcast ships to every
+    task), and each batch is scored by one blocked matmul; no
+    crossJoin, no window exchange, the corpus never shuffles."""
     v = df.select(
         F.col(id_col).alias(out_id), quantized(vec_col).alias("vq")
     )
-    ids, mat = _collect_cents(
-        centroids_b.select("centroid_id", "cvec")
-    )
-    return _assign_topk(v, ids, mat, out_id, nprobe).select(
+    return _assign_topk(v, *cents, out_id, nprobe).select(
         out_id, "centroid_id", "vq"
     )
 
@@ -505,10 +503,8 @@ def ivf_topk(
     is scored. Recall is tunable via nprobe; exactness within probed
     cells is guaranteed (integer dot, deterministic ties).
     """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), quantized(vec_col).alias("cvec")
-    )
-    assign = _cells(corpus, c, "neighbor_id", 1, id_col, vec_col)
+    cents = _collect_cents(centroids.select(id_col, quantized(vec_col)))
+    assign = _cells(corpus, cents, "neighbor_id", 1, id_col, vec_col)
     # Round-robin the assignments before the scoring join. The
     # vectorized _cells preserves the corpus scan's input splits (the
     # pre-r11 shape ended in a window exchange that evened this out
@@ -521,7 +517,7 @@ def ivf_topk(
     # nprobe-scaled candidate scoring it parallelizes. The PQ read path
     # (ivfpq_topk) re-shuffles via its codes-join and doesn't need it.
     assign = _rebalance(assign)
-    probe = _cells(queries, c, "query_id", nprobe, id_col, vec_col).select(
+    probe = _cells(queries, cents, "query_id", nprobe, id_col, vec_col).select(
         "query_id", "centroid_id", F.col("vq").alias("qq")
     )
     scored = (
@@ -562,10 +558,8 @@ def kmeans_step(
     ``F.aggregate`` if that ever shows up in a profile. Iterating =
     feeding the output back as the next centroid set.
     """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), quantized(vec_col).alias("cvec")
-    )
-    assigned = _cells(corpus, c, "vec", 1, id_col, vec_col)
+    cents = _collect_cents(centroids.select(id_col, quantized(vec_col)))
+    assigned = _cells(corpus, cents, "vec", 1, id_col, vec_col)
     return (
         assigned.select(
             "centroid_id", F.posexplode(F.col("vq")).alias("dim0", "q")
@@ -790,7 +784,9 @@ def pq_adc_topk(
     # parallelizes. (ivfpq_topk doesn't need this: its
     # codes-joins-assign shuffle does it.)
     codes = _rebalance(codes)
-    q_ids, cids, lut = _adc_lut(queries, codebook, m, dim, id_col, vec_col)
+    cids, cmat = _collect_cents(codebook.select(id_col, quantized(vec_col)))
+    q_ids, qmat = _collect_cents(queries.select(id_col, quantized(vec_col)))
+    lut = _adc_lut(qmat, cmat, m, dim)
     # r16: the query fan-out happens inside the scoring kernel — the
     # old crossJoin(broadcast(query ids)) shipped Q×N candidate rows
     # through Arrow just so _adc_score could gather them row-wise.
@@ -864,8 +860,8 @@ def pq_encode_wide(
 
 def _assign_encode_wide(
     corpus: DataFrame,
-    centroids_q: DataFrame,
-    codebook: DataFrame,
+    cents: tuple,
+    code: tuple,
     m: int,
     dim: int,
     id_col: str,
@@ -884,16 +880,13 @@ def _assign_encode_wide(
     with ties to the LOWER centroid id (ids sorted, lexsort), per-
     subspace argmin L2 with ties to the lower code (first minimum on
     the code-sorted matrix); all operands fixed-point ints exact in
-    float64."""
+    float64. *cents* and *code* are the centroid and codebook frames
+    as collected by :func:`_collect_cents`."""
     import numpy as np
 
     sub = dim // m
-    ids, mat = _collect_cents(centroids_q.select("centroid_id", "cvec"))
-    cids, cmat = _collect_cents(
-        codebook.select(
-            F.col(id_col).alias("code"), quantized(vec_col).alias("cbvec")
-        )
-    )
+    ids, mat = cents
+    cids, cmat = code
     csub = cmat.reshape(len(cids), m, sub)
     c2 = (csub**2).sum(axis=2)
     v = corpus.select(
@@ -944,19 +937,13 @@ def _assign_encode_wide(
     )
 
 
-def _adc_lut(
-    queries: DataFrame,
-    codebook: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-) -> tuple:
+def _adc_lut(qmat, cmat, m: int, dim: int):
     """Driver-side numpy ADC lookup table — the FAISS shape of
     the retired broadcast-joined ADC-table plan: ``lut[q_idx,
     subspace, code_idx]`` = exact
-    integer L2 between the query subvector and the codeword. Returns
-    ``(q_ids sorted, code_ids sorted, lut int64[nq, m, k])``.
+    integer L2 between the query subvector and the codeword, over the
+    query and codebook matrices as collected (id-sorted) by
+    :func:`_collect_cents`. Returns ``lut int64[nq, m, k]``.
 
     The table is queries-scaled (nq × m × k): 10M int64 at sf100's
     20k queries — an 80 MB broadcast VARIABLE gathered by numpy at
@@ -973,27 +960,13 @@ def _adc_lut(
     import numpy as np
 
     sub = dim // m
-    cids, cmat = _collect_cents(
-        codebook.select(
-            F.col(id_col).alias("code"), quantized(vec_col).alias("cbvec")
-        )
-    )
-    csub = cmat.reshape(len(cids), m, sub)  # (k, m, sub)
-    qrows = sorted(
-        queries.select(
-            F.col(id_col).alias("query_id"), quantized(vec_col).alias("qq")
-        ).collect(),  # queries-sized: bounded by the read-path contract
-        key=lambda r: r[0],
-    )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    qsub = qmat.reshape(len(q_ids), m, sub)
-    lut = (
+    csub = cmat.reshape(len(cmat), m, sub)  # (k, m, sub)
+    qsub = qmat.reshape(len(qmat), m, sub)
+    return (
         (qsub**2).sum(axis=2)[:, :, None]
         + (csub**2).sum(axis=2).T[None, :, :]
         - 2.0 * np.einsum("qms,kms->qmk", qsub, csub)
     ).astype(np.int64)
-    return q_ids, cids, lut
 
 
 def _adc_score(
@@ -1179,10 +1152,36 @@ def ivfpq_topk(
     FAISS division of labor and also removes the ×m candidate
     explosion and the hash agg). Recall = IVF recall within probed
     cells (PQ ADC ranks approximately but deterministically).
+
+    Construction collects centroids, codebook and queries to the
+    driver once each (three driver jobs); the cell assignment, the PQ
+    encode and the ADC LUT all reuse those arrays.
     """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), quantized(vec_col).alias("cvec")
+    return _ivfpq_adc(
+        corpus,
+        queries,
+        _collect_cents(centroids.select(id_col, quantized(vec_col))),
+        _collect_cents(codebook.select(id_col, quantized(vec_col))),
+        _collect_cents(queries.select(id_col, quantized(vec_col))),
+        k, nprobe, m, dim, id_col, vec_col,
     )
+
+
+def _ivfpq_adc(
+    corpus: DataFrame,
+    queries: DataFrame,
+    cents: tuple,
+    code: tuple,
+    qs: tuple,
+    k: int,
+    nprobe: int,
+    m: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """:func:`ivfpq_topk`'s plan over the centroid, codebook and query
+    frames as :func:`_collect_cents` returns them."""
     # fused index build (r16): one corpus pass emits (vec_id, cell,
     # codes) — see _assign_encode_wide; the old two-pass build paid a
     # second corpus scan plus a corpus×corpus shuffle join on vec_id.
@@ -1191,12 +1190,13 @@ def ivfpq_topk(
     # scan's input splits (the r11 straggler class) — linear bytes,
     # one exchange instead of the join's two.
     indexed = _rebalance(
-        _assign_encode_wide(corpus, c, codebook, m, dim, id_col, vec_col)
+        _assign_encode_wide(corpus, cents, code, m, dim, id_col, vec_col)
     )
-    probe = _cells(queries, c, "query_id", nprobe, id_col, vec_col).select(
+    probe = _cells(queries, cents, "query_id", nprobe, id_col, vec_col).select(
         "query_id", "centroid_id"
     )
-    q_ids, cids, lut = _adc_lut(queries, codebook, m, dim, id_col, vec_col)
+    (q_ids, qmat), (cids, cmat) = qs, code
+    lut = _adc_lut(qmat, cmat, m, dim)
     cands = (
         indexed.join(F.broadcast(probe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1346,8 +1346,9 @@ def ivfpq_refine_topk(
 
     ``shortlist=None`` sizes the shortlist by the production rule
     :func:`refine_shortlist_size` from the corpus and centroid counts
-    (two metadata-cheap count jobs) — use this on clustered corpora,
-    where any fixed constant under-shortlists the dense cells.
+    (one corpus count job unless *n_corpus* is given; the centroids
+    are collected anyway) — use this on clustered corpora, where any
+    fixed constant under-shortlists the dense cells.
 
     Third-decade lesson (r14, sf100): under the sized rule the pair
     frame grows as queries × shortlist ≈ queries·√N — 3.6M rows at
@@ -1361,10 +1362,14 @@ def ivfpq_refine_topk(
     1000-executor cluster wants at that size anyway. The cap applies
     to EXPLICIT-shortlist callers too (ADVICE-r14: a caller passing
     the 5658 value the sized rule produces at sf100 must not re-create
-    the >35-min GC-death broadcast) — the query count is one count job
-    over the queries frame, which the ADC LUT path already collects to
-    the driver whole, so the extra job is noise.
+    the >35-min GC-death broadcast) — the query count is the length of
+    the query matrix the ADC LUT path already collects to the driver, so
+    the check costs no job.
+
+    Like :func:`ivfpq_topk`, construction collects centroids, codebook
+    and queries exactly once each.
     """
+    cents = _collect_cents(centroids.select(id_col, quantized(vec_col)))
     if shortlist is None:
         # ``n_corpus`` lets a caller that already knows the corpus
         # cardinality (e.g. it materialized the pinned corpus with a
@@ -1374,23 +1379,23 @@ def ivfpq_refine_topk(
         # identical either way.
         shortlist = refine_shortlist_size(
             corpus.count() if n_corpus is None else n_corpus,
-            centroids.count(),
+            len(cents[0]),
             nprobe,
             k,
         )
-    # one materialization shared by the cap-check count, the probe
-    # assignment, the driver LUT collect, and the refine q-vector
-    # frame (ADVICE-r15: the cap-check count used to recompute the
-    # caller's derived query frame from scratch). Query frames are
-    # bounded (the ANN query set), so the pinned partitions are small.
-    # LAZY checkpoint + count (r17): the eager form paid two driver
-    # jobs (materialize, then count); the count materializes it in one.
+    # one materialization shared by the driver query collect (which
+    # also gives the cap-check count), the probe assignment and the
+    # refine q-vector frame (ADVICE-r15: the cap check used to
+    # recompute the caller's derived query frame from scratch). Query
+    # frames are bounded (the ANN query set), so the pinned partitions
+    # are small. LAZY: the collect materializes it in the same job.
     queries = queries.localCheckpoint(eager=False)
-    n_queries = queries.count()
-    adc = ivfpq_topk(
-        corpus, centroids, codebook, queries,
-        k=shortlist, nprobe=nprobe, m=m, dim=dim,
-        id_col=id_col, vec_col=vec_col,
+    qs = _collect_cents(queries.select(id_col, quantized(vec_col)))
+    n_queries = len(qs[0])
+    adc = _ivfpq_adc(
+        corpus, queries, cents,
+        _collect_cents(codebook.select(id_col, quantized(vec_col))),
+        qs, shortlist, nprobe, m, dim, id_col, vec_col,
     ).select("query_id", "neighbor_id")
     q = queries.select(
         F.col(id_col).alias("query_id"), quantized(vec_col).alias("qv")
@@ -1463,13 +1468,8 @@ def semantic_cell_pairs(
     # min(struct) (no window over the vector x centroid product) and
     # carries the quantized vector along — no re-quantize, no second
     # corpus join
-    c = F.broadcast(
-        centroids.select(
-            F.col(id_col).alias("centroid_id"),
-            quantized(vec_col).alias("cvec"),
-        )
-    )
-    cells = _cells(corpus, c, "vec_id", 1, id_col, vec_col).withColumnRenamed(
+    cents = _collect_cents(centroids.select(id_col, quantized(vec_col)))
+    cells = _cells(corpus, cents, "vec_id", 1, id_col, vec_col).withColumnRenamed(
         "vq", "q"
     )
     schema = "centroid_id bigint, vec_a bigint, vec_b bigint, dot bigint"

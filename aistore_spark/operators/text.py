@@ -339,10 +339,14 @@ def bigram_familiarity(documents: DataFrame) -> DataFrame:
     float/log drift (a real LM uses log-probs; the empirical count sum
     is monotone in the same signal and hash-checkable).
 
-    Scale shape: bigrams explode map-side; the corpus count table is
-    one map-side-combinable agg keyed by bigram; the probe is one join
-    keyed by bigram (hot boilerplate bigrams are exactly the keys AQE
-    skew-split handles), then a per-doc rollup. Cost class = tx1.
+    Scale shape: bigrams explode map-side; ONE shuffle keyed by bigram
+    feeds a count window that attaches the corpus-wide occurrence count
+    to every occurrence row, then a per-doc rollup (map-side
+    combinable). There is no partial aggregate below the bigram
+    exchange and no skew mitigation: every occurrence of a hot
+    boilerplate bigram lands in one window partition, so that task's
+    buffered rows and time grow with the bigram's corpus-wide count.
+    Cost class = tx1.
     """
     ws = F.split(F.col("text"), " ")
     bigrams = F.filter(

@@ -309,7 +309,11 @@ def test_jaccard_verify_equals_allpairs_on_candidates(spark):
     """The registered dd2 composition (LSH candidates -> jaccard_verify)
     must equal the all-pairs oracle (ngram_jaccard_pairs) restricted to
     the candidate pair set — the all-pairs form is the test-only oracle
-    of the verifier, never the registered plan."""
+    of the verifier, never the registered plan. Also covered: a doc
+    shorter than n words (no shingles), a doc repeating one trigram
+    (n_sh counts distinct shingles), duplicate candidate rows, a pair
+    sharing no shingle, the zero threshold dd12 uses, and an empty
+    candidate frame."""
     texts = []
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     for i in range(30):
@@ -319,25 +323,52 @@ def test_jaccard_verify_equals_allpairs_on_candidates(spark):
         elif i % 3 == 1:
             words = [f"u{i}_{j}" for j in range(12)]  # unique doc
         texts.append((i, " ".join(words)))
+    texts += [
+        (100, "too short"),  # fewer than n words: no shingles
+        (101, "x y z x y z"),  # repeats the trigram "x y z"
+        (102, "x y z x y z w"),
+    ]
     docs = spark.createDataFrame(texts, "doc_id bigint, text string")
+    pair_schema = "doc_a bigint, doc_b bigint"
 
-    cands = dedup.lsh_candidate_pairs(docs, bands=8, n=3)
-    composed = {
-        (r.doc_a, r.doc_b): (r.common, r.n_a, r.n_b)
-        for r in dedup.jaccard_verify(
-            docs, cands, n=3, threshold_num=1, threshold_den=20
+    def check(cands, num, den, **kw):
+        rows = dedup.jaccard_verify(
+            docs, cands, n=3, threshold_num=num, threshold_den=den, **kw
         ).collect()
-    }
-    cand_set = {(r.doc_a, r.doc_b) for r in cands.collect()}
-    allpairs = {
-        (r.doc_a, r.doc_b): (r.common, r.n_a, r.n_b)
-        for r in dedup.ngram_jaccard_pairs(
-            docs, n=3, threshold_num=1, threshold_den=20
-        ).collect()
-        if (r.doc_a, r.doc_b) in cand_set
-    }
-    assert composed == allpairs
-    assert composed  # non-vacuous: the near-dups must surface
+        got = {(r.doc_a, r.doc_b): (r.common, r.n_a, r.n_b) for r in rows}
+        assert len(got) == len(rows), "a candidate pair was reported twice"
+        cand_set = {(r.doc_a, r.doc_b) for r in cands.collect()}
+        want = {
+            (r.doc_a, r.doc_b): (r.common, r.n_a, r.n_b)
+            for r in dedup.ngram_jaccard_pairs(
+                docs, n=3, threshold_num=num, threshold_den=den
+            ).collect()
+            if (r.doc_a, r.doc_b) in cand_set
+        }
+        assert got == want, (num, den, kw)
+        return got
+
+    lsh = dedup.lsh_candidate_pairs(docs, bands=8, n=3)
+    assert check(lsh, 1, 20)  # non-vacuous: the near-dups must surface
+    sh = dedup.shingles(docs, n=3)
+    check(lsh, 1, 20, shingles_df=sh, candidates_distinct=True)
+
+    listed = spark.createDataFrame(
+        [
+            (0, 3), (0, 3), (3, 6),  # near-dups, one pair listed twice
+            (0, 100), (100, 101),  # the shingle-less doc
+            (101, 102), (101, 102),  # the repeated trigram
+            (1, 4),  # unique docs: no shared shingle
+        ],
+        pair_schema,
+    )
+    for num, den in ((1, 20), (0, 1)):
+        got = check(listed, num, den)
+        assert got[(101, 102)] == (3, 3, 4)
+        assert (0, 3) in got and (3, 6) in got
+        assert not {(0, 100), (100, 101), (1, 4)} & set(got)
+
+    assert check(spark.createDataFrame([], pair_schema), 0, 1) == {}
 
 
 def test_semantic_cell_pairs_subset_of_all_pairs(spark):

@@ -31,3 +31,108 @@ def test_no_plan_antipatterns(spark, name):
     )
     for pattern, why in FORBIDDEN:
         assert not re.search(pattern, plan), f"{name}: {why}\n{plan[:2000]}"
+
+
+def _final_nodes(df):
+    """Physical operators of *df*'s executed (final adaptive) plan,
+    through query stages but not into cached relations, which run once
+    and are shared. Returns ``[(nodeName, simpleString)]``."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        out.append((name, node.simpleString(100)))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+#: exchanges above the pinned frames in verified_pairs' executed plan
+#: at sf0.001: the LSH bucket-join broadcast, and per verify side one
+#: shuffle into the per-document shingle arrays plus their broadcast
+VERIFY_MAX_EXCHANGES = 5
+
+
+def test_verified_pairs_verify_joins_on_doc_ids_only(spark):
+    """The Jaccard verify joins candidate pairs to per-document shingle
+    arrays: no join in the executed plan is keyed on a shingle, and the
+    plan above the pinned shingle and MinHash frames runs at most
+    VERIFY_MAX_EXCHANGES exchanges."""
+    from aistore_spark.operators import dedup
+    from aistore_spark.sources.tables import load_table
+    from aistore_spark.util import release_cached
+
+    # frames pinned by earlier plan-only tests (dd2, pipe3) would stand
+    # in for this plan as one cached scan
+    release_cached()
+    df = dedup.verified_pairs(load_table(spark, SF, "documents"))
+    assert df.collect()
+    nodes = _final_nodes(df)
+    release_cached()
+    joins = [s for n, s in nodes if n.endswith("Join")]
+    assert joins and not [s for s in joins if "shingle" in s], joins
+    exchanges = [s for n, s in nodes if n in ("Exchange", "BroadcastExchange")]
+    assert len(exchanges) <= VERIFY_MAX_EXCHANGES, exchanges
+
+
+def test_dup_groups_local_path_runs_one_action_after_checkpoint(
+    spark, monkeypatch
+):
+    """On the driver union-find path, dup_groups runs exactly one Spark
+    action after checkpointing its edge frame: the bounded collect that
+    both picks the path and carries the graph."""
+    from aistore_spark.operators import dedup
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(0, 5), (5, 9), (20, 21)], "doc_a bigint, doc_b bigint"
+    )
+    checkpoint = type(pairs).localCheckpoint
+
+    def checkpoint_then_regroup(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        sc.setJobGroup("dup-groups-after-checkpoint", "dup_groups")
+        return out
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", checkpoint_then_regroup)
+    sc.setJobGroup("dup-groups-checkpoint", "dup_groups")
+    try:
+        groups = dedup.dup_groups(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    after = sc.statusTracker().getJobIdsForGroup("dup-groups-after-checkpoint")
+    assert len(after) == 1, list(after)
+    assert "LocalRelation" in groups._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, groups.collect())) == [
+        (0, 0), (5, 0), (9, 0), (20, 20), (21, 20)
+    ]
+
+
+def test_dup_groups_one_edge_over_budget_takes_propagation_path(spark):
+    """A graph with exactly local_edges_threshold + 1 directed edges
+    falls through the bounded collect to label propagation, whose
+    labels equal the driver union-find's."""
+    from aistore_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(0, 5), (5, 9), (20, 21)], "doc_a bigint, doc_b bigint"
+    )
+    n_edges = 6  # both directions of three pairs
+    local = dedup.dup_groups(pairs, local_edges_threshold=n_edges)
+    propagated = dedup.dup_groups(pairs, local_edges_threshold=n_edges - 1)
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    assert "LocalRelation" in analyzed(local)
+    assert "LocalRelation" not in analyzed(propagated)
+    assert sorted(map(tuple, propagated.collect())) == sorted(
+        map(tuple, local.collect())
+    )
