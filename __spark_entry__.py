@@ -24,65 +24,18 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["dsort_pipeline"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness ledger covers exactly the FIRST 50
-# registered queries every round (observed rounds 1-6), so ordering —
-# not oracle compatibility — decides which operators get the hard
-# rows+schema+hash signal. Rounds 4-6 hard-verified every registered
-# query at least once; round 7's contract (machine-pinned by
-# tests/test_driver_contract.py): (a) every query whose implementation
-# or oracle CHANGED since its last driver-green row — fingerprint diff
-# against tests/driver_green_fps.json — must be in the front 50 (this
-# round: the s2c oracle fix, the K=64 driver-side BPE trio, the
-# refactored dd2/dd7/dsort_pipeline, and the new ann5b/ann9b quality
-# tier + pipe3 shared-pairs pipeline, plus the new tx11 BM25, dd10
-# substring spans, dd11 Bloom probe, tx12 hashed classifier); (b) the
-# remaining slots re-check the single-green r6 block (freshest code,
-# one hard row each) and the verdict-r5 high-risk shortlist. Dropped
-# vs r6 to make room for the new queries: ann1/t2_offline/dd8/dd4/dd3/
-# dd5/dd6/pipe1/pipe2/tok1/ds1/ds2/ev1/m6/s2b/s4/s5b/s7b/samp3/t1b/
-# t8/tx8/mm2b/mm3b/mm4b/mm8/mm9/t9/t10 (each driver-green in r4-r6 with unchanged
-# fingerprints; most also hash-exact at sf1 in
-# CORRECTNESS_SF1_r07.json).
+# The external correctness check covers exactly the first 50
+# registered queries, so this list decides which queries get its
+# rows+schema+hash check. The rule (tests/test_driver_contract.py):
+# every query whose fingerprint (tools/query_fps.py) differs from
+# tests/driver_green_fps.json, or that has no hash-green row in a
+# committed CORRECTNESS_r*.json ledger, is in the list, as are the
+# three helper sentinels and the standing high-risk shortlist. The
+# other slots hold representatives of operator families whose
+# executed path changed. A query leaves the list only with an
+# unchanged fingerprint and a hash-green ledger row.
 DRIVER_CHECK_PRIORITY = [
-    # Round 17 rebuild (optimization round 2). Slots, in order:
-    # (a) the 8 queries whose registered body or oracle changed this
-    #     round (fingerprint-stale vs tests/driver_green_fps.json,
-    #     which was re-snapshotted from CORRECTNESS_r16.json at the
-    #     r16 HEAD): the dedup candidates_distinct trio, the fused
-    #     ann9d/ann9e job chains, the d8/dsort_pipeline invariant
-    #     notes, and g1c's request semi-join;
-    # (b) the three HELPER SENTINELS (verdict-r16 item 2): their
-    #     fingerprints now fold in the shared helper sources
-    #     (tools/query_fps.py HELPER_SENTINELS — tables/util/session,
-    #     binary/archive, catalog + the shared view builders), so the
-    #     r16 hole — helper changes rotating nothing into the hash
-    #     window — is closed, and all three re-enter the front 50 now
-    #     as the verdict asked (p2/p4/s4b left the window in the same
-    #     round their executed path changed);
-    # (c) the verdict-r5 standing shortlist (machine-pinned by
-    #     tests/test_driver_contract.py);
-    # (d) every remaining slot goes to queries whose EXECUTED path
-    #     changed through this round's helper edits (dedup.py, text.py,
-    #     joins.py, simsearch.py, binary.py, api.py) — the rotation
-    #     contract cannot see helper-only changes (that is what the
-    #     sentinels fix for the shared seams), so the affected
-    #     operator families are front-loaded by hand this round.
-    # (e) late-round local_frame rollout (LocalRelation-backed small
-    #     driver frames): every operator family whose executed path it
-    #     changed gets one driver-hashed representative — f3
-    #     (filters.py), j2 (placement.py), m8 (movement.py), ds4
-    #     (downloader.py), f2b (registered body changed, fp-stale);
-    #     dsort.py rides on d8/dsort_pipeline, api.py on g4/j1b,
-    #     catalog_source.py on m12/m13, text.py on tx5c/tok2, and
-    #     util.py/catalog.py on the p2/s4b sentinels. Freed by
-    #     dropping one redundant sibling per still-covered family:
-    #     s4/s4c (binary.py keeps p4+s4d), dd4 (simhash keeps
-    #     dd6/dd6b), ann9b (ivfpq keeps ann9/ann9c/ann9d/ann9e), g2
-    #     (joins.py keeps j1/j1b/g4) — each driver-green in a
-    #     committed ledger with an unchanged fingerprint.
-    # Rotated out vs r16 (all driver-green in CORRECTNESS_r16.json
-    # with unchanged fingerprints): dd9_semantic_dedup, d1-d7 dsort
-    # rows, j5, p3, a2/a5, f1/f2/f4-f6, ds2c/ds2d.
+    # fingerprint-stale
     "dd12_minhash_estimate",
     "dd12b_minhash_estimate_capped",
     "dd2b_ngram_jaccard_capped",
@@ -91,82 +44,51 @@ DRIVER_CHECK_PRIORITY = [
     "d8_dsort_io",
     "dsort_pipeline",
     "g1c_assemble_batches_io",
-    # (b) helper sentinels
+    "pipe1_curation",
+    "pipe2_export_shards",
+    "ev8_funnel",
+    "tx14_novelty",
+    "ann9c_ivfpq_refined_clustered",
+    "m12_catalog_upsert",
+    "m13_catalog_compact",
+    "g2_coloc_routing",
+    "f2b_template_udtf",
+    "ds2c_download_errors",
+    "ds2d_download_status",
+    "s7b_dsv2_listing",
+    "t1_inline_etl",
+    "t2_offline_pipeline",
+    "t6_canned_sha256",
+    "t8_direct_put",
+    # helper sentinels (tools/query_fps.py HELPER_SENTINELS)
     "p2_extract_member",
     "p4_archive_append",
     "s4b_zip_listing",
-    # (c) standing shortlist
+    # standing shortlist
     "dd2_ngram_jaccard",
     "dd7_dup_groups",
     "g1_assemble_batches",
     "g1_mixed_batches",
     "g3_output_formats",
     "p1_pack_archive",
-    # (d) helper-affected operator families (r17 edits)
-    "tx11_bm25_topk",
-    "tx7_repetition_stats",
+    # operator-family representatives
     "tx5c_bpe_doc_tokens",
     "dd10_substring_spans",
     "pipe4_quality_gate",
     "pipe3_dedup_report",
-    # pipe1/pipe2's registered bodies changed late in r17 (exact-dedup
-    # + quality scan fused into one spread scan + checksum window) —
-    # fingerprint-stale, so both enter; tok2_pack_bpe freed a slot
-    # (fingerprint unchanged; tx5c is the direct representative of the
-    # shared BPE-pin path) and dd8_decontaminate the other
-    # (driver-green in CORRECTNESS_r14.json, fingerprint unchanged;
-    # dedup.py keeps dd2/dd6/dd6b/dd7/dd10/pipe3/pipe4 in the front
-    # 50).
-    "pipe1_curation",
-    "pipe2_export_shards",
-    # ev8's registered body changed late in r17 (funnel rebuilt as one
-    # scan + one user-keyed aggregate) — fingerprint-stale, so it
-    # enters; dd3_lsh_candidates freed the slot (driver-green in
-    # CORRECTNESS_r01.json, fingerprint unchanged; dedup.py keeps
-    # dd2/dd6/dd6b/dd7/dd8/dd10/pipe3/pipe4 in the front 50).
-    "ev8_funnel",
     "dd6_simhash_pairs",
     "dd6b_simhash_prod",
     "j1_get_batch",
     "j1b_mixed_entries",
     "g4_batch_loader",
-    # tx14's registered body changed late in r17 (ref/probe gram
-    # subtree deduplicated via a max window over gram) —
-    # fingerprint-stale, so it enters; ann9_ivfpq_topk freed the slot
-    # (driver-green in CORRECTNESS_r05.json, fingerprint unchanged;
-    # simsearch.py keeps ann9c/ann9d/ann9e/ann6b/ann7b in the front
-    # 50).
-    "tx14_novelty",
-    "ann9c_ivfpq_refined_clustered",
     "ann6b_kmeans_train",
     "ann7b_pq_train",
-    # tx8's executed path changed late in r17 (bigram_familiarity's
-    # count-agg + probe-join folded into one count window) — the helper
-    # convention front-loads the directly-affected query;
-    # ann8_pq_adc_topk freed the slot (driver-green in
-    # CORRECTNESS_r14.json, fingerprint unchanged; simsearch.py keeps
-    # ann9/ann9c/ann9d/ann9e/ann6b/ann7b in the front 50).
     "tx8_bigram_familiarity",
     "p1b_pack_archive_io",
     "s4d_shard_index_io",
-    "t3_multiobj_transform",
     "mm12_media_decode_io",
-    "m12_catalog_upsert",
-    "m13_catalog_compact",
-    # g2's registered body changed late in r17 (the placed-subtree
-    # dedup: n_entries as a window sum over votes) — fingerprint-stale,
-    # so it re-enters; s8_range_reads freed the slot (driver-green in
-    # CORRECTNESS_r16.json, fingerprint unchanged, rides catalog.py +
-    # the shared views, both sentinel-covered).
-    "g2_coloc_routing",
     "mm11_dhash_neardup",
     "st1_dedup_stream_mirror",
-    # (e) local_frame rollout representatives
-    "f3_explicit_names",
-    "j2_ekm_route",
-    "m8_mirror_copies",
-    "ds4_single_plan",
-    "f2b_template_udtf",
 ]
 
 

@@ -2075,6 +2075,84 @@ _WP_SQL = """
   FROM documents
 """
 
+#: word positions, word-3-gram shingles and one minhash per (document,
+#: band) — the CTEs every MinHash-LSH oracle below starts from
+_MINHASH_CTES = f"""WITH wp AS ({_WP_SQL}),
+        sh AS ({_SHINGLES_SQL}),
+        mh AS (
+          SELECT doc_id, CAST(r AS INT) AS band,
+                 min(md5(CAST(r AS VARCHAR) || '|' || shingle)) AS minhash
+          FROM sh, range(0, 8) t(r)
+          GROUP BY doc_id, r
+        )"""
+
+
+def _capped_sql(sample_den: int | None) -> str:
+    """The ``capped`` CTE over the ``cand`` pairs: with *sample_den*,
+    the md5 1/den stratum of the pair keys (util.md5_bucket on
+    ``doc_a|doc_b``, as :func:`_pair_stratum` filters); without, every
+    candidate."""
+    if sample_den is None:
+        return "capped AS (SELECT * FROM cand)"
+    return f"""capped AS (
+          SELECT * FROM cand
+          WHERE ('0x' || substr(md5(CAST(doc_a AS VARCHAR) || '|'
+                                    || CAST(doc_b AS VARCHAR)), 1, 8))::BIGINT
+                % {sample_den} = 0
+        )"""
+
+
+def _sample_den_sql(sample_den: int | None) -> str:
+    """The trailing ``sample_den`` select column of a capped twin."""
+    if sample_den is None:
+        return ""
+    return f",\n               CAST({sample_den} AS BIGINT) AS sample_den"
+
+
+def _pair_stratum(cand: DataFrame, sample_den: int | None) -> DataFrame:
+    """Spark twin of :func:`_capped_sql`: the candidate pairs whose
+    ``doc_a|doc_b`` key falls in md5 bucket 0 of *sample_den*."""
+    if sample_den is None:
+        return cand
+    from aistore_spark.util import md5_bucket
+
+    key = F.concat_ws(
+        "|", F.col("doc_a").cast("string"), F.col("doc_b").cast("string")
+    )
+    return cand.filter(md5_bucket(key, sample_den) == 0)
+
+
+def _ngram_jaccard_sql(sample_den: int | None) -> str:
+    """dd2's oracle; with *sample_den*, dd2b's: the verify covers only
+    the capped candidate stratum and each row records the den."""
+    den = _sample_den_sql(sample_den)
+    return oracles.with_catalogs(
+        f"""
+        {_MINHASH_CTES},
+        cand AS (
+          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+          FROM mh a
+          JOIN mh b ON a.band = b.band AND a.minhash = b.minhash
+                    AND a.doc_id < b.doc_id
+        ),
+        {_capped_sql(sample_den)},
+        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+        common AS (
+          SELECT c.doc_a, c.doc_b, count(*) AS common
+          FROM capped c
+          JOIN sh sa ON sa.doc_id = c.doc_a
+          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
+          GROUP BY 1, 2
+        )
+        SELECT doc_a, doc_b, common, sa.n_sh AS n_a, sb.n_sh AS n_b{den}
+        FROM common
+        JOIN sizes sa ON doc_a = sa.doc_id
+        JOIN sizes sb ON doc_b = sb.doc_id
+        WHERE common * 20 >= (sa.n_sh + sb.n_sh - common) * 1
+        """,
+        "objects",
+    )
+
 
 @register(
     "dd1_exact_dedup",
@@ -2094,41 +2172,7 @@ def dd1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
-@register(
-    "dd2_ngram_jaccard",
-    oracles.with_catalogs(
-        f"""
-        WITH wp AS ({_WP_SQL}),
-        sh AS ({_SHINGLES_SQL}),
-        mh AS (
-          SELECT doc_id, CAST(r AS INT) AS band,
-                 min(md5(CAST(r AS VARCHAR) || '|' || shingle)) AS minhash
-          FROM sh, range(0, 8) t(r)
-          GROUP BY doc_id, r
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM mh a
-          JOIN mh b ON a.band = b.band AND a.minhash = b.minhash
-                    AND a.doc_id < b.doc_id
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        common AS (
-          SELECT c.doc_a, c.doc_b, count(*) AS common
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2
-        )
-        SELECT doc_a, doc_b, common, sa.n_sh AS n_a, sb.n_sh AS n_b
-        FROM common
-        JOIN sizes sa ON doc_a = sa.doc_id
-        JOIN sizes sb ON doc_b = sb.doc_id
-        WHERE common * 20 >= (sa.n_sh + sb.n_sh - common) * 1
-        """,
-        "objects",
-    ),
-)
+@register("dd2_ngram_jaccard", _ngram_jaccard_sql(None))
 def dd2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pipeline as-registered at scale: MinHash-LSH candidate
     generation (dd3's bucketed join — shuffle keys (band, minhash))
@@ -2145,48 +2189,7 @@ def dd2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dd2b_ngram_jaccard_capped",
-    oracles.with_catalogs(
-        f"""
-        WITH wp AS ({_WP_SQL}),
-        sh AS ({_SHINGLES_SQL}),
-        mh AS (
-          SELECT doc_id, CAST(r AS INT) AS band,
-                 min(md5(CAST(r AS VARCHAR) || '|' || shingle)) AS minhash
-          FROM sh, range(0, 8) t(r)
-          GROUP BY doc_id, r
-        ),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM mh a
-          JOIN mh b ON a.band = b.band AND a.minhash = b.minhash
-                    AND a.doc_id < b.doc_id
-        ),
-        capped AS (
-          SELECT * FROM cand
-          WHERE ('0x' || substr(md5(CAST(doc_a AS VARCHAR) || '|'
-                                    || CAST(doc_b AS VARCHAR)), 1, 8))::BIGINT
-                % 16 = 0
-        ),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        common AS (
-          SELECT c.doc_a, c.doc_b, count(*) AS common
-          FROM capped c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2
-        )
-        SELECT doc_a, doc_b, common, sa.n_sh AS n_a, sb.n_sh AS n_b,
-               CAST(16 AS BIGINT) AS sample_den
-        FROM common
-        JOIN sizes sa ON doc_a = sa.doc_id
-        JOIN sizes sb ON doc_b = sb.doc_id
-        WHERE common * 20 >= (sa.n_sh + sb.n_sh - common) * 1
-        """,
-        "objects",
-    ),
-)
+@register("dd2b_ngram_jaccard_capped", _ngram_jaccard_sql(16))
 def dd2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dd2's LSH→verify pipeline, BUDGET-BOUNDED on a capped candidate
     stratum (verdict-r15 item 5, the dd12b pattern): candidate
@@ -2215,22 +2218,12 @@ def dd2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     third-decade leg runs den=64. The oracle twin pins den=16, which
     is what every oracle-gated tier runs."""
     docs = load_table(spark, sf_dir, "documents")
-    from aistore_spark.util import md5_bucket, pin
+    from aistore_spark.util import pin
 
     den = int(os.environ.get("SPARK_GRAFT_DD2B_DEN", "16"))
     sh = pin(dedup.shingles(docs, n=3))
     cand = dedup.lsh_candidate_pairs(docs, bands=8, n=3, shingles_df=sh)
-    capped = cand.filter(
-        md5_bucket(
-            F.concat_ws(
-                "|",
-                F.col("doc_a").cast("string"),
-                F.col("doc_b").cast("string"),
-            ),
-            den,
-        )
-        == 0
-    )
+    capped = _pair_stratum(cand, den)
     ver = dedup.jaccard_verify(
         docs, capped, n=3, threshold_num=1, threshold_den=20, shingles_df=sh,
         candidates_distinct=True,  # a filter over unique LSH pairs
@@ -5582,9 +5575,10 @@ def pipe1_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus curation — the pipeline these operators exist
     for: exact-dedup (keep canonical), quality gate (>= 20 tokens and
     stopword ratio >= 1%, integer cross-multiplied — no float
-    compare), then per-(lang, source) corpus accounting. One shuffle
-    for the dedup hash, one for the final rollup; every stage is the
-    already-declared operator (dd1 + tx1/tx2 composed)."""
+    compare), then per-(lang, source) corpus accounting. One spread
+    scan computes the digest and the token stats; the canonical doc is
+    the min(doc_id)-per-checksum window dd1's exact_dedup runs. One
+    shuffle for that window, one for the final rollup."""
     # ONE corpus scan (r17, guide §2.4): the exact-dedup verdict and
     # the quality columns both derive from the same documents row, but
     # composing dd1 as a separate frame + semi-join re-scanned the
@@ -5667,9 +5661,10 @@ def pipe2_export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards in deterministic doc order (dsort's two-pass
     range-partitioned cumsum, D6) → shard build manifest. The
     reference needs dsort + ETL + archive xactions chained by an
-    operator; here Catalyst fuses the dedup semi-join, the quality
-    filter, and the packing into one pipeline with two shuffles
-    (dedup hash, range exchange)."""
+    operator; here one spread scan feeds the canonical-doc window
+    (min doc_id per checksum), the quality filter, and the packing,
+    with two shuffles (the window's checksum exchange, the range
+    exchange)."""
     # ONE corpus scan (r17, guide §2.4) — same fusion as pipe1: digest
     # + token stats from a single spread scan, canonical = the
     # min(doc_id)-per-checksum window exact_dedup runs, quality filter
@@ -6413,6 +6408,163 @@ def _ivfpq_refine_sql(
     """
 
 
+def _sqrt_cell_ivfpq_sql(iters: int, nprobe_sql: str) -> str:
+    """Oracle of the √N-cell refine tiers (ann9d, ann9e) over the
+    ``_CLUSTERED_PRELUDE`` corpus: corrected-isqrt cell count
+    ``k``, stride seeding, *iters* assign/floor-div-mean k-means passes,
+    nprobe = *nprobe_sql* (an expression over ``k``), PQ encode via the
+    exact |a|²+|b|²−2a·b identity, the integer shortlist rule, then
+    exact integer-MIPS rerank."""
+    passes = []
+    prev = "c0"
+    for i in range(1, iters + 1):
+        passes.append(f"""
+    asg{i} AS MATERIALIZED (
+      SELECT vec_id, centroid_id FROM (
+        SELECT v.vec_id, c.centroid_id,
+               row_number() OVER (PARTITION BY v.vec_id
+                                  ORDER BY list_dot_product(v.vd, c.cvec)
+                                           DESC, c.centroid_id) AS rn
+        FROM qzd v, {prev} c) WHERE rn = 1
+    ),
+    kc{i} AS MATERIALIZED (
+      SELECT centroid_id,
+             list(CAST(mean_q AS DOUBLE) ORDER BY dim) AS cvec
+      FROM (
+        SELECT a.centroid_id, CAST(j AS BIGINT) AS dim,
+               CAST(sum(v.vq[CAST(j AS INT)]) // count(*) AS BIGINT)
+                 AS mean_q
+        FROM asg{i} a JOIN qz v USING (vec_id), range(1, 65) t(j)
+        GROUP BY 1, 2)
+      GROUP BY 1
+    ),""")
+        prev = f"kc{i}"
+    kmeans = "".join(passes)
+    return f"""
+    WITH {_CLUSTERED_PRELUDE}
+    qz AS MATERIALIZED (
+      SELECT vec_id,
+             list_transform(embedding, x ->
+               CAST(round(CAST(x AS DOUBLE) * 10000, 0) AS BIGINT)) AS vq
+      FROM ccorpus
+    ),
+    qzd AS MATERIALIZED (
+      SELECT vec_id, list_transform(vq, x -> CAST(x AS DOUBLE)) AS vd
+      FROM qz
+    ),
+    params AS (
+      SELECT n,
+             greatest(16, s + CASE WHEN (s + 1) * (s + 1) <= n THEN 1
+                                   WHEN s * s > n THEN -1 ELSE 0 END) AS k
+      FROM (SELECT n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s
+            FROM (SELECT count(*) AS n FROM qz))
+    ),
+    np AS (SELECT {nprobe_sql} AS np FROM params),
+    strd AS (SELECT greatest(1, n // k) AS stride FROM params),
+    c0 AS MATERIALIZED (
+      SELECT vec_id AS centroid_id, vd AS cvec FROM qzd
+      WHERE vec_id % (SELECT stride FROM strd) = 0
+    ),{kmeans}
+    subs AS MATERIALIZED (
+      SELECT vec_id, CAST(s.m AS BIGINT) AS m,
+             array_slice(vd, s.m * 8 + 1, s.m * 8 + 8) AS sv,
+             list_dot_product(array_slice(vd, s.m * 8 + 1, s.m * 8 + 8),
+                              array_slice(vd, s.m * 8 + 1, s.m * 8 + 8))
+               AS s2
+      FROM qzd, range(0, 8) s(m)
+    ),
+    cw AS MATERIALIZED (
+      SELECT vec_id AS code, m, sv AS cw_sv, s2 AS c2
+      FROM subs WHERE vec_id < 64
+    ),
+    codes AS MATERIALIZED (
+      SELECT vec_id, m, code FROM (
+        SELECT v.vec_id, v.m, c.code,
+               row_number() OVER (
+                 PARTITION BY v.vec_id, v.m
+                 ORDER BY v.s2 + c.c2
+                          - 2 * list_dot_product(v.sv, c.cw_sv), c.code)
+                 AS rn
+        FROM subs v JOIN cw c ON c.m = v.m) WHERE rn = 1
+    ),
+    cscored AS (
+      SELECT v.vec_id, c.centroid_id,
+             list_dot_product(v.vd, c.cvec) AS cdot
+      FROM qzd v, {prev} c
+    ),
+    vassign AS MATERIALIZED (
+      SELECT vec_id, centroid_id FROM (
+        SELECT vec_id, centroid_id,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY cdot DESC, centroid_id) AS rn
+        FROM cscored) WHERE rn = 1
+    ),
+    qprobe AS MATERIALIZED (
+      SELECT vec_id AS query_id, centroid_id FROM (
+        SELECT vec_id, centroid_id,
+               row_number() OVER (PARTITION BY vec_id
+                                  ORDER BY cdot DESC, centroid_id) AS rn
+        FROM cscored WHERE vec_id % 100 = 0)
+      WHERE rn <= (SELECT np FROM np)
+    ),
+    tbl AS MATERIALIZED (
+      SELECT v.vec_id AS query_id, v.m, c.code,
+             CAST(v.s2 + c.c2 - 2 * list_dot_product(v.sv, c.cw_sv)
+               AS BIGINT) AS d
+      FROM subs v JOIN cw c ON c.m = v.m
+      WHERE v.vec_id % 100 = 0
+    ),
+    slsz AS (
+      SELECT greatest(40,
+               ((SELECT np FROM np) * (SELECT n FROM params) + 5 * kn - 1)
+               // (5 * kn)) AS sl
+      FROM (SELECT count(*) AS kn FROM {prev})
+    ),
+    ncodes AS MATERIALIZED (
+      SELECT vec_id, list(code ORDER BY m) AS cl FROM codes GROUP BY vec_id
+    ),
+    qlut AS MATERIALIZED (
+      SELECT query_id, list(d ORDER BY m, code) AS lut
+      FROM tbl GROUP BY query_id
+    ),
+    -- per-pair ADC as a streaming LUT projection: a join-and-GROUP-BY
+    -- form makes one hash-agg group PER CANDIDATE PAIR over the 8x
+    -- m-expanded probe join, and at the recall-held tier (probed mass
+    -- linear by design) that aggregate spilled >55 GiB of temp at sf10
+    -- under both a 40 GB and an 80 GB DuckDB memory pin.
+    -- lut[m*64 + code + 1] indexes the same BIGINT d values the join
+    -- matched, so the integer ADC sum is bit-identical.
+    adc AS (
+      SELECT p.query_id, a.vec_id AS neighbor_id,
+             CAST(list_sum(list_transform(range(0, 8), m ->
+               l.lut[m * 64 + k.cl[m + 1] + 1])) AS BIGINT) AS adc
+      FROM qprobe p
+      JOIN vassign a ON a.centroid_id = p.centroid_id
+                    AND a.vec_id <> p.query_id
+      JOIN ncodes k ON k.vec_id = a.vec_id
+      JOIN qlut l ON l.query_id = p.query_id
+    ),
+    sl AS (
+      SELECT query_id, neighbor_id FROM adc
+      QUALIFY row_number() OVER (PARTITION BY query_id
+                                 ORDER BY adc, neighbor_id)
+              <= (SELECT sl FROM slsz)
+    ),
+    dots AS (
+      SELECT s.query_id, s.neighbor_id,
+             CAST(list_dot_product(q.vd, n.vd) AS BIGINT) AS dot
+      FROM sl s
+      JOIN qzd q ON q.vec_id = s.query_id
+      JOIN qzd n ON n.vec_id = s.neighbor_id
+    )
+    SELECT query_id,
+           CAST(row_number() OVER w AS BIGINT) AS rank, neighbor_id, dot
+    FROM dots
+    WINDOW w AS (PARTITION BY query_id ORDER BY dot DESC, neighbor_id)
+    QUALIFY row_number() OVER w <= 10
+"""
+
+
 @register("ann9b_ivfpq_refined", _ivfpq_refine_sql(12, 8, 64, 100))
 def ann9b_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ QUALITY tier (verdict-r6 item 3): the FAISS
@@ -6562,139 +6714,11 @@ def ann9c_ivfpq_refined_clustered(
 #: fixed-16-cell tier's 25–75 %.
 _ANN9D_NPROBE = 20
 
-_ANN9D_SQL = f"""
-    WITH {_CLUSTERED_PRELUDE}
-    qz AS MATERIALIZED (
-      SELECT vec_id,
-             list_transform(embedding, x ->
-               CAST(round(CAST(x AS DOUBLE) * 10000, 0) AS BIGINT)) AS vq
-      FROM ccorpus
-    ),
-    qzd AS MATERIALIZED (
-      SELECT vec_id, list_transform(vq, x -> CAST(x AS DOUBLE)) AS vd
-      FROM qz
-    ),
-    params AS (
-      SELECT n,
-             greatest(16, s + CASE WHEN (s + 1) * (s + 1) <= n THEN 1
-                                   WHEN s * s > n THEN -1 ELSE 0 END) AS k
-      FROM (SELECT n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s
-            FROM (SELECT count(*) AS n FROM qz))
-    ),
-    strd AS (SELECT greatest(1, n // k) AS stride FROM params),
-    c0 AS MATERIALIZED (
-      SELECT vec_id AS centroid_id, vd AS cvec FROM qzd
-      WHERE vec_id % (SELECT stride FROM strd) = 0
-    ),
-    sc1 AS (
-      SELECT v.vec_id, c.centroid_id,
-             list_dot_product(v.vd, c.cvec) AS cdot
-      FROM qzd v, c0 c
-    ),
-    asg1 AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT vec_id, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cdot DESC, centroid_id) AS rn
-        FROM sc1) WHERE rn = 1
-    ),
-    kc AS MATERIALIZED (
-      SELECT centroid_id,
-             list(CAST(mean_q AS DOUBLE) ORDER BY dim) AS cvec
-      FROM (
-        SELECT a.centroid_id, CAST(j AS BIGINT) AS dim,
-               CAST(sum(v.vq[CAST(j AS INT)]) // count(*) AS BIGINT)
-                 AS mean_q
-        FROM asg1 a JOIN qz v USING (vec_id), range(1, 65) t(j)
-        GROUP BY 1, 2)
-      GROUP BY 1
-    ),
-    subs AS MATERIALIZED (
-      SELECT vec_id, CAST(s.m AS BIGINT) AS m,
-             array_slice(vd, s.m * 8 + 1, s.m * 8 + 8) AS sv,
-             list_dot_product(array_slice(vd, s.m * 8 + 1, s.m * 8 + 8),
-                              array_slice(vd, s.m * 8 + 1, s.m * 8 + 8))
-               AS s2
-      FROM qzd, range(0, 8) s(m)
-    ),
-    cw AS MATERIALIZED (
-      SELECT vec_id AS code, m, sv AS cw_sv, s2 AS c2
-      FROM subs WHERE vec_id < 64
-    ),
-    codes AS MATERIALIZED (
-      SELECT vec_id, m, code FROM (
-        SELECT v.vec_id, v.m, c.code,
-               row_number() OVER (
-                 PARTITION BY v.vec_id, v.m
-                 ORDER BY v.s2 + c.c2
-                          - 2 * list_dot_product(v.sv, c.cw_sv), c.code)
-                 AS rn
-        FROM subs v JOIN cw c ON c.m = v.m) WHERE rn = 1
-    ),
-    cscored AS (
-      SELECT v.vec_id, c.centroid_id,
-             list_dot_product(v.vd, c.cvec) AS cdot
-      FROM qzd v, kc c
-    ),
-    vassign AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT vec_id, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cdot DESC, centroid_id) AS rn
-        FROM cscored) WHERE rn = 1
-    ),
-    qprobe AS MATERIALIZED (
-      SELECT vec_id AS query_id, centroid_id FROM (
-        SELECT vec_id, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cdot DESC, centroid_id) AS rn
-        FROM cscored WHERE vec_id % 100 = 0) WHERE rn <= {_ANN9D_NPROBE}
-    ),
-    tbl AS MATERIALIZED (
-      SELECT v.vec_id AS query_id, v.m, c.code,
-             CAST(v.s2 + c.c2 - 2 * list_dot_product(v.sv, c.cw_sv)
-               AS BIGINT) AS d
-      FROM subs v JOIN cw c ON c.m = v.m
-      WHERE v.vec_id % 100 = 0
-    ),
-    slsz AS (
-      SELECT greatest(40,
-               ({_ANN9D_NPROBE} * (SELECT n FROM params) + 5 * kn - 1)
-               // (5 * kn)) AS sl
-      FROM (SELECT count(*) AS kn FROM kc)
-    ),
-    adc AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             CAST(sum(t.d) AS BIGINT) AS adc
-      FROM qprobe p
-      JOIN vassign a ON a.centroid_id = p.centroid_id
-                    AND a.vec_id <> p.query_id
-      JOIN codes k ON k.vec_id = a.vec_id
-      JOIN tbl t ON t.query_id = p.query_id AND t.m = k.m AND t.code = k.code
-      GROUP BY 1, 2
-    ),
-    sl AS (
-      SELECT query_id, neighbor_id FROM adc
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adc, neighbor_id)
-              <= (SELECT sl FROM slsz)
-    ),
-    dots AS (
-      SELECT s.query_id, s.neighbor_id,
-             CAST(list_dot_product(q.vd, n.vd) AS BIGINT) AS dot
-      FROM sl s
-      JOIN qzd q ON q.vec_id = s.query_id
-      JOIN qzd n ON n.vec_id = s.neighbor_id
-    )
-    SELECT query_id,
-           CAST(row_number() OVER w AS BIGINT) AS rank, neighbor_id, dot
-    FROM dots
-    WINDOW w AS (PARTITION BY query_id ORDER BY dot DESC, neighbor_id)
-    QUALIFY row_number() OVER w <= 10
-"""
 
-
-@register("ann9d_ivfpq_sqrt_cells", _ANN9D_SQL)
+@register(
+    "ann9d_ivfpq_sqrt_cells",
+    _sqrt_cell_ivfpq_sql(1, str(_ANN9D_NPROBE)),
+)
 def ann9d_ivfpq_sqrt_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ refine tier with the √N COARSE-CELL SIZING RULE
     (verdict-r10 #2): cells = simsearch.n_coarse_cells(N) = max(16,
@@ -6714,214 +6738,13 @@ def ann9d_ivfpq_sqrt_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     index build is per-pass one √N-row broadcast + one combiner row
     per vector; the read path broadcasts probes and the ADC table; the
     corpus never shuffles (operators/simsearch.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus, _ = _clustered_corpus(emb)
-    # ONE job materializes the pinned corpus AND yields n (r17,
-    # verdict-r16 item 4 — the build+read tier ran ~11 sequential
-    # driver jobs): the oracle's n is count(ccorpus), which this
-    # count reads directly (the previous emb.count() matched it only
-    # because the clustered join preserves every row). cents is a
-    # LAZY checkpoint — the refine's centroid count materializes it.
-    n = corpus.count()
-    k_cells = simsearch.n_coarse_cells(n)
-    stride = max(1, n // k_cells)
-    seeds = corpus.filter(F.col("vec_id") % stride == 0)
-    cents = simsearch.kmeans_centroid_frame(
-        simsearch.kmeans_train(corpus, seeds, iters=1)
-    ).localCheckpoint(eager=False)
-    codebook = corpus.filter(F.col("vec_id") < 64)
-    queries = corpus.filter(F.col("vec_id") % 100 == 0)
-    return simsearch.ivfpq_refine_topk(
-        corpus, cents, codebook, queries,
-        k=10, nprobe=_ANN9D_NPROBE, m=8, dim=64, shortlist=None,
-        n_corpus=n,
-    )
+    return _sqrt_cell_ivfpq(spark, sf_dir, 1, lambda _cells: _ANN9D_NPROBE)
 
 
-_ANN9E_SQL = f"""
-    WITH {_CLUSTERED_PRELUDE}
-    qz AS MATERIALIZED (
-      SELECT vec_id,
-             list_transform(embedding, x ->
-               CAST(round(CAST(x AS DOUBLE) * 10000, 0) AS BIGINT)) AS vq
-      FROM ccorpus
-    ),
-    qzd AS MATERIALIZED (
-      SELECT vec_id, list_transform(vq, x -> CAST(x AS DOUBLE)) AS vd
-      FROM qz
-    ),
-    params AS (
-      SELECT n,
-             greatest(16, s + CASE WHEN (s + 1) * (s + 1) <= n THEN 1
-                                   WHEN s * s > n THEN -1 ELSE 0 END) AS k
-      FROM (SELECT n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s
-            FROM (SELECT count(*) AS n FROM qz))
-    ),
-    np AS (SELECT greatest(20, (9 * k + 199) // 200) AS np FROM params),
-    strd AS (SELECT greatest(1, n // k) AS stride FROM params),
-    c0 AS MATERIALIZED (
-      SELECT vec_id AS centroid_id, vd AS cvec FROM qzd
-      WHERE vec_id % (SELECT stride FROM strd) = 0
-    ),
-    asg1 AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT v.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY v.vec_id
-                                  ORDER BY list_dot_product(v.vd, c.cvec)
-                                           DESC, c.centroid_id) AS rn
-        FROM qzd v, c0 c) WHERE rn = 1
-    ),
-    kc1 AS MATERIALIZED (
-      SELECT centroid_id,
-             list(CAST(mean_q AS DOUBLE) ORDER BY dim) AS cvec
-      FROM (
-        SELECT a.centroid_id, CAST(j AS BIGINT) AS dim,
-               CAST(sum(v.vq[CAST(j AS INT)]) // count(*) AS BIGINT)
-                 AS mean_q
-        FROM asg1 a JOIN qz v USING (vec_id), range(1, 65) t(j)
-        GROUP BY 1, 2)
-      GROUP BY 1
-    ),
-    asg2 AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT v.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY v.vec_id
-                                  ORDER BY list_dot_product(v.vd, c.cvec)
-                                           DESC, c.centroid_id) AS rn
-        FROM qzd v, kc1 c) WHERE rn = 1
-    ),
-    kc2 AS MATERIALIZED (
-      SELECT centroid_id,
-             list(CAST(mean_q AS DOUBLE) ORDER BY dim) AS cvec
-      FROM (
-        SELECT a.centroid_id, CAST(j AS BIGINT) AS dim,
-               CAST(sum(v.vq[CAST(j AS INT)]) // count(*) AS BIGINT)
-                 AS mean_q
-        FROM asg2 a JOIN qz v USING (vec_id), range(1, 65) t(j)
-        GROUP BY 1, 2)
-      GROUP BY 1
-    ),
-    asg3 AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT v.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY v.vec_id
-                                  ORDER BY list_dot_product(v.vd, c.cvec)
-                                           DESC, c.centroid_id) AS rn
-        FROM qzd v, kc2 c) WHERE rn = 1
-    ),
-    kc AS MATERIALIZED (
-      SELECT centroid_id,
-             list(CAST(mean_q AS DOUBLE) ORDER BY dim) AS cvec
-      FROM (
-        SELECT a.centroid_id, CAST(j AS BIGINT) AS dim,
-               CAST(sum(v.vq[CAST(j AS INT)]) // count(*) AS BIGINT)
-                 AS mean_q
-        FROM asg3 a JOIN qz v USING (vec_id), range(1, 65) t(j)
-        GROUP BY 1, 2)
-      GROUP BY 1
-    ),
-    subs AS MATERIALIZED (
-      SELECT vec_id, CAST(s.m AS BIGINT) AS m,
-             array_slice(vd, s.m * 8 + 1, s.m * 8 + 8) AS sv,
-             list_dot_product(array_slice(vd, s.m * 8 + 1, s.m * 8 + 8),
-                              array_slice(vd, s.m * 8 + 1, s.m * 8 + 8))
-               AS s2
-      FROM qzd, range(0, 8) s(m)
-    ),
-    cw AS MATERIALIZED (
-      SELECT vec_id AS code, m, sv AS cw_sv, s2 AS c2
-      FROM subs WHERE vec_id < 64
-    ),
-    codes AS MATERIALIZED (
-      SELECT vec_id, m, code FROM (
-        SELECT v.vec_id, v.m, c.code,
-               row_number() OVER (
-                 PARTITION BY v.vec_id, v.m
-                 ORDER BY v.s2 + c.c2
-                          - 2 * list_dot_product(v.sv, c.cw_sv), c.code)
-                 AS rn
-        FROM subs v JOIN cw c ON c.m = v.m) WHERE rn = 1
-    ),
-    cscored AS (
-      SELECT v.vec_id, c.centroid_id,
-             list_dot_product(v.vd, c.cvec) AS cdot
-      FROM qzd v, kc c
-    ),
-    vassign AS MATERIALIZED (
-      SELECT vec_id, centroid_id FROM (
-        SELECT vec_id, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cdot DESC, centroid_id) AS rn
-        FROM cscored) WHERE rn = 1
-    ),
-    qprobe AS MATERIALIZED (
-      SELECT vec_id AS query_id, centroid_id FROM (
-        SELECT vec_id, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cdot DESC, centroid_id) AS rn
-        FROM cscored WHERE vec_id % 100 = 0)
-      WHERE rn <= (SELECT np FROM np)
-    ),
-    tbl AS MATERIALIZED (
-      SELECT v.vec_id AS query_id, v.m, c.code,
-             CAST(v.s2 + c.c2 - 2 * list_dot_product(v.sv, c.cw_sv)
-               AS BIGINT) AS d
-      FROM subs v JOIN cw c ON c.m = v.m
-      WHERE v.vec_id % 100 = 0
-    ),
-    slsz AS (
-      SELECT greatest(40,
-               ((SELECT np FROM np) * (SELECT n FROM params) + 5 * kn - 1)
-               // (5 * kn)) AS sl
-      FROM (SELECT count(*) AS kn FROM kc)
-    ),
-    ncodes AS MATERIALIZED (
-      SELECT vec_id, list(code ORDER BY m) AS cl FROM codes GROUP BY vec_id
-    ),
-    qlut AS MATERIALIZED (
-      SELECT query_id, list(d ORDER BY m, code) AS lut
-      FROM tbl GROUP BY query_id
-    ),
-    -- per-pair ADC as a streaming LUT projection (r16): the join-and-
-    -- GROUP-BY form creates one hash-agg group PER CANDIDATE PAIR over
-    -- the 8x m-expanded probe join; at the recall-held tier on this
-    -- mode-saturated fixture the probed MASS is linear by design, and
-    -- that aggregate spilled >55 GiB of temp at sf10 under BOTH a
-    -- 40 GB and an 80 GB DuckDB memory pin. lut[m*64 + code + 1]
-    -- indexes the same BIGINT d values the join matched, so the
-    -- integer ADC sum is bit-identical.
-    adc AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             CAST(list_sum(list_transform(range(0, 8), m ->
-               l.lut[m * 64 + k.cl[m + 1] + 1])) AS BIGINT) AS adc
-      FROM qprobe p
-      JOIN vassign a ON a.centroid_id = p.centroid_id
-                    AND a.vec_id <> p.query_id
-      JOIN ncodes k ON k.vec_id = a.vec_id
-      JOIN qlut l ON l.query_id = p.query_id
-    ),
-    sl AS (
-      SELECT query_id, neighbor_id FROM adc
-      QUALIFY row_number() OVER (PARTITION BY query_id
-                                 ORDER BY adc, neighbor_id)
-              <= (SELECT sl FROM slsz)
-    ),
-    dots AS (
-      SELECT s.query_id, s.neighbor_id,
-             CAST(list_dot_product(q.vd, n.vd) AS BIGINT) AS dot
-      FROM sl s
-      JOIN qzd q ON q.vec_id = s.query_id
-      JOIN qzd n ON n.vec_id = s.neighbor_id
-    )
-    SELECT query_id,
-           CAST(row_number() OVER w AS BIGINT) AS rank, neighbor_id, dot
-    FROM dots
-    WINDOW w AS (PARTITION BY query_id ORDER BY dot DESC, neighbor_id)
-    QUALIFY row_number() OVER w <= 10
-"""
-
-
-@register("ann9e_ivfpq_recall_held", _ANN9E_SQL)
+@register(
+    "ann9e_ivfpq_recall_held",
+    _sqrt_cell_ivfpq_sql(3, "greatest(20, (9 * k + 199) // 200)"),
+)
 def ann9e_ivfpq_recall_held(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ refine at the RECALL-HELD tier (verdict-r14 item 3): the
     configuration a recall-SLA user actually runs at scale — √N cells
@@ -6943,23 +6766,36 @@ def ann9e_ivfpq_recall_held(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles); probed mass is (9/200)·N — linear, the explicit price
     of constant recall on data whose mode count does not grow with
     scale (the quality-vs-economy trade a recall SLA buys)."""
+    return _sqrt_cell_ivfpq(spark, sf_dir, 3, simsearch.recall_held_nprobe)
+
+
+def _sqrt_cell_ivfpq(
+    spark: SparkSession,
+    sf_dir: str,
+    iters: int,
+    nprobe_for: Callable[[int], int],
+) -> DataFrame:
+    """Spark twin of :func:`_sqrt_cell_ivfpq_sql`: √N cells
+    (simsearch.n_coarse_cells) seeded every N//cells ids, *iters*
+    kmeans_train passes, then the sized-shortlist refine read path over
+    the clustered corpus, probing ``nprobe_for(cells)`` cells."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus, _ = _clustered_corpus(emb)
-    # same job fusion as ann9d (r17): corpus count doubles as the pin
-    # materialization; cents checkpoint is lazy.
+    # ONE job materializes the pinned corpus AND yields n: the oracle's
+    # n is count(ccorpus), which this count reads directly. cents is a
+    # LAZY checkpoint — the refine's centroid collect materializes it.
     n = corpus.count()
     k_cells = simsearch.n_coarse_cells(n)
     stride = max(1, n // k_cells)
     seeds = corpus.filter(F.col("vec_id") % stride == 0)
     cents = simsearch.kmeans_centroid_frame(
-        simsearch.kmeans_train(corpus, seeds, iters=3)
+        simsearch.kmeans_train(corpus, seeds, iters=iters)
     ).localCheckpoint(eager=False)
     codebook = corpus.filter(F.col("vec_id") < 64)
     queries = corpus.filter(F.col("vec_id") % 100 == 0)
     return simsearch.ivfpq_refine_topk(
         corpus, cents, codebook, queries,
-        k=10, nprobe=simsearch.recall_held_nprobe(k_cells),
-        m=8, dim=64, shortlist=None,
+        k=10, nprobe=nprobe_for(k_cells), m=8, dim=64, shortlist=None,
         n_corpus=n,
     )
 
@@ -8218,18 +8054,13 @@ def tx13_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dd12_minhash_estimate",
-    oracles.with_catalogs(
+def _minhash_estimate_sql(sample_den: int | None) -> str:
+    """dd12's oracle; with *sample_den*, dd12b's: the calibration rows
+    cover only the capped candidate stratum and record the den."""
+    den = _sample_den_sql(sample_den)
+    return oracles.with_catalogs(
         f"""
-        WITH wp AS ({_WP_SQL}),
-        sh AS ({_SHINGLES_SQL}),
-        mh AS (
-          SELECT doc_id, CAST(r AS INT) AS band,
-                 min(md5(CAST(r AS VARCHAR) || '|' || shingle)) AS minhash
-          FROM sh, range(0, 8) t(r)
-          GROUP BY doc_id, r
-        ),
+        {_MINHASH_CTES},
         cand AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                  CAST(count(*) AS BIGINT) AS match_slots
@@ -8238,13 +8069,14 @@ def tx13_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND a.doc_id < b.doc_id
           GROUP BY 1, 2
         ),
+        {_capped_sql(sample_den)},
         sizes AS (
           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
           FROM sh GROUP BY 1
         ),
         common AS (
           SELECT c.doc_a, c.doc_b, CAST(count(*) AS BIGINT) AS inter
-          FROM cand c
+          FROM capped c
           JOIN sh a ON a.doc_id = c.doc_a
           JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
           GROUP BY 1, 2
@@ -8255,40 +8087,41 @@ def tx13_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(CASE WHEN c.match_slots *
                               (sa.n_sh + sb.n_sh - COALESCE(m.inter, 0))
                               >= 8 * COALESCE(m.inter, 0)
-                         THEN 1 ELSE 0 END AS BIGINT) AS est_ge_true
-        FROM cand c
+                         THEN 1 ELSE 0 END AS BIGINT) AS est_ge_true{den}
+        FROM capped c
         JOIN sizes sa ON sa.doc_id = c.doc_a
         JOIN sizes sb ON sb.doc_id = c.doc_b
         LEFT JOIN common m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
         """,
         "objects",
-    ),
-)
-def dd12_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DD12: MinHash ESTIMATOR calibration — for every LSH candidate
-    pair, the signature-level similarity estimate (matching minhash
-    slots of 8) next to the TRUE shingle Jaccard (exact inter/union
-    integers) and the cross-multiplied over/under flag
-    (match_slots x union >= 8 x inter). This is the measurement a
-    pipeline owner uses to pick band/row counts: the estimator's bias
-    on THIS corpus, not the textbook formula. Shares one pinned
-    shingle frame between the LSH and verify stages (the dd2/dd7
-    sharing discipline). 100 TB shape: identical to dd2 — (band,
-    minhash)-keyed candidates, candidate-routed exact verify, nothing
-    corpus-quadratic."""
+    )
+
+
+def _minhash_estimate(
+    spark: SparkSession, sf_dir: str, sample_den: int | None
+) -> DataFrame:
+    """dd12's body; with *sample_den*, dd12b's (see their docstrings)."""
     docs = load_table(spark, sf_dir, "documents")
     from aistore_spark.util import pin
 
     sh = pin(dedup.shingles(docs, n=3))
-    # pinned: cand feeds the calibration join AND the verify stage —
-    # without the pin the LSH candidate subtree executes once per
-    # consumer (r16, guide §2.4)
-    cand = pin(dedup.lsh_candidate_pairs(docs, bands=8, n=3, shingles_df=sh))
+    # pinned: the (capped) candidates feed the calibration join AND the
+    # verify stage — without the pin the LSH candidate subtree executes
+    # once per consumer
+    cand = pin(
+        _pair_stratum(
+            dedup.lsh_candidate_pairs(docs, bands=8, n=3, shingles_df=sh),
+            sample_den,
+        )
+    )
     ver = dedup.jaccard_verify(
         docs, cand, n=3, threshold_num=0, threshold_den=1, shingles_df=sh,
-        candidates_distinct=True,  # lsh_candidate_pairs output is unique
+        candidates_distinct=True,  # a filter over unique LSH pairs
     )
-    out = (
+    den = [] if sample_den is None else [
+        F.lit(sample_den).cast("bigint").alias("sample_den")
+    ]
+    return (
         cand.select("doc_a", "doc_b", F.col("shared_bands").alias("match_slots"))
         .join(ver.select("doc_a", "doc_b", "common", "n_a", "n_b"), ["doc_a", "doc_b"])
         .select(
@@ -8308,64 +8141,28 @@ def dd12_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("bigint")
             .alias("est_ge_true"),
+            *den,
         )
     )
-    return out
 
 
-@register(
-    "dd12b_minhash_estimate_capped",
-    oracles.with_catalogs(
-        f"""
-        WITH wp AS ({_WP_SQL}),
-        sh AS ({_SHINGLES_SQL}),
-        mh AS (
-          SELECT doc_id, CAST(r AS INT) AS band,
-                 min(md5(CAST(r AS VARCHAR) || '|' || shingle)) AS minhash
-          FROM sh, range(0, 8) t(r)
-          GROUP BY doc_id, r
-        ),
-        cand AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 CAST(count(*) AS BIGINT) AS match_slots
-          FROM mh a
-          JOIN mh b ON a.band = b.band AND a.minhash = b.minhash
-                    AND a.doc_id < b.doc_id
-          GROUP BY 1, 2
-        ),
-        capped AS (
-          SELECT * FROM cand
-          WHERE ('0x' || substr(md5(CAST(doc_a AS VARCHAR) || '|'
-                                    || CAST(doc_b AS VARCHAR)), 1, 8))::BIGINT
-                % 16 = 0
-        ),
-        sizes AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh
-          FROM sh GROUP BY 1
-        ),
-        common AS (
-          SELECT c.doc_a, c.doc_b, CAST(count(*) AS BIGINT) AS inter
-          FROM capped c
-          JOIN sh a ON a.doc_id = c.doc_a
-          JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-          GROUP BY 1, 2
-        )
-        SELECT c.doc_a, c.doc_b, c.match_slots,
-               COALESCE(m.inter, 0) AS inter,
-               sa.n_sh + sb.n_sh - COALESCE(m.inter, 0) AS union_sh,
-               CAST(CASE WHEN c.match_slots *
-                              (sa.n_sh + sb.n_sh - COALESCE(m.inter, 0))
-                              >= 8 * COALESCE(m.inter, 0)
-                         THEN 1 ELSE 0 END AS BIGINT) AS est_ge_true,
-               CAST(16 AS BIGINT) AS sample_den
-        FROM capped c
-        JOIN sizes sa ON sa.doc_id = c.doc_a
-        JOIN sizes sb ON sb.doc_id = c.doc_b
-        LEFT JOIN common m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
-        """,
-        "objects",
-    ),
-)
+@register("dd12_minhash_estimate", _minhash_estimate_sql(None))
+def dd12_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DD12: MinHash ESTIMATOR calibration — for every LSH candidate
+    pair, the signature-level similarity estimate (matching minhash
+    slots of 8) next to the TRUE shingle Jaccard (exact inter/union
+    integers) and the cross-multiplied over/under flag
+    (match_slots x union >= 8 x inter). This is the measurement a
+    pipeline owner uses to pick band/row counts: the estimator's bias
+    on THIS corpus, not the textbook formula. Shares one pinned
+    shingle frame between the LSH and verify stages (the dd2/dd7
+    sharing discipline). 100 TB shape: identical to dd2 — (band,
+    minhash)-keyed candidates, candidate-routed exact verify, nothing
+    corpus-quadratic."""
+    return _minhash_estimate(spark, sf_dir, None)
+
+
+@register("dd12b_minhash_estimate_capped", _minhash_estimate_sql(16))
 def dd12b_minhash_estimate_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -8382,58 +8179,7 @@ def dd12b_minhash_estimate_capped(
     md5-uniform 1/16 subsample estimates it with 4× the stderr at
     1/16 the cost. 100 TB: verify cost O(candidates/16), everything
     else identical to dd2/dd12's (band,minhash)-keyed shape."""
-    docs = load_table(spark, sf_dir, "documents")
-    from aistore_spark.util import md5_bucket, pin
-
-    sh = pin(dedup.shingles(docs, n=3))
-    cand = dedup.lsh_candidate_pairs(docs, bands=8, n=3, shingles_df=sh)
-    # pinned: the capped stratum feeds the calibration join AND the
-    # verify stage (r16, guide §2.4 — same seam as dd12)
-    capped = pin(
-        cand.filter(
-            md5_bucket(
-                F.concat_ws(
-                    "|",
-                    F.col("doc_a").cast("string"),
-                    F.col("doc_b").cast("string"),
-                ),
-                16,
-            )
-            == 0
-        )
-    )
-    ver = dedup.jaccard_verify(
-        docs, capped, n=3, threshold_num=0, threshold_den=1, shingles_df=sh,
-        candidates_distinct=True,  # a filter over unique LSH pairs
-    )
-    return (
-        capped.select(
-            "doc_a", "doc_b", F.col("shared_bands").alias("match_slots")
-        )
-        .join(
-            ver.select("doc_a", "doc_b", "common", "n_a", "n_b"),
-            ["doc_a", "doc_b"],
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("match_slots").cast("bigint").alias("match_slots"),
-            F.col("common").cast("bigint").alias("inter"),
-            (F.col("n_a") + F.col("n_b") - F.col("common"))
-            .cast("bigint")
-            .alias("union_sh"),
-            F.when(
-                F.col("match_slots")
-                * (F.col("n_a") + F.col("n_b") - F.col("common"))
-                >= 8 * F.col("common"),
-                1,
-            )
-            .otherwise(0)
-            .cast("bigint")
-            .alias("est_ge_true"),
-            F.lit(16).cast("bigint").alias("sample_den"),
-        )
-    )
+    return _minhash_estimate(spark, sf_dir, 16)
 
 
 @register(
@@ -9251,12 +8997,16 @@ def ev8_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EV8: ordered FUNNEL analysis — per user, the first
     view -> first click strictly after it -> first purchase strictly
     after that, and the deepest stage reached: the sequential-pattern
-    query of product analytics, expressed as three chained
-    conditional-min aggregations (each one user-keyed agg + join, no
-    per-event window, no ordering exchange). Stage timestamps are
-    exact micros (nullable when the funnel stops early). 100 TB
-    shape: every join/agg keys on user_id — one co-partitionable key
-    end to end."""
+    query of product analytics, as one events scan feeding one
+    user-keyed aggregate (no per-event window, no ordering exchange).
+    t_view is a conditional min; each later stage is the first of the
+    user's sorted click (purchase) times strictly after the previous
+    stage. Stage timestamps are exact micros (nullable when the funnel
+    stops early). Memory bound: the aggregate buffers every click and
+    purchase time of a user in one collect_list, so per-task state
+    grows with the largest single user's click + purchase count (a
+    bot user's events all land in one buffer); the shuffle moves one
+    (user, t) row per click/purchase event, keyed on user_id."""
     # ONE corpus scan + ONE user-keyed aggregate (r17, guide §2.4
     # duplicated subtrees): the chained agg+join form referenced the
     # events subtree 7 times unpinned (tv twice, tc twice, tp, users —

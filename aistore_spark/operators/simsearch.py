@@ -47,6 +47,23 @@ def int_dot(a: Column, b: Column) -> Column:
     )
 
 
+def _ranked(
+    scored: DataFrame, score: str, k: int, desc: bool = True
+) -> DataFrame:
+    """The read paths' top-k tail: per ``query_id`` the *k* best rows
+    by *score* (descending for dots, ascending for ADC distances), ties
+    to the lower ``neighbor_id``, numbered 1..k as ``rank``."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        order, F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", score)
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -73,14 +90,7 @@ def brute_force_topk(
             int_dot(F.col("qvec"), F.col("cvec")).alias("dot"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dot")
-    )
+    return _ranked(scored, "dot", k)
 
 
 def sign_lsh_bucket(vec_col: Column | str, n_bits: int = 8) -> Column:
@@ -175,14 +185,7 @@ def lsh_topk(
             int_dot(F.col("qvec"), F.col("cvec")).alias("dot"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dot")
-    )
+    return _ranked(scored, "dot", k)
 
 
 def block_pairs_above(
@@ -390,6 +393,43 @@ def _collect_cents(centroids_q: DataFrame) -> tuple:
     return ids, mat
 
 
+def _top_cells(vecs, ids, mat, nprobe: int):
+    """Exact top-*nprobe* max-inner-product cells for each row of
+    *vecs* against the id-sorted centroid matrix *mat*, scored in
+    :data:`_CENT_BLOCK`-wide blocks with a running merge, ties to the
+    LOWER id (stable lexsort on (-dot, id)). Returns ``(dots, ids)``,
+    each ``[n, min(nprobe, K)]``."""
+    import numpy as np
+
+    best_d = best_c = None
+    for s in range(0, len(ids), _CENT_BLOCK):
+        scores = vecs @ mat[s : s + _CENT_BLOCK].T
+        cids = np.broadcast_to(ids[s : s + _CENT_BLOCK], scores.shape)
+        if best_d is not None:
+            scores = np.concatenate([best_d, scores], axis=1)
+            cids = np.concatenate([best_c, cids], axis=1)
+        idx = np.lexsort((cids, -scores), axis=1)[:, :nprobe]
+        best_d = np.take_along_axis(scores, idx, axis=1)
+        best_c = np.take_along_axis(cids, idx, axis=1)
+    return best_d, best_c
+
+
+def _nearest_code(vj, book):
+    """Nearest codeword per row of the subvectors *vj* by exact integer
+    L2 (|a|²+|b|²−2a·b, every term exact in float64) against the
+    code-sorted *book*: ``(index into book, distance)``. numpy argmin
+    takes the FIRST minimum, so ties go to the lower code id."""
+    import numpy as np
+
+    d = (
+        (vj**2).sum(axis=1)[:, None]
+        + (book**2).sum(axis=1)[None, :]
+        - 2.0 * (vj @ book.T)
+    )
+    best = np.argmin(d, axis=1)
+    return best, d[np.arange(len(vj)), best]
+
+
 def _assign_topk(
     v: DataFrame, ids, mat, out_id: str, nprobe: int
 ) -> DataFrame:
@@ -416,19 +456,7 @@ def _assign_topk(
             if n == 0:
                 continue
             vecs = np.stack(pdf["vq"].to_numpy()).astype(np.float64)
-            best_d = best_c = None
-            for s in range(0, len(ids), _CENT_BLOCK):
-                scores = vecs @ mat[s : s + _CENT_BLOCK].T
-                cids = np.broadcast_to(
-                    ids[s : s + _CENT_BLOCK], scores.shape
-                )
-                if best_d is not None:
-                    scores = np.concatenate([best_d, scores], axis=1)
-                    cids = np.concatenate([best_c, cids], axis=1)
-                kk = min(nprobe, scores.shape[1])
-                idx = np.lexsort((cids, -scores), axis=1)[:, :kk]
-                best_d = np.take_along_axis(scores, idx, axis=1)
-                best_c = np.take_along_axis(cids, idx, axis=1)
+            best_d, best_c = _top_cells(vecs, ids, mat, nprobe)
             kk = best_d.shape[1]
             rep = np.repeat(np.arange(n), kk)
             yield pd.DataFrame(
@@ -529,13 +557,29 @@ def ivf_topk(
             int_dot(F.col("qq"), F.col("vq")).alias("dot"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
+    return _ranked(scored, "dot", k)
+
+
+def _cell_means(assigned: DataFrame) -> DataFrame:
+    """Per-cell floor-div integer means of the assigned quantized
+    vectors ``(centroid_id, vq)``, in the long form ``(centroid_id,
+    dim, mean_q, n_vecs)``: one partial/final agg keyed on (centroid,
+    dim)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dot")
+        assigned.select(
+            "centroid_id", F.posexplode(F.col("vq")).alias("dim0", "q")
+        )
+        .groupBy("centroid_id", (F.col("dim0") + 1).alias("dim"))
+        .agg(
+            F.expr("sum(q) div count(*)").alias("mean_q"),
+            F.count("*").alias("n_vecs"),
+        )
+        .select(
+            "centroid_id",
+            F.col("dim").cast("bigint").alias("dim"),
+            "mean_q",
+            "n_vecs",
+        )
     )
 
 
@@ -559,23 +603,7 @@ def kmeans_step(
     feeding the output back as the next centroid set.
     """
     cents = _collect_cents(centroids.select(id_col, quantized(vec_col)))
-    assigned = _cells(corpus, cents, "vec", 1, id_col, vec_col)
-    return (
-        assigned.select(
-            "centroid_id", F.posexplode(F.col("vq")).alias("dim0", "q")
-        )
-        .groupBy("centroid_id", (F.col("dim0") + 1).alias("dim"))
-        .agg(
-            F.expr("sum(q) div count(*)").alias("mean_q"),
-            F.count("*").alias("n_vecs"),
-        )
-        .select(
-            "centroid_id",
-            F.col("dim").cast("bigint").alias("dim"),
-            "mean_q",
-            "n_vecs",
-        )
-    )
+    return _cell_means(_cells(corpus, cents, "vec", 1, id_col, vec_col))
 
 
 def kmeans_train(
@@ -635,25 +663,7 @@ def kmeans_train(
     out = None
     n_iters = max(1, iters)
     for i in range(n_iters):
-        assigned = _assign_topk(v, ids, mat, "vec", 1).select(
-            "centroid_id", "vq"
-        )
-        out = (
-            assigned.select(
-                "centroid_id", F.posexplode(F.col("vq")).alias("dim0", "q")
-            )
-            .groupBy("centroid_id", (F.col("dim0") + 1).alias("dim"))
-            .agg(
-                F.expr("sum(q) div count(*)").alias("mean_q"),
-                F.count("*").alias("n_vecs"),
-            )
-            .select(
-                "centroid_id",
-                F.col("dim").cast("bigint").alias("dim"),
-                "mean_q",
-                "n_vecs",
-            )
-        )
+        out = _cell_means(_assign_topk(v, ids, mat, "vec", 1))
         if i < n_iters - 1:
             by_cent: dict[int, dict[int, int]] = {}
             for r in out.select("centroid_id", "dim", "mean_q").collect():
@@ -704,7 +714,6 @@ def pq_encode(
         )
     )
     csub = cmat.reshape(len(cids), m, sub)  # (k, m, sub)
-    c2 = (csub**2).sum(axis=2)  # (k, m)
     v = corpus.select(
         F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
     )
@@ -723,15 +732,8 @@ def pq_encode(
             code = np.empty((n, m), dtype=np.int64)
             dist = np.empty((n, m), dtype=np.int64)
             for j in range(m):
-                vj = vecs[:, j, :]
-                d = (
-                    (vj**2).sum(axis=1)[:, None]
-                    + c2[:, j][None, :]
-                    - 2.0 * (vj @ csub[:, j, :].T)
-                )
-                best = np.argmin(d, axis=1)
+                best, dist[:, j] = _nearest_code(vecs[:, j, :], csub[:, j, :])
                 code[:, j] = cids[best]
-                dist[:, j] = d[np.arange(n), best]
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(pdf["vec_id"].to_numpy(), m),
@@ -791,14 +793,7 @@ def pq_adc_topk(
     # old crossJoin(broadcast(query ids)) shipped Q×N candidate rows
     # through Arrow just so _adc_score could gather them row-wise.
     scored = _adc_topk_full_scan(codes, q_ids, cids, lut, m, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc")
-    )
+    return _ranked(scored, "adc", k, desc=False)
 
 
 def pq_encode_wide(
@@ -824,7 +819,6 @@ def pq_encode_wide(
         )
     )
     csub = cmat.reshape(len(cids), m, sub)
-    c2 = (csub**2).sum(axis=2)
     v = corpus.select(
         F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
     )
@@ -841,13 +835,8 @@ def pq_encode_wide(
             )
             code = np.empty((n, m), dtype=np.int64)
             for j in range(m):
-                vj = vecs[:, j, :]
-                d = (
-                    (vj**2).sum(axis=1)[:, None]
-                    + c2[:, j][None, :]
-                    - 2.0 * (vj @ csub[:, j, :].T)
-                )
-                code[:, j] = cids[np.argmin(d, axis=1)]
+                best, _ = _nearest_code(vecs[:, j, :], csub[:, j, :])
+                code[:, j] = cids[best]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -888,7 +877,6 @@ def _assign_encode_wide(
     ids, mat = cents
     cids, cmat = code
     csub = cmat.reshape(len(cids), m, sub)
-    c2 = (csub**2).sum(axis=2)
     v = corpus.select(
         F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
     )
@@ -899,30 +887,12 @@ def _assign_encode_wide(
             if n == 0:
                 continue
             flat = np.stack(pdf["vq"].to_numpy()).astype(np.float64)
-            # cell assignment: blocked max-dot, first max = lowest id
-            best_d = best_c = None
-            for s in range(0, len(ids), _CENT_BLOCK):
-                scores = flat @ mat[s : s + _CENT_BLOCK].T
-                blk_ids = np.broadcast_to(
-                    ids[s : s + _CENT_BLOCK], scores.shape
-                )
-                if best_d is not None:
-                    scores = np.concatenate([best_d, scores], axis=1)
-                    blk_ids = np.concatenate([best_c, blk_ids], axis=1)
-                idx = np.lexsort((blk_ids, -scores), axis=1)[:, :1]
-                best_d = np.take_along_axis(scores, idx, axis=1)
-                best_c = np.take_along_axis(blk_ids, idx, axis=1)
-            # PQ encode: per-subspace argmin L2
+            _, best_c = _top_cells(flat, ids, mat, 1)
             vecs = flat.reshape(n, m, sub)
             code = np.empty((n, m), dtype=np.int64)
             for j in range(m):
-                vj = vecs[:, j, :]
-                d = (
-                    (vj**2).sum(axis=1)[:, None]
-                    + c2[:, j][None, :]
-                    - 2.0 * (vj @ csub[:, j, :].T)
-                )
-                code[:, j] = cids[np.argmin(d, axis=1)]
+                best, _ = _nearest_code(vecs[:, j, :], csub[:, j, :])
+                code[:, j] = cids[best]
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -967,6 +937,19 @@ def _adc_lut(qmat, cmat, m: int, dim: int):
         + (csub**2).sum(axis=2).T[None, :, :]
         - 2.0 * np.einsum("qms,kms->qmk", qsub, csub)
     ).astype(np.int64)
+
+
+def _keep_best(acc, out: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Merge a batch's ``(query_id, neighbor_id, adc)`` rows into the
+    running per-query best *k* under the final window's total order
+    (adc asc, neighbor_id asc) — exact, so partial top-k never drops a
+    global winner."""
+    acc = out if acc is None else pd.concat([acc, out])
+    return (
+        acc.sort_values(["query_id", "adc", "neighbor_id"])
+        .groupby("query_id", sort=False)
+        .head(k)
+    )
 
 
 def _adc_score(
@@ -1023,12 +1006,7 @@ def _adc_score(
             if k_keep is None:
                 yield out
                 continue
-            acc = out if acc is None else pd.concat([acc, out])
-            acc = (
-                acc.sort_values(["query_id", "adc", "neighbor_id"])
-                .groupby("query_id", sort=False)
-                .head(k_keep)
-            )
+            acc = _keep_best(acc, out, k_keep)
         if k_keep is not None and acc is not None:
             yield acc
 
@@ -1099,12 +1077,7 @@ def _adc_topk_full_scan(
                 )
             out = pd.concat(frames)
             out = out[out["query_id"] != out["neighbor_id"]]
-            acc = out if acc is None else pd.concat([acc, out])
-            acc = (
-                acc.sort_values(["query_id", "adc", "neighbor_id"])
-                .groupby("query_id", sort=False)
-                .head(k)
-            )
+            acc = _keep_best(acc, out, k)
         if acc is not None:
             yield acc
 
@@ -1206,14 +1179,7 @@ def _ivfpq_adc(
         cands, q_ids, cids, lut, m,
         k_keep=k if k <= _ADC_PARTIAL_TOPK_MAX else None,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc")
-    )
+    return _ranked(scored, "adc", k, desc=False)
 
 
 def recall_held_nprobe(
@@ -1427,14 +1393,7 @@ def ivfpq_refine_topk(
             int_dot(F.col("qv"), F.col("nv")).alias("dot"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "dot")
-    )
+    return _ranked(scored, "dot", k)
 
 
 def semantic_cell_pairs(
@@ -1567,7 +1526,6 @@ def pq_train(
     def pass_partials(books) -> DataFrame:
         ids_list = [b[0] for b in books]
         mats = [b[1] for b in books]
-        c2s = [(mat**2).sum(axis=1) for mat in mats]
 
         def run(batches):
             sums = [np.zeros((len(ids_list[j]), sub), np.int64) for j in range(m)]
@@ -1585,12 +1543,7 @@ def pq_train(
                 )
                 for j in range(m):
                     vj = vecs[:, j, :]
-                    d = (
-                        (vj**2).sum(axis=1)[:, None]
-                        + c2s[j][None, :]
-                        - 2.0 * (vj @ mats[j].T)
-                    )
-                    best = np.argmin(d, axis=1)
+                    best, _ = _nearest_code(vj, mats[j])
                     np.add.at(sums[j], best, vj.astype(np.int64))
                     np.add.at(cnts[j], best, 1)
             if not seen:

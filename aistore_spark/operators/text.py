@@ -484,7 +484,9 @@ def bpe_learn(
     the K iterations is an explode+agg over the vocabulary plus a
     1-row collect (the argmax pair) — the driver holds K rows total.
     The merge rewrite is a narrow projection (two string replaces), so
-    the vocabulary never reshuffles during learning."""
+    the vocabulary never reshuffles during learning. The engine's BPE
+    entry points learn with :func:`bpe_learn_local`; this loop is its
+    parity reference (tests/test_bpe.py)."""
     wf = bpe_word_freq(documents, text_col).cache()
     cur = wf.withColumn(
         "form",
@@ -595,15 +597,12 @@ def bpe_merge_table(
     documents: DataFrame,
     n_merges: int = 8,
     text_col: str = "text",
-    method: str = "local",
 ) -> DataFrame:
     """The learned merge table as a DataFrame — the BPE artifact a
     training pipeline persists (merge_idx, lhs, rhs, merged, freq).
-    ``method='local'`` (default, production shape) runs the merges
-    driver-side on the collected vocabulary; ``'distributed'`` keeps
-    the K-iteration Spark loop (parity twin)."""
-    learn = bpe_learn_local if method == "local" else bpe_learn
-    _, merges = learn(documents, n_merges, text_col)
+    The merges run driver-side on the collected vocabulary
+    (:func:`bpe_learn_local`)."""
+    _, merges = bpe_learn_local(documents, n_merges, text_col)
     return local_frame(
         documents.sparkSession,
         merges,
@@ -615,15 +614,13 @@ def bpe_doc_token_counts(
     documents: DataFrame,
     n_merges: int = 8,
     text_col: str = "text",
-    method: str = "local",
 ) -> DataFrame:
     """Per-document REAL BPE token counts under the corpus-learned
     merges: encode = look the word up in the learned vocabulary forms
     (broadcast — vocabulary-sized) and count its symbols. One wide
     pass over the corpus; the learned state never exceeds the vocab.
-    Returns (doc_id, n_words, n_bpe_tokens). ``method`` as in
-    :func:`bpe_merge_table` — 'local' learns driver-side (O(1) Spark
-    jobs), 'distributed' keeps the K-iteration loop."""
+    Returns (doc_id, n_words, n_bpe_tokens). Learning runs
+    driver-side (:func:`bpe_learn_local`, O(1) Spark jobs)."""
     from aistore_spark.util import pin
 
     # ONE regexp+explode corpus pass (r17, guide §2.4): learning and
@@ -645,12 +642,7 @@ def bpe_doc_token_counts(
         .agg(F.count("*").alias("c"))
     )
     wf = dw_counts.groupBy("word").agg(F.sum("c").alias("freq"))
-    if method == "local":
-        forms, _ = bpe_learn_local(
-            documents, n_merges, text_col, word_freq_df=wf
-        )
-    else:
-        forms, _ = bpe_learn(documents, n_merges, text_col)
+    forms, _ = bpe_learn_local(documents, n_merges, text_col, word_freq_df=wf)
     word_tokens = forms.select(
         "word",
         F.size(F.split(F.trim(F.col("form")), " ")).cast("bigint").alias("nt"),

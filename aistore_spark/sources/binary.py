@@ -215,17 +215,13 @@ def expand_archive_members(
     return binary_df.select("path", "content").mapInPandas(expand, schema=schema)
 
 
-#: backward-compat name — TARs are just one mime of the general expander
-expand_tar_members = expand_archive_members
-
-
 def build_member_index(
     spark: SparkSession, shards_path: str, index_out: str
 ) -> None:
     """P5: materialize the shard-member index as a parquet catalog —
     the table every P2/P3 extraction query then filters instead of
     scanning tar bytes."""
-    members = expand_tar_members(
+    members = expand_archive_members(
         read_binary_objects(spark, shards_path), with_bytes=False
     )
     members.write.mode("overwrite").parquet(index_out)

@@ -136,3 +136,40 @@ def test_every_query_has_an_oracle():
     # placement.hrw_placement_xxhash / j4b_hrw_md5)
     qs, oracles = entry.queries(), entry.oracle_sql()
     assert set(qs) - set(oracles) == set()
+
+
+def _fps_after_edit(fn_name: str, old: str, new: str) -> set[str]:
+    """Queries whose fingerprint flips when *old* becomes *new* inside
+    the benchqueries.py function *fn_name* (nothing is written)."""
+    import ast
+    import sys
+
+    sys.path.insert(0, str(REPO / "tools"))
+    from query_fps import current_fps
+
+    src = (REPO / "aistore_spark" / "benchqueries.py").read_text()
+    (node,) = [
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == fn_name
+    ]
+    seg = ast.get_source_segment(src, node)
+    assert seg.count(old) == 1, f"{old!r} not unique in {fn_name}"
+    edited = src.replace(seg, seg.replace(old, new))
+    before, after = current_fps(), current_fps(edited)
+    return {n for n in before if before[n] != after[n]}
+
+
+def test_fingerprint_folds_reached_helpers():
+    """A shared private helper is part of the fingerprint of every
+    query whose body reaches it, and of no other; the catalog view
+    derivations stay folded into the s4b sentinel only."""
+    assert _fps_after_edit(
+        "_clustered_corpus", 'F.col("vec_id") < 16', 'F.col("vec_id") < 17'
+    ) == {
+        "ann9c_ivfpq_refined_clustered",
+        "ann9d_ivfpq_sqrt_cells",
+        "ann9e_ivfpq_recall_held",
+    }
+    assert _fps_after_edit(
+        "_objects", '("objects", str(sf_dir))', '("objects2", str(sf_dir))'
+    ) == {"s4b_zip_listing"}

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from aistore_spark.operators import dsort
 from aistore_spark.operators.archive import build_tar
 from aistore_spark.sources.binary import (
-    expand_tar_members,
+    expand_archive_members,
     read_binary_objects,
 )
 
@@ -40,7 +40,7 @@ def test_dsort_end_to_end_real_tars(spark, tmp_path):
     out_dir.mkdir()
 
     # Phase 1 (extraction): binaryFile scan → member rows w/ bytes
-    members = expand_tar_members(
+    members = expand_archive_members(
         read_binary_objects(spark, str(tmp_path / "in-*.tar"))
     )
     recs = members.select(

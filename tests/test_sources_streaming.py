@@ -11,7 +11,7 @@ from aistore_spark.api import BatchLoader
 from aistore_spark.catalog import members_catalog
 from aistore_spark.operators.archive import build_tar, synth_payload
 from aistore_spark.sources.binary import (
-    expand_tar_members,
+    expand_archive_members,
     read_binary_objects,
 )
 from aistore_spark.sources.downloader import (
@@ -33,7 +33,7 @@ def test_binaryfile_tar_expansion_roundtrip(spark, tmp_path):
         expected.update(
             {(f"shard-{s}.tar", n): p for n, p in zip(names, payloads)}
         )
-    members = expand_tar_members(
+    members = expand_archive_members(
         read_binary_objects(spark, str(tmp_path / "*.tar"))
     ).collect()
     assert len(members) == 60
@@ -47,7 +47,7 @@ def test_binaryfile_tar_expansion_roundtrip(spark, tmp_path):
 def test_member_index_without_bytes(spark, tmp_path):
     names = [f"a/{i}.bin" for i in range(5)]
     (tmp_path / "s.tar").write_bytes(build_tar(names, [b"x" * i for i in range(5)]))
-    meta = expand_tar_members(
+    meta = expand_archive_members(
         read_binary_objects(spark, str(tmp_path / "s.tar")), with_bytes=False
     )
     assert "bytes" not in meta.columns
@@ -137,7 +137,7 @@ def test_offset_based_extraction_is_range_read(spark, tmp_path):
     shard_path = tmp_path / "x.tar"
     shard_path.write_bytes(build_tar(names, payloads))
 
-    index = expand_tar_members(
+    index = expand_archive_members(
         read_binary_objects(spark, str(shard_path)), with_bytes=False
     ).collect()
     by_member = {r.member: r for r in index}

@@ -2,29 +2,20 @@
 contract (verdict-r6 item 7).
 
 A query's fingerprint is md5(oracle SQL + the registered function's
-source). tests/test_driver_contract.py compares current fingerprints
-against tests/driver_green_fps.json — the snapshot of each query's
-fingerprint AS OF its last driver-green ledger row — and requires any
-changed or never-green query to appear in the front 50 of
-DRIVER_CHECK_PRIORITY, so a silent re-implementation can never ride on
-an old hard-green.
+source + the source of every module-level benchqueries function that
+body reaches, transitively). tests/test_driver_contract.py compares
+current fingerprints against tests/driver_green_fps.json — the
+snapshot of each query's fingerprint AS OF its last green ledger row —
+and requires any changed or never-green query to appear in the front
+50 of DRIVER_CHECK_PRIORITY, so a silent re-implementation can never
+ride on an old hard-green.
 
-Boundary (documented, deliberate): the fingerprint covers the
-registered function body and its oracle SQL, not the operator modules
-they call into — operator-level changes are guarded by the pytest
-suite and the full strict local gate, while THIS contract guards the
-query/oracle pair the driver hashes.
-
-Sentinel extension (r17, verdict-r16 item 2): that boundary left a
-hole — r16's session-memo commit changed code EVERY query executes
-(sources/tables.py, the shared catalog view builders) and rotated
-nothing into the front 50. A small SENTINEL set now folds the shared
-helper sources into its fingerprints (HELPER_SENTINELS below), so any
-change to those helpers forces the sentinels back into the driver's
-hash window. Sentinels, not all queries: folding helpers into every
-fingerprint would demand 180 front-50 slots the contract does not
-have; one driver-hashed row per helper family is the guarantee the
-rotation can actually deliver.
+An edit to a shared private helper thus rotates exactly the queries
+that reach it. The register decorators and the catalog view
+derivations (_VIEW_BUILDER_FNS, which nearly every query reaches) stay
+out of that fold; those fold into the s4b_zip_listing sentinel, and
+HELPER_SENTINELS folds the operator-module seams every query executes
+through into one hash-checked row each.
 
 Usage:
   python tools/query_fps.py                # print current fps as JSON
@@ -74,18 +65,48 @@ _VIEW_BUILDER_FNS = ("_objects", "_remote", "_members", "_requests",
                      "_io_members")
 
 
-def current_fps() -> dict[str, str]:
+#: benchqueries functions left out of the reached-helper fold
+_NOT_FOLDED = ("register", "register_stub") + _VIEW_BUILDER_FNS
+
+
+def _reached(fn: ast.FunctionDef, defs: dict[str, ast.FunctionDef]) -> list[str]:
+    """Module-level functions *fn*'s body references, transitively
+    (decorators excluded: their oracle text is hashed as SQL)."""
+    seen: set[str] = set()
+    todo = [fn]
+    while todo:
+        for stmt in todo.pop().body:
+            for node in ast.walk(stmt):
+                name = getattr(node, "id", None)
+                if name in defs and name not in seen and name not in _NOT_FOLDED:
+                    seen.add(name)
+                    todo.append(defs[name])
+    return sorted(seen)
+
+
+def current_fps(src_text: str | None = None) -> dict[str, str]:
+    """Fingerprint every registered query; *src_text* stands in for
+    the text of benchqueries.py (the registrations still come from the
+    imported module)."""
     from aistore_spark.benchqueries import ORACLES, QUERIES
 
     # QUERIES holds the register() wrapper, whose inspect.getsource is
     # the same 5 lines for every query — take the REAL function body
     # from the module AST by name instead.
-    src_text = (REPO / "aistore_spark" / "benchqueries.py").read_text()
-    segs = {
-        node.name: ast.get_source_segment(src_text, node)
+    if src_text is None:
+        src_text = (REPO / "aistore_spark" / "benchqueries.py").read_text()
+    defs = {
+        node.name: node
         for node in ast.parse(src_text).body
         if isinstance(node, ast.FunctionDef)
     }
+    # each def's text as ast.get_source_segment gives it, without its
+    # per-call re-split of the whole module (20 s per fingerprint run)
+    lines = src_text.splitlines(keepends=True)
+    segs = {}
+    for n, d in defs.items():
+        *head, last = lines[d.lineno - 1 : d.end_lineno]
+        segs[n] = "".join(head) + last.encode()[: d.end_col_offset].decode()
     out = {}
     for name, fn in QUERIES.items():
         sql = ORACLES.get(name, "")
@@ -93,6 +114,8 @@ def current_fps() -> dict[str, str]:
         if not src:
             raise RuntimeError(f"no top-level def found for query {name}")
         material = sql + "\n####\n" + src
+        for helper in _reached(defs[fn.__name__], defs):
+            material += "\n####\n" + segs[helper]
         for helper in HELPER_SENTINELS.get(name, ()):
             material += "\n####\n" + (REPO / helper).read_text()
         if name == "s4b_zip_listing":
