@@ -1366,11 +1366,10 @@ def s4d_shard_index_io(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves real shard bytes round-trip the full S4 path
     (cmn/archive/read.go:137-165 is the reference's uniform reader)."""
     from aistore_spark.sources import io_fixtures
-    from aistore_spark.sources.binary import read_binary_objects
 
     shards = io_fixtures.materialize_shards(spark, sf_dir)
     mem = _io_members(spark, sf_dir)
-    sizes = read_binary_objects(spark, shards + "/*.tar").select(
+    sizes = io_fixtures.read_shard_files(spark, shards).select(
         F.regexp_extract("path", r"([^/]+)$", 1).alias("shard"),
         F.col("length").alias("tar_bytes"),
     )
@@ -1630,7 +1629,6 @@ def p1b_pack_archive_io(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pathlib import Path as _Path
 
     from aistore_spark.sources import io_fixtures
-    from aistore_spark.sources.binary import read_binary_objects
 
     mem = _io_members(spark, sf_dir)
     # member names repeat across lineitem rows (same base+ext, different
@@ -1655,7 +1653,7 @@ def p1b_pack_archive_io(spark: SparkSession, sf_dir: str) -> DataFrame:
     io_fixtures.write_packed_shards(tagged, str(out))
 
     back = io_fixtures.read_shard_members(spark, str(out))
-    sizes = read_binary_objects(spark, str(out) + "/*.tar").select(
+    sizes = io_fixtures.read_shard_files(spark, str(out)).select(
         F.regexp_extract("path", r"([^/]+)$", 1).alias("shard"),
         F.col("length").alias("tar_bytes"),
     )

@@ -7,12 +7,15 @@ actual archive bytes — the engine's S4 (archive-expanded listing) and
 P5 (shard index build) against genuine shards.
 
 Scale: ``binaryFile`` splits by file; expansion is a ``mapInPandas``
-flatMap (1 shard in → N member rows out) with no shuffle. Building the
-member catalog = expansion + a parquet write, incrementally appendable
-per new shard (the reference's index xaction,
-``xact/xs/shard_idx.go``). Only member *metadata* (+ optionally bytes)
-leaves the task; pass ``with_bytes=False`` to index multi-GB shards
-without materializing payloads.
+flatMap (1 shard in → N member rows out) with no shuffle. Only member
+*metadata* (+ optionally bytes) leaves the task; pass
+``with_bytes=False`` to index multi-GB shards without materializing
+payloads. Listing is not free: a glob path with more than 32 matches
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``) is listed
+again in a Spark job, one task per file, before the query exists.
+Engine-written shard directories are read through
+``io_fixtures.read_shard_files``, which lists the directory once on
+the driver instead.
 """
 
 from __future__ import annotations
@@ -35,7 +38,12 @@ ARCHIVE_EXTS = (".tar", ".tgz", ".tar.gz", ".zip", ".tar.lz4")
 
 
 def read_binary_objects(spark: SparkSession, path: str) -> DataFrame:
-    """Objects as (path, modificationTime, length, content) rows."""
+    """Objects as (path, modificationTime, length, content) rows.
+
+    *path* is loaded as given: a file, a directory, or a glob. Spark
+    expands a glob on the driver into one root path per match; with
+    more than 32 matches it then lists those paths in a Spark job, one
+    task per file, while the DataFrame is constructed."""
     return spark.read.format("binaryFile").load(path)
 
 
@@ -213,15 +221,3 @@ def expand_archive_members(
             yield pd.DataFrame(out)
 
     return binary_df.select("path", "content").mapInPandas(expand, schema=schema)
-
-
-def build_member_index(
-    spark: SparkSession, shards_path: str, index_out: str
-) -> None:
-    """P5: materialize the shard-member index as a parquet catalog —
-    the table every P2/P3 extraction query then filters instead of
-    scanning tar bytes."""
-    members = expand_archive_members(
-        read_binary_objects(spark, shards_path), with_bytes=False
-    )
-    members.write.mode("overwrite").parquet(index_out)

@@ -174,22 +174,38 @@ def materialize_shards(
     return str(out)
 
 
+def read_shard_files(spark: SparkSession, shards_dir: str) -> DataFrame:
+    """``binaryFile`` rows (path, modificationTime, length, content) for
+    every ``*.tar`` in one engine-written shard directory — the one
+    place that decides how a shard directory is listed.
+
+    Precondition: the directory is flat, as :func:`materialize_shards`,
+    :func:`materialize_media_shards` and :func:`write_packed_shards`
+    write it: ``*.tar`` files plus the hidden ``_SUCCESS`` marker and
+    no subdirectories (a directory load also picks up files in
+    subdirectories). It is loaded as the directory with
+    ``pathGlobFilter``, so Spark lists it once on the driver. A
+    ``<dir>/*.tar`` glob path would expand to one root path per file,
+    and above ``parallelPartitionDiscovery.threshold`` (32) files Spark
+    lists those again in a Spark job, one task per file."""
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tar")
+        .load(str(shards_dir))
+    )
+
+
 def read_shard_members(
     spark: SparkSession, shards_dir: str, with_bytes: bool = True
 ) -> DataFrame:
     """Real-bytes member rows from the on-disk shards: ``binaryFile``
     scan → archive expansion, with ``shard`` reduced to the file name
-    (the catalog's shard key)."""
-    from pyspark.sql import functions as F
-
-    from aistore_spark.sources.binary import (
-        expand_archive_members,
-        read_binary_objects,
-    )
+    (the catalog's shard key). The scan is :func:`read_shard_files`:
+    one driver-side listing of a flat shard directory, no Spark job."""
+    from aistore_spark.sources.binary import expand_archive_members
 
     mem = expand_archive_members(
-        read_binary_objects(spark, str(Path(shards_dir) / "*.tar")),
-        with_bytes=with_bytes,
+        read_shard_files(spark, shards_dir), with_bytes=with_bytes
     )
     return mem.withColumn(
         "shard", F.regexp_extract("shard", r"([^/]+)$", 1)

@@ -56,3 +56,40 @@ def test_round_trip_matches_catalog(spark, sf_dir, monkeypatch, tmp_path):
     assert shards2 != shards
     assert (Path(shards2) / "_SUCCESS").exists()
     assert marker.exists()  # old dir untouched
+
+
+def test_shard_read_lists_directory_on_driver(spark, sf_dir):
+    """Constructing a real-bytes shard read starts no Spark job: the
+    128-shard directory is listed once on the driver. A ``*.tar`` glob
+    over the same shards is 128 root paths, which Spark lists again in
+    a 128-task job. Both reads yield the same member rows."""
+    from aistore_spark.sources.binary import (
+        expand_archive_members,
+        read_binary_objects,
+    )
+
+    shards = io_fixtures.materialize_shards(spark, sf_dir)
+    assert len(list(Path(shards).glob("*.tar"))) == 128
+    sc = spark.sparkContext
+    group = "read-shard-members-construct"
+    sc.setJobGroup(group, "read_shard_members")
+    try:
+        got = io_fixtures.read_shard_members(spark, shards)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    ref = expand_archive_members(
+        read_binary_objects(spark, shards + "/*.tar")
+    ).withColumn("shard", F.regexp_extract("shard", r"([^/]+)$", 1))
+
+    def rows(df):
+        cols = ("shard", "member", "offset", "size")
+        return sorted(
+            tuple(r) for r in df.select(*cols, F.md5("bytes")).collect()
+        )
+
+    expect = rows(ref)
+    assert len(expect) == 6000
+    assert rows(got) == expect

@@ -40,7 +40,8 @@ SNAPSHOT = REPO / "tests" / "driver_green_fps.json"
 
 #: sentinel query -> helper sources folded into ITS fingerprint.
 #: p2 covers the table-loading/session seams every query constructs
-#: through; p4 covers the archive/tar kernels the io family executes;
+#: through; p4 covers the archive/tar kernels and the on-disk shard
+#: reads/writes (sources/io_fixtures.py) the io family executes;
 #: s4b covers the shared catalog view derivations (catalog.py + the
 #: _objects/_members/_requests/_io_members builders in
 #: benchqueries.py, matched by AST name below).
@@ -52,6 +53,7 @@ HELPER_SENTINELS: dict[str, list[str]] = {
     ],
     "p4_archive_append": [
         "aistore_spark/sources/binary.py",
+        "aistore_spark/sources/io_fixtures.py",
         "aistore_spark/operators/archive.py",
     ],
     "s4b_zip_listing": [
