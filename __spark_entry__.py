@@ -30,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # every query whose fingerprint (tools/query_fps.py) differs from
 # tests/driver_green_fps.json, or that has no hash-green row in a
 # committed CORRECTNESS_r*.json ledger, is in the list, as are the
-# three helper sentinels and the standing high-risk shortlist. The
+# helper sentinels and the standing high-risk shortlist. The
 # other slots hold representatives of operator families whose
 # executed path changed. A query leaves the list only with an
 # unchanged fingerprint and a hash-green ledger row.
@@ -60,10 +60,12 @@ DRIVER_CHECK_PRIORITY = [
     "t2_offline_pipeline",
     "t6_canned_sha256",
     "t8_direct_put",
+    "s4c_lz4_listing",
     # helper sentinels (tools/query_fps.py HELPER_SENTINELS)
     "p2_extract_member",
     "p4_archive_append",
     "s4b_zip_listing",
+    "mm12_media_decode_io",
     # standing shortlist
     "dd2_ngram_jaccard",
     "dd7_dup_groups",
@@ -81,13 +83,11 @@ DRIVER_CHECK_PRIORITY = [
     "j1_get_batch",
     "j1b_mixed_entries",
     "g4_batch_loader",
-    "ann6b_kmeans_train",
-    "ann7b_pq_train",
-    "tx8_bigram_familiarity",
     "p1b_pack_archive_io",
     "s4d_shard_index_io",
-    "mm12_media_decode_io",
     "mm11_dhash_neardup",
+    "mm9_media_dispatch",
+    "mm4b_gif_frame_extract",
     "st1_dedup_stream_mirror",
 ]
 

@@ -15,7 +15,6 @@ Registry keys follow SURVEY.md §2 operator ids (s1_, f2_, j1_, d6_ ...).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2206,19 +2205,13 @@ def dd2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics on a uniform pair stratum scale by the recorded
     denominator.
 
-    The denominator is the BUDGET KNOB and every output row records it
-    (``sample_den``): the registered/oracle-gated stratum is 1/16
-    (sf0.01, sf1, sf10 hash-exact), and ``SPARK_GRAFT_DD2B_DEN`` widens
-    it where 1/16 still exceeds a host budget — measured r16 at sf100:
-    the 1/16 verify intermediate (~1.5M pairs × ~1.1K shingles/doc on
-    the 10×-longer replica docs) is itself a >66 GB shuffle
-    (ENOSPC, recorded in BENCH_r16_sf100.json's errors), so the
-    third-decade leg runs den=64. The oracle twin pins den=16, which
-    is what every oracle-gated tier runs."""
+    Every output row records the denominator (``sample_den``): the
+    stratum is 1/16, the one the oracle twin pins (sf0.01, sf1, sf10
+    hash-exact)."""
     docs = load_table(spark, sf_dir, "documents")
     from aistore_spark.util import pin
 
-    den = int(os.environ.get("SPARK_GRAFT_DD2B_DEN", "16"))
+    den = 16
     sh = pin(dedup.shingles(docs, n=3))
     cand = dedup.lsh_candidate_pairs(docs, bands=8, n=3, shingles_df=sh)
     capped = _pair_stratum(cand, den)
@@ -2600,24 +2593,12 @@ _HEXB = (
     ),
 )
 def mm1_decode_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode plumbing: binary column → typed metadata via
-    mapInPandas (deterministic fake decoder; real codecs are stubbed —
-    see operators/multimodal.py). The oracle recomputes the fake
-    decoder's md5-derived dimensions in SQL, so the whole Arrow/UDF
-    path is value-checked, not just row-counted."""
-    docs = load_table(spark, sf_dir, "documents")
-    media = docs.select(
-        F.concat(
-            F.col("lang"), F.lit("/"), F.col("source"), F.lit("/"),
-            F.lpad(F.col("doc_id").cast("string"), 6, "0"), F.lit(".txt"),
-        ).alias("name"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-        ).alias("media_type"),
-        F.encode(F.col("text"), "UTF-8").alias("data"),
-    )
-    return multimodal.decode_media(media, fake=True)
+    """Multimodal decode plumbing: binary column → typed metadata
+    through an Arrow-batched stage (deterministic digest-derived
+    decoder — see operators/multimodal.py). The oracle recomputes the
+    md5-derived dimensions in SQL, so the whole Arrow path is
+    value-checked, not just row-counted."""
+    return multimodal.decode_media(_media_frame(spark, sf_dir))
 
 
 def _media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2658,10 +2639,10 @@ def _media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm2_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal resize stage: decode → aspect-preserving 224-wide
-    resize through a second mapInPandas stage; the fake codec's output
+    resize through a second Arrow-batched stage; the fake codec's output
     checksum is recomputed by the oracle so the two-stage Arrow
     pipeline is value-checked."""
-    decoded = multimodal.decode_media(_media_frame(spark, sf_dir), fake=True)
+    decoded = multimodal.decode_media(_media_frame(spark, sf_dir))
     return multimodal.resize_media(decoded, target_width=224)
 
 
@@ -2686,8 +2667,8 @@ def mm2_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm3_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal feature-extract stage: content → fixed-dim feature
-    vector via mapInPandas (embedding-model slot; digest-derived fake,
-    value-checked end to end)."""
+    vector through an Arrow-batched stage (embedding-model slot;
+    digest-derived fake, value-checked end to end)."""
     return multimodal.extract_features(_media_frame(spark, sf_dir))
 
 
@@ -2715,7 +2696,7 @@ def mm4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal frame-sampling plan: every-30th frame capped at 8,
     pure column expressions (sequence+slice) — the extract list a
     downstream stage pulls."""
-    decoded = multimodal.decode_media(_media_frame(spark, sf_dir), fake=True)
+    decoded = multimodal.decode_media(_media_frame(spark, sf_dir))
     plan = multimodal.frame_sample_plan(decoded, every_n=30, max_frames=8)
     return plan.select(
         "name",
@@ -3869,7 +3850,7 @@ def s4b_zip_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("shard") == "shard-00042.tar")
         & F.col("member").startswith("rec-00000")
     )
-    return archive.zip_round_trip_listing(sel)
+    return archive.round_trip_listing(sel, "zip", "zoffset")
 
 
 @register(
@@ -3903,7 +3884,7 @@ def s4c_lz4_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("shard") == "shard-00042.tar")
         & F.col("member").startswith("rec-00000")
     )
-    return archive.tar_lz4_round_trip_listing(sel)
+    return archive.round_trip_listing(sel, "tar.lz4", "toffset")
 
 
 @register(

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aistore_spark.sources.binary import _iter_members
+
 TAR_BLOCK = 512
 TAR_EOF = 1024  # two zero blocks
 TAR_RECORDSIZE = 10240  # tarfile pads archives to RECORDSIZE
@@ -383,84 +385,45 @@ def assemble_batches_formats(
     )
 
 
-def zip_round_trip_listing(members: DataFrame) -> DataFrame:
-    """S4-family over a real ZIP: pack the selected members (deduped to
-    one row per member, deterministic member order) into an actual ZIP
-    via :func:`build_zip`, then list it back by reading the central
-    directory — member offsets/sizes come from genuine zip bytes (the
-    reference's uniform archive read path, ``cmn/archive/mime.go:25-29``
-    / ``cmn/archive/read.go:137-165``).
+def round_trip_listing(
+    members: DataFrame, fmt: str, offset_col: str
+) -> DataFrame:
+    """S4-family over a real archive: pack the selected members
+    (deduped to one row per member, in member order) into genuine
+    *fmt* bytes with ``ARCHIVE_BUILDERS[fmt]``, then list them back
+    through ``binary._iter_members``, the engine's archive reader
+    (``cmn/archive/mime.go:25-29`` / ``cmn/archive/read.go:137-165``).
+    Rows are ``(member, <offset_col>, size)``; the offset is the ZIP
+    local-header offset, or the payload offset in the decompressed
+    TAR stream.
 
-    The oracle re-derives the layout arithmetically: a STORED zip entry
-    occupies ``30 + len(name)`` local-header bytes plus the payload, so
-    ``zoffset_i = sum_{j<i} (30 + len(name_j) + size_j)`` — if our
-    writer or reader ever drifts (extra fields, zip64, descriptor
-    flags), the offsets stop matching.
+    The oracles re-derive the layouts arithmetically — a STORED zip
+    entry occupies ``30 + len(name)`` header bytes plus the payload,
+    a USTAR member ``512 + ceil(size/512)*512`` after the first
+    header — so any drift in the writers (extra fields, zip64,
+    extended headers) or the lz4 round trip breaks the match.
 
     Scale: one task per response archive, the P3/S13 bounded shape.
     """
     sel = members.groupBy("member").agg(F.min("key_str").alias("key_str"))
-    schema = "member string, zoffset bigint, size bigint"
+    build = ARCHIVE_BUILDERS[fmt]
 
     def pack_expand(pdf: pd.DataFrame) -> pd.DataFrame:
-        import zipfile
-
         pdf = pdf.sort_values("member", kind="mergesort")
-        payloads = [
-            synth_payload(m, k) for m, k in zip(pdf["member"], pdf["key_str"])
-        ]
-        blob = build_zip(list(pdf["member"]), payloads)
-        rows: dict[str, list] = {"member": [], "zoffset": [], "size": []}
-        with zipfile.ZipFile(io.BytesIO(blob)) as zf:
-            for info in zf.infolist():
-                rows["member"].append(info.filename)
-                rows["zoffset"].append(info.header_offset)
-                rows["size"].append(info.file_size)
-        return pd.DataFrame(rows)
+        names = list(pdf["member"])
+        payloads = [synth_payload(m, k) for m, k in zip(names, pdf["key_str"])]
+        listed = _iter_members(f"x.{fmt}", build(names, payloads), False)
+        return pd.DataFrame(
+            [(m, off, size) for m, off, size, _ in listed],
+            columns=["member", offset_col, "size"],
+        )
 
     return (
         sel.withColumn("_g", F.lit(1))
         .groupBy("_g")
-        .applyInPandas(lambda pdf: pack_expand(pdf), schema=schema)
-    )
-
-
-def tar_lz4_round_trip_listing(members: DataFrame) -> DataFrame:
-    """S4-family over a real TAR.LZ4: pack the selected members into an
-    actual lz4-framed tar via :func:`build_tar_lz4` (pure-Python LZ4,
-    ``functions/lz4frame.py``), decompress, and list members back with
-    their payload offsets in the DECOMPRESSED tar stream — the seek
-    points a ranged extract uses after inflate
-    (``cmn/archive/mime.go:25-29`` / ``cmn/archive/read.go:137-165``).
-
-    The oracle re-derives the USTAR layout arithmetically:
-    ``toffset_i = 512 + sum_{j<i} (512 + ceil(size_j/512)*512)`` — any
-    drift in the tar writer (extended headers) or the lz4 round-trip
-    breaks the match.
-    """
-    sel = members.groupBy("member").agg(F.min("key_str").alias("key_str"))
-    schema = "member string, toffset bigint, size bigint"
-
-    def pack_expand(pdf: pd.DataFrame) -> pd.DataFrame:
-        from aistore_spark.functions import lz4frame
-
-        pdf = pdf.sort_values("member", kind="mergesort")
-        payloads = [
-            synth_payload(m, k) for m, k in zip(pdf["member"], pdf["key_str"])
-        ]
-        blob = build_tar_lz4(list(pdf["member"]), payloads)
-        rows: dict[str, list] = {"member": [], "toffset": [], "size": []}
-        with tarfile.open(fileobj=io.BytesIO(lz4frame.decompress(blob))) as tar:
-            for info in tar.getmembers():
-                rows["member"].append(info.name)
-                rows["toffset"].append(info.offset_data)
-                rows["size"].append(info.size)
-        return pd.DataFrame(rows)
-
-    return (
-        sel.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(lambda pdf: pack_expand(pdf), schema=schema)
+        .applyInPandas(
+            pack_expand, schema=f"member string, {offset_col} bigint, size bigint"
+        )
     )
 
 

@@ -1,38 +1,106 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
 metadata (beyond-reference, SURVEY.md §7.8).
 
-Two tiers, both Arrow-batched ``mapInPandas`` stages with bounded
-batch sizes:
+Every stage crosses the Python boundary through one helper,
+:func:`_map_rows`: a ``mapInArrow`` stage that runs a per-row function
+over Arrow batches (bounded by
+``spark.sql.execution.arrow.maxRecordsPerBatch``) and emits zero or
+more output rows per input row. Two tiers run on it:
 
-- **Real codecs, stdlib-only** — WAV PCM (``decode_wav_meta``), BMP
-  (``decode_bmp_meta``), PNG incl. full DEFLATE+unfilter
-  (``decode_png_pixels``/``decode_png_meta``), GIF incl. a hand-built
-  LZW decoder and animated multi-frame files (``decode_gif_meta``),
-  magic-byte dispatch (``decode_media_meta``), plus real pixel-level
-  resize (``png_thumbnail``), block-grid features
-  (``png_grid_features``) and selective frame extraction
-  (``gif_extract_frames``).
-- **Library-gated plumbing contract** — ``decode_media``/
-  ``resize_media``/``extract_features`` run a deterministic
-  digest-stub (or a Pillow/torchaudio/PyAV hook via ``_decode_real``)
-  so the schemas/batching/partitioning shape is exercised for formats
-  whose codecs aren't stdlib-expressible (JPEG, MP4).
+- **Real codecs, stdlib-only.** Each container has one parser on
+  ``bytes``: ``_parse_wav`` (header + int64 PCM), ``_parse_bmp``
+  (headers + stride-aware pixel rows), ``_parse_png`` (CRC-verified
+  chunk walk, or the IHDR alone) and ``_parse_gif`` (block walk that
+  LZW-collects only the frames a caller wants). The stages on top:
+  WAV PCM stats (``decode_wav_meta``), BMP (``decode_bmp_meta``), PNG
+  incl. full DEFLATE+unfilter (``decode_png_pixels``/
+  ``decode_png_meta``), GIF incl. a hand-built LZW decoder and
+  animated multi-frame files (``decode_gif_meta``), magic-byte
+  dispatch (``decode_media_meta``), plus real pixel-level resize
+  (``png_thumbnail``), block-grid features (``png_grid_features``),
+  selective frame extraction (``gif_extract_frames``), BMP->PNG
+  transcode, JPEG decode and WAV resample.
+- **Digest-stub plumbing contract.** ``decode_media``/
+  ``resize_media``/``extract_features`` derive deterministic values
+  from the content digest, so the schema/batching shape is exercised
+  for formats whose codecs are not stdlib-expressible (MP4).
 
 At 100 TB: content lives in object storage; the catalog carries
 (name, media_type, nbytes, metadata). Decode stages are
-embarrassingly parallel; ``spark.sql.execution.arrow.maxRecordsPerBatch``
-bounds decoded-frame memory, and `.repartition` by size buckets evens
-skew from mixed media sizes.
+embarrassingly parallel; the Arrow batch size bounds decoded-frame
+memory, and `.repartition` by size buckets evens skew from mixed
+media sizes.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import math
+import struct
+import wave
+import zlib
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+from aistore_spark.functions.jpegcodec import decode_jpeg, jpeg_dims, synth_jpeg
+from aistore_spark.util import spread
+
+
+def _map_rows(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
+    """The module's one Python boundary: ``fn(*values)`` runs on the
+    values of *cols* for every input row and returns zero or more
+    output tuples in the column order of the DDL *schema*. Each Arrow
+    batch in becomes one Arrow batch out."""
+    out = to_arrow_schema(StructType.fromDDL(schema))
+
+    def run(batches):
+        for batch in batches:
+            inputs = [batch.column(c).to_pylist() for c in cols]
+            rows = [r for vals in zip(*inputs) for r in fn(*vals)]
+            columns = list(zip(*rows)) or [()] * len(out)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, out)],
+                schema=out,
+            )
+
+    return df.select(*dict.fromkeys(cols)).mapInArrow(run, schema)
+
+
+def _synth_frame(ids, id_col, col, make, seed_col=None) -> DataFrame:
+    """``(doc_id, col)`` rows: one container ``make(seed)`` per id row,
+    seeded by *seed_col* (default: the id). The generator stands in
+    for an object-store read; ``spread`` keeps it on every core."""
+    return _map_rows(
+        spread(ids),
+        [id_col, seed_col or id_col],
+        f"doc_id bigint, {col} binary",
+        lambda doc_id, seed: [(doc_id, make(seed))],
+    )
+
+
+def _need(data: bytes, pos: int, n: int, kind: str) -> None:
+    """Require *n* readable bytes at *pos*: a container cut short
+    raises ``ValueError('truncated <kind>')``, never a raw
+    IndexError/struct.error (the lz4frame/_lzw_decode contract)."""
+    if pos + n > len(data):
+        raise ValueError(f"truncated {kind}")
+
+
+def _channel_means(px) -> tuple[int, ...]:
+    """Integer-exact per-channel means of an ``[h, w, c]`` pixel array."""
+    n = px.shape[0] * px.shape[1]
+    return tuple(
+        int(px[:, :, c].sum(dtype=np.int64)) // n for c in range(px.shape[2])
+    )
+
+
+# ---- digest-stub plumbing (no codec) ---------------------------------------
 
 DECODED_SCHEMA = (
     "name string, media_type string, n_bytes bigint, "
@@ -40,64 +108,26 @@ DECODED_SCHEMA = (
 )
 
 
-def _decode_real(data: bytes, media_type: str):
-    """Real decoder hook — wire Pillow/torchaudio/PyAV here when the
-    runtime has them. Deliberately unimplemented in this container."""
-    raise NotImplementedError(
-        "media codecs are not available in this environment; "
-        "use fake=True (deterministic stub) or install codecs"
-    )
-
-
-def _decode_fake(data: bytes, media_type: str) -> tuple[int, int, int]:
-    """Deterministic stand-in: dimensions derived from the content
-    digest, so tests are stable and the full pipeline shape runs."""
-    h = hashlib.md5(data).digest()
-    width = 64 + h[0] * 4
-    height = 64 + h[1] * 4
-    n_frames = 1 if media_type == "image" else 1 + h[2] % 240
-    return width, height, n_frames
-
-
 def decode_media(
     df: DataFrame,
     data_col: str = "data",
     name_col: str = "name",
     type_col: str = "media_type",
-    fake: bool = True,
 ) -> DataFrame:
-    """Decode a binary media column into typed metadata via
-    ``mapInPandas`` (iterator form — never materializes a partition).
-    """
+    """Binary media column -> typed metadata with a deterministic
+    stand-in decoder: dimensions derive from the content digest, so
+    tests are stable and the full pipeline shape runs."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = _decode_fake if fake else _decode_real
-        for pdf in batches:
-            out = {
-                "name": pdf[name_col],
-                "media_type": pdf[type_col],
-                "n_bytes": pdf[data_col].map(len),
-                "width": [],
-                "height": [],
-                "n_frames": [],
-                "checksum": [],
-            }
-            ws, hs, fr, ck = [], [], [], []
-            for data, mt in zip(pdf[data_col], pdf[type_col]):
-                w, h, n = decode(data, mt)
-                ws.append(w)
-                hs.append(h)
-                fr.append(n)
-                ck.append(hashlib.md5(data).hexdigest())
-            out["width"], out["height"], out["n_frames"], out["checksum"] = (
-                ws,
-                hs,
-                fr,
-                ck,
-            )
-            yield pd.DataFrame(out)
+    def row(name, media_type, data):
+        h = hashlib.md5(data)
+        d = h.digest()
+        n_frames = 1 if media_type == "image" else 1 + d[2] % 240
+        yield (
+            name, media_type, len(data), 64 + d[0] * 4, 64 + d[1] * 4,
+            n_frames, h.hexdigest(),
+        )
 
-    return df.mapInPandas(run, schema=DECODED_SCHEMA)
+    return _map_rows(df, [name_col, type_col, data_col], DECODED_SCHEMA, row)
 
 
 RESIZED_SCHEMA = (
@@ -110,39 +140,24 @@ def resize_media(
     decoded: DataFrame,
     target_width: int = 224,
 ) -> DataFrame:
-    """Resize stage: aspect-preserving scale to *target_width* via
-    ``mapInPandas`` (the Arrow-batched stage a Pillow/torchvision
-    resize plugs into; the pixel op itself is the stubbed codec —
-    the fake emits a deterministic output checksum so the stage is
-    value-checkable end-to-end).
+    """Resize stage: aspect-preserving scale to *target_width* (the
+    Arrow-batched stage a Pillow/torchvision resize plugs into; the
+    pixel op itself is the stubbed codec — the fake emits a
+    deterministic output checksum so the stage is value-checkable
+    end-to-end).
 
     ``rs_height = height * target // width`` — integer floor-division,
     exact in both engines.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rs_w = [target_width] * len(pdf)
-            rs_h = [
-                int(h) * target_width // int(w)
-                for w, h in zip(pdf["width"], pdf["height"])
-            ]
-            rs_ck = [
-                hashlib.md5(f"{c}:{w}x{h}".encode()).hexdigest()
-                for c, w, h in zip(pdf["checksum"], rs_w, rs_h)
-            ]
-            yield pd.DataFrame(
-                {
-                    "name": pdf["name"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "rs_width": rs_w,
-                    "rs_height": rs_h,
-                    "rs_checksum": rs_ck,
-                }
-            )
+    def row(name, w, h, checksum):
+        rs_h = h * target_width // w
+        ck = hashlib.md5(f"{checksum}:{target_width}x{rs_h}".encode())
+        yield (name, w, h, target_width, rs_h, ck.hexdigest())
 
-    return decoded.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return _map_rows(
+        decoded, ["name", "width", "height", "checksum"], RESIZED_SCHEMA, row
+    )
 
 
 def extract_features(
@@ -152,29 +167,20 @@ def extract_features(
     dim: int = 4,
 ) -> DataFrame:
     """Feature-extract stage: binary content → fixed-dim feature
-    vector via ``mapInPandas`` (where a real embedding model runs; the
-    fake derives features from the content digest so the batch shape,
-    schema and determinism are tested). Features are emitted as a
-    comma-joined string of *dim* 8-hex-char words — engine-portable
-    for the oracle's value hash.
+    vector (where a real embedding model runs; the fake derives
+    features from the content digest so the batch shape, schema and
+    determinism are tested). Features are emitted as a comma-joined
+    string of *dim* 8-hex-char words — engine-portable for the
+    oracle's value hash.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for data in pdf[data_col]:
-                h = hashlib.md5(data).hexdigest()
-                feats.append(",".join(h[i * 8 : i * 8 + 8] for i in range(dim)))
-            yield pd.DataFrame(
-                {
-                    "name": pdf[name_col],
-                    "features": feats,
-                    "feature_dim": [dim] * len(pdf),
-                }
-            )
+    def row(name, data):
+        h = hashlib.md5(data).hexdigest()
+        yield (name, ",".join(h[i * 8 : i * 8 + 8] for i in range(dim)), dim)
 
-    return df.mapInPandas(
-        run, schema="name string, features string, feature_dim bigint"
+    return _map_rows(
+        df, [name_col, data_col],
+        "name string, features string, feature_dim bigint", row,
     )
 
 
@@ -210,10 +216,6 @@ def synth_wav(doc_id: int, sample_rate: int = 8000) -> bytes:
     and amplitude derive from *doc_id* (period 16 samples), written
     with the stdlib ``wave`` module — REAL container bytes, analytic
     metadata."""
-    import io
-    import struct
-    import wave
-
     n_frames = 800 + doc_id % 800
     amp = 1000 + doc_id % 9000
     frames = bytearray()
@@ -228,85 +230,64 @@ def synth_wav(doc_id: int, sample_rate: int = 8000) -> bytes:
     return buf.getvalue()
 
 
+def _parse_wav(data: bytes):
+    """The WAV container (stdlib ``wave`` reader) and its samples:
+    ``(n_channels, sample_width, sample_rate, n_frames, pcm)`` with
+    *pcm* the interleaved samples as int64. The dtype follows the
+    sample width — 8-bit PCM is unsigned around 128, 24-bit is
+    assembled and sign-extended. Malformed or truncated containers
+    raise ValueError."""
+    try:
+        with wave.open(io.BytesIO(data)) as w:
+            nch, sw, sr = w.getnchannels(), w.getsampwidth(), w.getframerate()
+            nf = w.getnframes()
+            raw = w.readframes(nf)
+    except (wave.Error, EOFError) as e:
+        raise ValueError(f"bad WAV: {e}") from e
+    if len(raw) != nf * nch * sw:
+        raise ValueError("truncated WAV")
+    if sw == 1:
+        pcm = np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
+    elif sw == 2:
+        pcm = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+    elif sw == 3:
+        b = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
+        pcm = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
+        pcm -= (pcm >> 23) << 24
+    elif sw == 4:
+        pcm = np.frombuffer(raw, dtype="<i4").astype(np.int64)
+    else:
+        raise ValueError(f"unsupported WAV sample width {sw}")
+    return nch, sw, sr, nf, pcm
+
+
+def _rms(pcm) -> int:
+    """Integer RMS: isqrt of the floored mean square (0 when empty)."""
+    return math.isqrt(int((pcm * pcm).sum()) // max(len(pcm), 1))
+
+
 def decode_wav_meta(
     df: DataFrame, id_col: str = "doc_id", data_col: str = "wav"
 ) -> DataFrame:
     """REAL audio decode — no stub: parse WAV containers with the
     stdlib ``wave`` reader and compute integer-exact signal stats
     (RMS via isqrt of the mean square, numpy int64 accumulation).
-    The mapInPandas stage is the exact shape a torchaudio/ffmpeg
-    decoder drops into when those libs exist; WAV proves the path
-    end-to-end with genuine codec bytes."""
-    import io
-    import math
-    import wave
+    This is the stage shape a torchaudio/ffmpeg decoder drops into
+    when those libs exist; WAV proves the path end-to-end with genuine
+    codec bytes."""
 
-    import numpy as np
+    def row(doc_id, data):
+        nch, sw, sr, nf, pcm = _parse_wav(data)
+        if sr <= 0:
+            raise ValueError(f"WAV sample rate {sr} <= 0")
+        yield (doc_id, nch, sw, sr, nf, nf * 1000 // sr, _rms(pcm), len(data))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_channels", "sample_width", "sample_rate",
-                "n_frames", "duration_ms", "rms", "n_bytes",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                with wave.open(io.BytesIO(data)) as w:
-                    nch, sw, sr = (
-                        w.getnchannels(), w.getsampwidth(), w.getframerate()
-                    )
-                    if sr <= 0:
-                        raise ValueError(f"WAV sample rate {sr} <= 0")
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                # dtype must follow the container's sample width —
-                # decoding 8/24/32-bit PCM as '<i2' yields garbage stats
-                if sw == 1:  # 8-bit PCM is unsigned, midpoint 128
-                    pcm = np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
-                elif sw == 2:
-                    pcm = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                elif sw == 3:  # 24-bit: assemble + sign-extend
-                    b = np.frombuffer(raw, dtype=np.uint8).reshape(-1, 3)
-                    pcm = (
-                        b[:, 0].astype(np.int64)
-                        | (b[:, 1].astype(np.int64) << 8)
-                        | (b[:, 2].astype(np.int64) << 16)
-                    )
-                    pcm -= (pcm >> 23) << 24
-                elif sw == 4:
-                    pcm = np.frombuffer(raw, dtype="<i4").astype(np.int64)
-                else:
-                    raise ValueError(f"unsupported WAV sample width {sw}")
-                sq = int((pcm * pcm).sum())
-                rows["doc_id"].append(int(doc_id))
-                rows["n_channels"].append(nch)
-                rows["sample_width"].append(sw)
-                rows["sample_rate"].append(sr)
-                rows["n_frames"].append(nf)
-                rows["duration_ms"].append(nf * 1000 // sr)
-                rows["rms"].append(math.isqrt(sq // max(len(pcm), 1)))
-                rows["n_bytes"].append(len(data))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=WAV_META_SCHEMA)
+    return _map_rows(df, [id_col, data_col], WAV_META_SCHEMA, row)
 
 
 def synth_wav_frame(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach a real synthesized WAV binary column per id row
-    (mapInPandas — the generator stands in for an object-store read)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "wav": [synth_wav(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    from aistore_spark.util import spread as _spread
-
-    return _spread(ids).mapInPandas(run, schema="doc_id bigint, wav binary")
+    """Attach a real synthesized WAV binary column per id row."""
+    return _synth_frame(ids, id_col, "wav", synth_wav)
 
 
 BMP_META_SCHEMA = (
@@ -319,8 +300,6 @@ def synth_bmp(doc_id: int) -> bytes:
     """Deterministic 24-bpp bottom-up BMP (BITMAPINFOHEADER): solid
     BGR color and dimensions derived from *doc_id* — REAL image
     container bytes with analytic metadata."""
-    import struct
-
     w = 4 + doc_id % 61
     h = 4 + doc_id % 37
     b, g, r = doc_id % 256, (doc_id * 7) % 256, (doc_id * 13) % 256
@@ -335,69 +314,48 @@ def synth_bmp(doc_id: int) -> bytes:
     return header + pixels
 
 
+def _parse_bmp(data: bytes):
+    """The BMP file + info headers and the pixel array:
+    ``(width, height, bpp, row_stride, rows)`` with *rows* a top-down
+    ``uint8[height, row_stride]`` view (rows are padded to 4 bytes;
+    bottom-up files are flipped). Truncated containers raise
+    ValueError."""
+    _need(data, 0, 30, "BMP")
+    magic, _fsz, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
+    if magic != b"BM":
+        raise ValueError("not a BMP")
+    _hsz, w, h, _pl, bpp = struct.unpack_from("<IiiHH", data, 14)
+    stride = (bpp * w + 31) // 32 * 4
+    _need(data, off, stride * abs(h), "BMP")
+    rows = np.frombuffer(
+        data, dtype=np.uint8, count=stride * abs(h), offset=off
+    ).reshape(abs(h), stride)
+    return w, abs(h), bpp, stride, rows[::-1] if h > 0 else rows
+
+
 def decode_bmp_meta(
     df: DataFrame, id_col: str = "doc_id", data_col: str = "img"
 ) -> DataFrame:
     """REAL image decode, no stub: parse the BMP file + info headers
     with ``struct`` and fold the pixel array (numpy, stride-aware) into
-    integer-exact channel means — the mapInPandas stage a Pillow
-    decoder drops into, proven here with genuine container bytes."""
-    import struct
+    integer-exact channel means — the stage a Pillow decoder drops
+    into, proven here with genuine container bytes."""
 
-    import numpy as np
+    def row(doc_id, data):
+        w, h, bpp, stride, rows = _parse_bmp(data)
+        if bpp != 24:
+            # the 3-bytes-per-pixel slicing would yield silently wrong
+            # means for other depths
+            raise ValueError(f"unsupported BMP bpp {bpp} (need 24)")
+        blue, _green, red = _channel_means(rows[:, : 3 * w].reshape(h, w, 3))
+        yield (doc_id, w, h, bpp, stride, blue, red, len(data))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "bpp", "row_stride",
-                "mean_blue", "mean_red", "n_bytes",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                magic, _fsz, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
-                if magic != b"BM":
-                    raise ValueError("not a BMP")
-                _hsz, w, h, _pl, bpp = struct.unpack_from("<IiiHH", data, 14)
-                if bpp != 24:
-                    # the channel-slice math below is 3-bytes-per-pixel;
-                    # decoding other depths with it would yield silently
-                    # wrong means
-                    raise ValueError(f"unsupported BMP bpp {bpp} (need 24)")
-                stride = (bpp // 8 * w + 3) & ~3
-                px = np.frombuffer(
-                    data, dtype=np.uint8, count=stride * abs(h), offset=off
-                ).reshape(abs(h), stride)
-                blue = px[:, 0 : 3 * w : 3].astype(np.int64)
-                red = px[:, 2 : 3 * w : 3].astype(np.int64)
-                n = w * abs(h)
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(abs(h))
-                rows["bpp"].append(bpp)
-                rows["row_stride"].append(stride)
-                rows["mean_blue"].append(int(blue.sum()) // n)
-                rows["mean_red"].append(int(red.sum()) // n)
-                rows["n_bytes"].append(len(data))
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=BMP_META_SCHEMA)
+    return _map_rows(df, [id_col, data_col], BMP_META_SCHEMA, row)
 
 
 def synth_bmp_frame(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a real synthesized BMP binary column per id row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "img": [synth_bmp(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    from aistore_spark.util import spread as _spread
-
-    return _spread(ids).mapInPandas(run, schema="doc_id bigint, img binary")
+    return _synth_frame(ids, id_col, "img", synth_bmp)
 
 
 # ---- real compressed-image codec (stdlib PNG: zlib + scanline filters) ----
@@ -412,14 +370,11 @@ PNG_META_SCHEMA = (
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + ctype
         + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
+        + struct.pack(">I", zlib.crc32(ctype + body))
     )
 
 
@@ -440,12 +395,9 @@ def encode_png_rgb(
     picks the spec filter type per row (default ``y % 5`` so all five
     — None/Sub/Up/Average/Paeth — appear in any image ≥5 rows tall).
     The filter math here is the encode direction of the spec;
-    :func:`decode_png_meta` implements the decode direction, and the
+    :func:`decode_png_pixels` implements the decode direction, and the
     property test drives arbitrary pixels through both.
     """
-    import struct
-    import zlib
-
     bpp = 3
     stream = bytearray()
     prior = bytes(bpp * width)
@@ -519,84 +471,95 @@ def synth_png(doc_id: int) -> bytes:
     return encode_png_rgb(raw_rows, w)
 
 
-def decode_png_pixels(data: bytes):
-    """Decode a supported-profile PNG to its pixel array: CRC-verified
-    chunk walk, zlib inflate, per-scanline unfilter (all five spec
-    filter types). Returns ``(w, h, n_idat, int64 ndarray[h, w, 3])``.
-    """
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def unfilter(stream: bytes, w: int, h: int, bpp: int = 3) -> np.ndarray:
-        rowlen = bpp * w
-        out = np.zeros((h, rowlen), dtype=np.uint8)
-        pos = 0
-        for y in range(h):
-            ft = stream[pos]
-            pos += 1
-            cur = bytearray(stream[pos : pos + rowlen])
-            pos += rowlen
-            if len(cur) != rowlen:
-                raise ValueError("truncated PNG pixel stream")
-            prior = out[y - 1] if y else np.zeros(rowlen, dtype=np.uint8)
-            if ft == 0:
-                pass
-            elif ft == 1:  # Sub
-                for i in range(bpp, rowlen):
-                    cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-            elif ft == 2:  # Up
-                for i in range(rowlen):
-                    cur[i] = (cur[i] + prior[i]) & 0xFF
-            elif ft == 3:  # Average
-                for i in range(rowlen):
-                    left = cur[i - bpp] if i >= bpp else 0
-                    cur[i] = (cur[i] + (left + int(prior[i])) // 2) & 0xFF
-            elif ft == 4:  # Paeth
-                for i in range(rowlen):
-                    left = cur[i - bpp] if i >= bpp else 0
-                    ul = int(prior[i - bpp]) if i >= bpp else 0
-                    cur[i] = (cur[i] + _paeth(left, int(prior[i]), ul)) & 0xFF
-            else:
-                raise ValueError(f"unknown PNG filter type {ft}")
-            out[y] = np.frombuffer(bytes(cur), dtype=np.uint8)
-        return out
-
+def _parse_png(data: bytes, pixels: bool = True):
+    """One CRC-verified chunk walk: ``(width, height, bit_depth,
+    color_type, interlace, idat, n_idat)`` with *idat* the joined IDAT
+    bodies. IHDR must come first; with ``pixels=False`` the walk stops
+    right after it (``idat == b""``), so a dimension read touches no
+    pixel data. A stream that ends before IEND raises ValueError."""
     if data[:8] != PNG_SIGNATURE:
         raise ValueError("not a PNG")
     pos = 8
+    ihdr = None
     idat = bytearray()
     n_idat = 0
-    w = h = None
-    while pos < len(data):
+    while True:
+        _need(data, pos, 12, "PNG")
         (clen,) = struct.unpack_from(">I", data, pos)
+        _need(data, pos, 12 + clen, "PNG")
         cname = data[pos + 4 : pos + 8]
         body = data[pos + 8 : pos + 8 + clen]
         (crc,) = struct.unpack_from(">I", data, pos + 8 + clen)
-        if zlib.crc32(cname + body) & 0xFFFFFFFF != crc:
+        if zlib.crc32(cname + body) != crc:
             raise ValueError(f"PNG chunk CRC mismatch in {cname!r}")
         pos += 12 + clen
-        if cname == b"IHDR":
-            w, h, depth, ctype, _comp, _filt, inter = struct.unpack(
-                ">IIBBBBB", body
-            )
-            if depth != 8 or ctype != 2 or inter != 0:
-                raise ValueError(
-                    "unsupported PNG profile (need 8-bit truecolor "
-                    f"non-interlaced): depth={depth} color_type={ctype} "
-                    f"interlace={inter}"
-                )
+        if ihdr is None:
+            if cname != b"IHDR" or clen != 13:
+                raise ValueError("bad PNG IHDR")
+            ihdr = struct.unpack(">IIBBBBB", body)
+            if not pixels:
+                break
         elif cname == b"IDAT":
             idat += body
             n_idat += 1
         elif cname == b"IEND":
             break
-    if w is None:
-        raise ValueError("PNG missing IHDR")
-    px = unfilter(zlib.decompress(bytes(idat)), w, h)
-    import numpy as np
+    w, h, depth, ctype, _comp, _filt, interlace = ihdr
+    return w, h, depth, ctype, interlace, bytes(idat), n_idat
 
+
+def _unfilter(stream: bytes, w: int, h: int, bpp: int = 3):
+    """Reverse the per-scanline filters (all five spec types) of an
+    inflated PNG pixel stream -> ``uint8[h, bpp*w]``."""
+    rowlen = bpp * w
+    out = np.zeros((h, rowlen), dtype=np.uint8)
+    pos = 0
+    for y in range(h):
+        _need(stream, pos, 1 + rowlen, "PNG pixel stream")
+        ft = stream[pos]
+        cur = bytearray(stream[pos + 1 : pos + 1 + rowlen])
+        pos += 1 + rowlen
+        prior = out[y - 1] if y else np.zeros(rowlen, dtype=np.uint8)
+        if ft == 0:
+            pass
+        elif ft == 1:  # Sub
+            for i in range(bpp, rowlen):
+                cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
+        elif ft == 2:  # Up
+            for i in range(rowlen):
+                cur[i] = (cur[i] + prior[i]) & 0xFF
+        elif ft == 3:  # Average
+            for i in range(rowlen):
+                left = cur[i - bpp] if i >= bpp else 0
+                cur[i] = (cur[i] + (left + int(prior[i])) // 2) & 0xFF
+        elif ft == 4:  # Paeth
+            for i in range(rowlen):
+                left = cur[i - bpp] if i >= bpp else 0
+                ul = int(prior[i - bpp]) if i >= bpp else 0
+                cur[i] = (cur[i] + _paeth(left, int(prior[i]), ul)) & 0xFF
+        else:
+            raise ValueError(f"unknown PNG filter type {ft}")
+        out[y] = np.frombuffer(bytes(cur), dtype=np.uint8)
+    return out
+
+
+def decode_png_pixels(data: bytes):
+    """Decode a supported-profile PNG (8-bit truecolor, non-interlaced)
+    to its pixel array: chunk walk, zlib inflate, per-scanline
+    unfilter. Returns ``(w, h, n_idat, int64 ndarray[h, w, 3])``.
+    """
+    w, h, depth, ctype, interlace, idat, n_idat = _parse_png(data)
+    if depth != 8 or ctype != 2 or interlace != 0:
+        raise ValueError(
+            "unsupported PNG profile (need 8-bit truecolor "
+            f"non-interlaced): depth={depth} color_type={ctype} "
+            f"interlace={interlace}"
+        )
+    try:
+        stream = zlib.decompress(idat)
+    except zlib.error as e:
+        raise ValueError(f"bad PNG IDAT stream: {e}") from e
+    px = _unfilter(stream, w, h)
     return w, h, n_idat, px.reshape(h, w, 3).astype(np.int64)
 
 
@@ -607,37 +570,19 @@ def decode_png_meta(
     walk the chunk stream (CRC-verified), inflate IDAT with stdlib
     ``zlib``, reverse the per-scanline filters (all five spec types —
     None/Sub/Up/Average/Paeth) and fold the reconstructed truecolor
-    array into integer-exact channel means. This is the mapInPandas
-    stage a Pillow decoder drops into; PNG proves the compressed-format
-    path end-to-end the way mm5/mm6 proved WAV/BMP.
+    array into integer-exact channel means. This is the stage a Pillow
+    decoder drops into; PNG proves the compressed-format path
+    end-to-end the way mm5/mm6 proved WAV/BMP.
 
     Supports the synthesizable profile: 8-bit truecolor (color type 2),
     non-interlaced. Anything else raises rather than mis-decoding.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "bit_depth", "color_type",
-                "n_idat", "mean_red", "mean_green", "mean_blue", "n_pixels",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                w, h, n_idat, rgb = decode_png_pixels(bytes(blob))
-                depth, ctype = 8, 2
-                n = w * h
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bit_depth"].append(depth)
-                rows["color_type"].append(ctype)
-                rows["n_idat"].append(n_idat)
-                rows["mean_red"].append(int(rgb[:, :, 0].sum()) // n)
-                rows["mean_green"].append(int(rgb[:, :, 1].sum()) // n)
-                rows["mean_blue"].append(int(rgb[:, :, 2].sum()) // n)
-                rows["n_pixels"].append(n)
-            yield pd.DataFrame(rows)
+    def row(doc_id, data):
+        w, h, n_idat, rgb = decode_png_pixels(data)
+        yield (doc_id, w, h, 8, 2, n_idat, *_channel_means(rgb), w * h)
 
-    return df.mapInPandas(run, schema=PNG_META_SCHEMA)
+    return _map_rows(df, [id_col, data_col], PNG_META_SCHEMA, row)
 
 
 def synth_png_frame(
@@ -648,20 +593,7 @@ def synth_png_frame(
     seeds the PIXEL CONTENT — distinct rows can carry identical
     images, which is how near-duplicate image fixtures are built
     (mm11)."""
-    src = content_col or id_col
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "img": [synth_png(int(i)) for i in pdf[src]],
-                }
-            )
-
-    from aistore_spark.util import spread as _spread
-
-    return _spread(ids).mapInPandas(run, schema="doc_id bigint, img binary")
+    return _synth_frame(ids, id_col, "img", synth_png, content_col)
 
 
 # ---- real dictionary-coded image codec (stdlib GIF87a / LZW) --------------
@@ -723,18 +655,9 @@ def _lzw_encode(indices: bytes, min_code_size: int = 8) -> bytes:
 
 
 def _gif_byte(data: bytes, pos: int) -> int:
-    """``data[pos]`` with the truncation contract the other hardened
-    decoders establish (lz4frame, _lzw_decode): a container cut short
-    raises ValueError, never a raw IndexError."""
-    if pos >= len(data):
-        raise ValueError("truncated GIF")
+    """``data[pos]``, or ValueError('truncated GIF') past the end."""
+    _need(data, pos, 1, "GIF")
     return data[pos]
-
-
-def _gif_need(data: bytes, pos: int, n: int) -> None:
-    """Require *n* readable bytes at *pos* or raise ValueError."""
-    if pos + n > len(data):
-        raise ValueError("truncated GIF")
 
 
 def _lzw_decode(data: bytes, min_code_size: int = 8) -> bytes:
@@ -800,8 +723,6 @@ def synth_gif(doc_id: int, n_frames: int = 1) -> bytes:
     re-derives the decoded channel means with no reference to the
     bytes. ``n_frames > 1`` writes one full-frame image block per
     frame — a genuine multi-frame (video-shaped) container."""
-    import struct
-
     w = 6 + doc_id % 27
     h = 4 + doc_id % 19
     palette = bytearray()
@@ -831,6 +752,58 @@ def synth_gif(doc_id: int, n_frames: int = 1) -> bytes:
     )
 
 
+def _parse_gif(data: bytes, want=lambda frame: True):
+    """One structural walk of a GIF87a/89a container: screen
+    descriptor, global color table, then image blocks up to the
+    trailer. Returns ``(width, height, palette, frames)``: *palette* is
+    the global color table's bytes (empty when absent) and *frames*
+    holds one ``(iw, ih, iflags, min_code, lzw)`` per image block. A
+    block's local color table is skipped, never read as image data;
+    *lzw* is the frame's joined sub-block bytes when ``want(index)``,
+    else None (the sub-blocks are stepped over without copying).
+    Extension blocks and truncated containers raise ValueError."""
+    if data[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF")
+    _need(data, 6, 7, "GIF")
+    w, h, flags = struct.unpack_from("<HHB", data, 6)
+    n_pal = 3 * (2 << (flags & 0x07)) if flags & 0x80 else 0
+    _need(data, 13, n_pal, "GIF")
+    palette = data[13 : 13 + n_pal]
+    pos = 13 + n_pal
+    frames = []
+    while _gif_byte(data, pos) != 0x3B:  # until trailer
+        if data[pos] != 0x2C:
+            raise ValueError(
+                f"unsupported GIF block 0x{data[pos]:02x} "
+                "(extensions not in the synthesizable profile)"
+            )
+        _need(data, pos + 1, 9, "GIF")
+        _ix, _iy, iw, ih, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
+        pos += 10
+        if iflags & 0x80:  # local color table
+            pos += 3 * (2 << (iflags & 0x07))
+        min_code = _gif_byte(data, pos)
+        pos += 1
+        lzw = bytearray() if want(len(frames)) else None
+        while (blen := _gif_byte(data, pos)) != 0:
+            _need(data, pos + 1, blen, "GIF")
+            if lzw is not None:
+                lzw += data[pos + 1 : pos + 1 + blen]
+            pos += 1 + blen
+        pos += 1  # block terminator
+        frames.append(
+            (iw, ih, iflags, min_code, None if lzw is None else bytes(lzw))
+        )
+    return w, h, palette, frames
+
+
+def _gif_indices(lzw: bytes, min_code: int):
+    """A frame's palette indices as an int64 array."""
+    return np.frombuffer(_lzw_decode(lzw, min_code), dtype=np.uint8).astype(
+        np.int64
+    )
+
+
 def decode_gif_meta(
     df: DataFrame, id_col: str = "doc_id", data_col: str = "img"
 ) -> DataFrame:
@@ -839,89 +812,35 @@ def decode_gif_meta(
     descriptor, sub-block stream), LZW-decode the pixel indices and
     fold them into integer-exact stats. Completes the codec matrix:
     mm5 PCM audio, mm6 raw bitmaps, mm7 DEFLATE (PNG), mm8 LZW (GIF).
-    Supports the synthesizable profile (global 256-color table, single
-    non-interlaced image, no extensions); anything else raises."""
-    import struct
+    Supports the synthesizable profile (global color table,
+    non-interlaced images without local tables, no extensions);
+    anything else raises."""
 
-    import numpy as np
+    def row(doc_id, data):
+        # report the LOGICAL SCREEN dims (w, h) — per-frame image
+        # blocks may legally differ in size
+        w, h, palette, frames = _parse_gif(data)
+        if not palette:
+            raise ValueError("GIF without global color table")
+        if not frames:
+            raise ValueError("GIF with no image block")
+        green = np.frombuffer(palette, dtype=np.uint8)[1::3]
+        idx_sum = g_sum = n_px = 0
+        for iw, ih, iflags, min_code, lzw in frames:
+            if iflags & 0xC0:
+                raise ValueError("local table/interlace unsupported")
+            idx = _gif_indices(lzw, min_code)
+            if len(idx) != iw * ih:
+                raise ValueError(f"LZW output {len(idx)} != {iw}x{ih} pixels")
+            idx_sum += int(idx.sum())
+            g_sum += int(green[idx].sum(dtype=np.int64))
+            n_px += iw * ih
+        yield (
+            doc_id, w, h, len(green), len(frames),
+            idx_sum // n_px, g_sum // n_px, n_px,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_colors", "n_frames",
-                "mean_index", "mean_green", "n_pixels",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                if data[:6] not in (b"GIF87a", b"GIF89a"):
-                    raise ValueError("not a GIF")
-                _gif_need(data, 6, 7)
-                w, h, flags, _bg, _ar = struct.unpack_from("<HHBBB", data, 6)
-                if not flags & 0x80:
-                    raise ValueError("GIF without global color table")
-                n_colors = 2 << (flags & 0x07)
-                pos = 13
-                _gif_need(data, pos, 3 * n_colors)
-                palette = np.frombuffer(
-                    data, dtype=np.uint8, count=3 * n_colors, offset=pos
-                ).reshape(n_colors, 3)
-                pos += 3 * n_colors
-                idx_sum = 0
-                g_sum = 0
-                n_px = 0
-                frames = 0
-                iw = ih = 0
-                while _gif_byte(data, pos) != 0x3B:  # until trailer
-                    if data[pos] != 0x2C:
-                        raise ValueError(
-                            f"unsupported GIF block 0x{data[pos]:02x} "
-                            "(extensions not in the synthesizable profile)"
-                        )
-                    _gif_need(data, pos + 1, 9)
-                    _ix, _iy, iw, ih, iflags = struct.unpack_from(
-                        "<HHHHB", data, pos + 1
-                    )
-                    if iflags & 0xC0:
-                        raise ValueError("local table/interlace unsupported")
-                    pos += 10
-                    min_code = _gif_byte(data, pos)
-                    pos += 1
-                    lzw = bytearray()
-                    while True:
-                        blen = _gif_byte(data, pos)
-                        pos += 1
-                        if blen == 0:
-                            break
-                        _gif_need(data, pos, blen)
-                        lzw += data[pos : pos + blen]
-                        pos += blen
-                    idx = np.frombuffer(
-                        _lzw_decode(bytes(lzw), min_code), dtype=np.uint8
-                    )
-                    if len(idx) != iw * ih:
-                        raise ValueError(
-                            f"LZW output {len(idx)} != {iw}x{ih} pixels"
-                        )
-                    idx_sum += int(idx.astype(np.int64).sum())
-                    g_sum += int(palette[idx, 1].astype(np.int64).sum())
-                    n_px += iw * ih
-                    frames += 1
-                if frames == 0:
-                    raise ValueError("GIF with no image block")
-                rows["doc_id"].append(int(doc_id))
-                # report the LOGICAL SCREEN dims (w, h) — per-frame
-                # image blocks may legally differ in size, and the
-                # last frame's iw/ih would be arbitrary
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_colors"].append(n_colors)
-                rows["n_frames"].append(frames)
-                rows["mean_index"].append(idx_sum // n_px)
-                rows["mean_green"].append(g_sum // n_px)
-                rows["n_pixels"].append(n_px)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=GIF_META_SCHEMA)
+    return _map_rows(df, [id_col, data_col], GIF_META_SCHEMA, row)
 
 
 def synth_gif_frame(
@@ -929,27 +848,10 @@ def synth_gif_frame(
 ) -> DataFrame:
     """Attach a real synthesized GIF binary column per id row;
     ``n_frames_of(doc_id)`` makes them animated (multi-frame)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "img": [
-                        synth_gif(
-                            int(i),
-                            n_frames=(
-                                n_frames_of(int(i)) if n_frames_of else 1
-                            ),
-                        )
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    from aistore_spark.util import spread as _spread
-
-    return _spread(ids).mapInPandas(run, schema="doc_id bigint, img binary")
+    return _synth_frame(
+        ids, id_col, "img",
+        lambda i: synth_gif(i, n_frames=n_frames_of(i) if n_frames_of else 1),
+    )
 
 
 # ---- real media-type dispatch (the decode_media contract, no stub) --------
@@ -976,33 +878,38 @@ def sniff_media_type(data: bytes) -> str:
     raise ValueError(f"unknown media container (magic {data[:8]!r})")
 
 
+def _synth_media(doc_id: int) -> bytes:
+    k = doc_id % 4
+    if k == 0:
+        return synth_wav(doc_id)
+    if k == 1:
+        return synth_bmp(doc_id)
+    if k == 2:
+        return synth_png(doc_id)
+    return synth_gif(doc_id, n_frames=1 + doc_id % 5)
+
+
 def synth_media_frame(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Mixed-media corpus: each id gets a REAL container chosen by
     ``doc_id % 4`` — WAV audio, BMP, PNG, or an ANIMATED multi-frame
     GIF (``1 + doc_id % 5`` frames — the video-shaped case)."""
+    return _synth_frame(ids, id_col, "data", _synth_media)
 
-    def one(doc_id: int) -> bytes:
-        k = doc_id % 4
-        if k == 0:
-            return synth_wav(doc_id)
-        if k == 1:
-            return synth_bmp(doc_id)
-        if k == 2:
-            return synth_png(doc_id)
-        return synth_gif(doc_id, n_frames=1 + doc_id % 5)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "data": [one(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    from aistore_spark.util import spread as _spread
-
-    return _spread(ids).mapInPandas(run, schema="doc_id bigint, data binary")
+def _media_dims(data: bytes) -> tuple[str, int, int, int]:
+    """``(media_type, width, height, n_frames)`` from the container
+    headers alone: no pixel or sample is decoded."""
+    mt = sniff_media_type(data)
+    if mt == "audio/wav":
+        return mt, 0, 0, _parse_wav(data)[3]
+    if mt == "image/bmp":
+        return mt, *_parse_bmp(data)[:2], 1
+    if mt == "image/jpeg":
+        return mt, *jpeg_dims(data)[:2], 1
+    if mt == "image/png":
+        return mt, *_parse_png(data, pixels=False)[:2], 1
+    w, h, _palette, frames = _parse_gif(data, want=lambda frame: False)
+    return mt, w, h, len(frames)
 
 
 def decode_media_meta(
@@ -1015,72 +922,10 @@ def decode_media_meta(
     (animated GIFs are the multi-frame/video case). This is the
     dispatch layer a mixed-media lake needs before routing content to
     the per-format pixel/sample decoders (mm5-mm8)."""
-    import io
-    import struct
-    import wave
-    import zlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "media_type", "width", "height", "n_frames",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                mt = sniff_media_type(data)
-                if mt == "audio/wav":
-                    with wave.open(io.BytesIO(data)) as w:
-                        width, height, frames = 0, 0, w.getnframes()
-                elif mt == "image/bmp":
-                    _hsz, bw, bh, _pl, _bpp = struct.unpack_from(
-                        "<IiiHH", data, 14
-                    )
-                    width, height, frames = bw, abs(bh), 1
-                elif mt == "image/jpeg":
-                    from aistore_spark.functions.jpegcodec import jpeg_dims
-
-                    width, height, _nc = jpeg_dims(data)
-                    frames = 1
-                elif mt == "image/png":
-                    (clen,) = struct.unpack_from(">I", data, 8)
-                    cname = data[12:16]
-                    body = data[16 : 16 + clen]
-                    (crc,) = struct.unpack_from(">I", data, 16 + clen)
-                    if cname != b"IHDR" or (
-                        zlib.crc32(cname + body) & 0xFFFFFFFF
-                    ) != crc:
-                        raise ValueError("bad PNG IHDR")
-                    pw, ph = struct.unpack_from(">II", body, 0)
-                    width, height, frames = pw, ph, 1
-                else:  # image/gif — walk blocks, count frames
-                    _gif_need(data, 0, 13)
-                    flags = data[10]
-                    pos = 13 + (3 * (2 << (flags & 0x07)) if flags & 0x80 else 0)
-                    gw, gh = struct.unpack_from("<HH", data, 6)
-                    frames = 0
-                    while _gif_byte(data, pos) != 0x3B:
-                        if data[pos] != 0x2C:
-                            raise ValueError("unsupported GIF block")
-                        _gif_need(data, pos, 11)
-                        pos += 10
-                        pos += 1  # min code size
-                        while True:
-                            blen = _gif_byte(data, pos)
-                            pos += 1
-                            if blen == 0:
-                                break
-                            _gif_need(data, pos, blen)
-                            pos += blen
-                        frames += 1
-                    width, height = gw, gh
-                rows["doc_id"].append(int(doc_id))
-                rows["media_type"].append(mt)
-                rows["width"].append(width)
-                rows["height"].append(height)
-                rows["n_frames"].append(frames)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=MEDIA_META_SCHEMA)
+    return _map_rows(
+        df, [id_col, data_col], MEDIA_META_SCHEMA,
+        lambda doc_id, data: [(doc_id, *_media_dims(data))],
+    )
 
 
 # ---- REAL resize and frame extraction over the decoded codecs -------------
@@ -1090,6 +935,15 @@ THUMB_SCHEMA = (
     "rs_height bigint, rs_mean_red bigint, rs_mean_green bigint, "
     "rs_mean_blue bigint"
 )
+
+
+def _nearest(px, target_w: int, target_h: int):
+    """Nearest-neighbor resample: output pixel ``(u, v)`` is source
+    pixel ``(u*w div target_w, v*h div target_h)``."""
+    h, w = px.shape[:2]
+    return px[
+        np.ix_(np.arange(target_h) * h // target_h, np.arange(target_w) * w // target_w)
+    ]
 
 
 def png_thumbnail(
@@ -1105,31 +959,13 @@ def png_thumbnail(
     v*h div H)``, the canonical floor mapping, so the result is
     bit-exact reproducible and the oracle can re-derive the thumbnail
     channel means straight from the source pixel formula."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "rs_width", "rs_height",
-                "rs_mean_red", "rs_mean_green", "rs_mean_blue",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                w, h, _n, rgb = decode_png_pixels(bytes(blob))
-                ux = np.array([u * w // target_w for u in range(target_w)])
-                vy = np.array([v * h // target_h for v in range(target_h)])
-                thumb = rgb[np.ix_(vy, ux)]
-                n = target_w * target_h
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["rs_width"].append(target_w)
-                rows["rs_height"].append(target_h)
-                rows["rs_mean_red"].append(int(thumb[:, :, 0].sum()) // n)
-                rows["rs_mean_green"].append(int(thumb[:, :, 1].sum()) // n)
-                rows["rs_mean_blue"].append(int(thumb[:, :, 2].sum()) // n)
-            yield pd.DataFrame(rows)
+    def row(doc_id, data):
+        w, h, _n, rgb = decode_png_pixels(data)
+        thumb = _nearest(rgb, target_w, target_h)
+        yield (doc_id, w, h, target_w, target_h, *_channel_means(thumb))
 
-    return df.mapInPandas(run, schema=THUMB_SCHEMA)
+    return _map_rows(df, [id_col, data_col], THUMB_SCHEMA, row)
 
 
 FRAME_EXTRACT_SCHEMA = (
@@ -1151,63 +987,18 @@ def gif_extract_frames(
     decoding — the selective-decode pattern a video pipeline needs.
     One output row per (doc, sampled frame) with the frame's exact
     mean palette index."""
-    import struct
 
-    import numpy as np
+    def wanted(f: int) -> bool:
+        return f % every_n == 0 and f // every_n < max_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_frames", "frame_idx", "mean_index",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                if data[:6] not in (b"GIF87a", b"GIF89a"):
-                    raise ValueError("not a GIF")
-                _gif_need(data, 0, 13)
-                flags = data[10]
-                pos = 13 + (3 * (2 << (flags & 0x07)) if flags & 0x80 else 0)
-                frames: list[tuple[int, int]] = []  # (mean, n) per sampled
-                f = 0
-                while _gif_byte(data, pos) != 0x3B:
-                    if data[pos] != 0x2C:
-                        raise ValueError("unsupported GIF block")
-                    _gif_need(data, pos + 1, 9)
-                    _ix, _iy, iw, ih, _fl = struct.unpack_from(
-                        "<HHHHB", data, pos + 1
-                    )
-                    pos += 10
-                    min_code = _gif_byte(data, pos)
-                    pos += 1
-                    wanted = (f % every_n == 0) and (
-                        f // every_n < max_frames
-                    )
-                    lzw = bytearray()
-                    while True:
-                        blen = _gif_byte(data, pos)
-                        pos += 1
-                        if blen == 0:
-                            break
-                        _gif_need(data, pos, blen)
-                        if wanted:
-                            lzw += data[pos : pos + blen]
-                        pos += blen  # skipped frames: no decode at all
-                    if wanted:
-                        idx = np.frombuffer(
-                            _lzw_decode(bytes(lzw), min_code), dtype=np.uint8
-                        )
-                        frames.append(
-                            (f, int(idx.astype(np.int64).sum()) // (iw * ih))
-                        )
-                    f += 1
-                for fi, mean in frames:
-                    rows["doc_id"].append(int(doc_id))
-                    rows["n_frames"].append(f)
-                    rows["frame_idx"].append(fi)
-                    rows["mean_index"].append(mean)
-            yield pd.DataFrame(rows)
+    def row(doc_id, data):
+        _w, _h, _palette, frames = _parse_gif(data, wanted)
+        for f, (iw, ih, _fl, min_code, lzw) in enumerate(frames):
+            if lzw is not None:
+                mean = int(_gif_indices(lzw, min_code).sum()) // (iw * ih)
+                yield (doc_id, len(frames), f, mean)
 
-    return df.mapInPandas(run, schema=FRAME_EXTRACT_SCHEMA)
+    return _map_rows(df, [id_col, data_col], FRAME_EXTRACT_SCHEMA, row)
 
 
 GRID_FEATURE_SCHEMA = (
@@ -1224,34 +1015,19 @@ def png_grid_features(
     — the classic hand-crafted image descriptor a learned embedding
     replaces). One row per (doc, grid cell) with exact integer channel
     means; cell of pixel (x, y) is ``(2x div w, 2y div h)``."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "qx", "qy", "n_px",
-                "mean_red", "mean_green", "mean_blue",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                w, h, _n, rgb = decode_png_pixels(bytes(blob))
-                qx = (2 * np.arange(w)) // w
-                qy = (2 * np.arange(h)) // h
-                for gy in (0, 1):
-                    for gx in (0, 1):
-                        cell = rgb[np.ix_(qy == gy, qx == gx)]
-                        n = cell.shape[0] * cell.shape[1]
-                        if n == 0:
-                            continue
-                        rows["doc_id"].append(int(doc_id))
-                        rows["qx"].append(gx)
-                        rows["qy"].append(gy)
-                        rows["n_px"].append(n)
-                        rows["mean_red"].append(int(cell[:, :, 0].sum()) // n)
-                        rows["mean_green"].append(int(cell[:, :, 1].sum()) // n)
-                        rows["mean_blue"].append(int(cell[:, :, 2].sum()) // n)
-            yield pd.DataFrame(rows)
+    def row(doc_id, data):
+        w, h, _n, rgb = decode_png_pixels(data)
+        qx = (2 * np.arange(w)) // w
+        qy = (2 * np.arange(h)) // h
+        for gy in (0, 1):
+            for gx in (0, 1):
+                cell = rgb[np.ix_(qy == gy, qx == gx)]
+                n = cell.shape[0] * cell.shape[1]
+                if n:
+                    yield (doc_id, gx, gy, n, *_channel_means(cell))
 
-    return df.mapInPandas(run, schema=GRID_FEATURE_SCHEMA)
+    return _map_rows(df, [id_col, data_col], GRID_FEATURE_SCHEMA, row)
 
 
 TRANSCODE_SCHEMA = (
@@ -1271,46 +1047,17 @@ def transcode_bmp_to_png(
     is the image-ETL transform surface (the reference's transform
     templates re-encode media the same way). ``png_bytes`` is the real
     compressed size (not oracle-checkable; the means are)."""
-    import struct
 
-    import numpy as np
+    def row(doc_id, data):
+        w, h, bpp, _stride, rows = _parse_bmp(data)
+        if bpp != 24:
+            raise ValueError(f"unsupported BMP bpp {bpp}")
+        rgb = rows[:, : 3 * w].reshape(h, w, 3)[:, :, ::-1]
+        png = encode_png_rgb([bytes(r.reshape(-1)) for r in rgb], w)
+        pw, ph, _n, back = decode_png_pixels(png)
+        yield (doc_id, pw, ph, len(png), *_channel_means(back))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "png_bytes",
-                "mean_red", "mean_green", "mean_blue",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                magic, _fsz, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
-                if magic != b"BM":
-                    raise ValueError("not a BMP")
-                _hsz, w, h, _pl, bpp = struct.unpack_from("<IiiHH", data, 14)
-                if bpp != 24:
-                    raise ValueError(f"unsupported BMP bpp {bpp}")
-                stride = (3 * w + 3) & ~3
-                px = np.frombuffer(
-                    data, dtype=np.uint8, count=stride * abs(h), offset=off
-                ).reshape(abs(h), stride)
-                bgr = px[:, : 3 * w].reshape(abs(h), w, 3)
-                if h > 0:  # bottom-up: flip to top-down
-                    bgr = bgr[::-1]
-                rgb = bgr[:, :, ::-1]  # BGR -> RGB
-                raw_rows = [bytes(rgb[y].reshape(-1)) for y in range(abs(h))]
-                png = encode_png_rgb(raw_rows, w)
-                pw, ph, _n, back = decode_png_pixels(png)
-                n = pw * ph
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(pw)
-                rows["height"].append(ph)
-                rows["png_bytes"].append(len(png))
-                rows["mean_red"].append(int(back[:, :, 0].sum()) // n)
-                rows["mean_green"].append(int(back[:, :, 1].sum()) // n)
-                rows["mean_blue"].append(int(back[:, :, 2].sum()) // n)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=TRANSCODE_SCHEMA)
+    return _map_rows(df, [id_col, data_col], TRANSCODE_SCHEMA, row)
 
 
 # ---- real lossy-DCT image codec (baseline JFIF) ---------------------------
@@ -1324,22 +1071,9 @@ JPEG_META_SCHEMA = (
 
 def synth_jpeg_frame(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Attach a real synthesized baseline-JFIF binary column per id
-    row (mapInPandas — the generator stands in for an object-store
-    read of a JPEG shard)."""
-    from aistore_spark.functions.jpegcodec import synth_jpeg
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "img": [synth_jpeg(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    from aistore_spark.util import spread as _spread
-
-    return _spread(ids).mapInPandas(run, schema="doc_id bigint, img binary")
+    row (the generator stands in for an object-store read of a JPEG
+    shard)."""
+    return _synth_frame(ids, id_col, "img", synth_jpeg)
 
 
 def decode_jpeg_meta(
@@ -1353,39 +1087,22 @@ def decode_jpeg_meta(
     lossy transform family: PCM (mm5), raw bitmap (mm6), DEFLATE/PNG
     (mm7), LZW/GIF (mm8), DCT/JPEG (mm10) — the container the
     reference's torchvision/keras image ETL actually transforms
-    (python/aistore/sdk/etl/etl_templates.py)."""
-    from aistore_spark.functions.jpegcodec import decode_jpeg
+    (python/aistore/sdk/etl/etl_templates.py). ``q00_luma`` is the
+    file-carried luma Q00 from the parsed DQT — the oracle recomputes
+    it from the quality-scaling closed form, pinning the DQT round
+    trip."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(doc_id, data):
+        info, planes = decode_jpeg(data)
+        means = [int(p.astype(np.int64).sum()) // p.size for p in planes]
+        cb, cr = means[1:] if len(means) > 1 else (-1, -1)
+        yield (
+            doc_id, info["width"], info["height"], info["n_components"],
+            info["n_blocks"], info["restart_interval"], info["q00_luma"],
+            means[0], cb, cr,
+        )
 
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_components", "n_blocks",
-                "restart_interval", "q00_luma", "mean_y", "mean_cb",
-                "mean_cr",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                info, planes = decode_jpeg(bytes(blob))
-                means = [
-                    int(p.astype(np.int64).sum()) // p.size for p in planes
-                ]
-                rows["doc_id"].append(int(doc_id))
-                rows["width"].append(info["width"])
-                rows["height"].append(info["height"])
-                rows["n_components"].append(info["n_components"])
-                rows["n_blocks"].append(info["n_blocks"])
-                rows["restart_interval"].append(info["restart_interval"])
-                # file-carried luma Q00 from the parsed DQT — the
-                # oracle recomputes it from the quality-scaling closed
-                # form, pinning the DQT round trip
-                rows["q00_luma"].append(info["q00_luma"])
-                rows["mean_y"].append(means[0])
-                rows["mean_cb"].append(means[1] if len(means) > 1 else -1)
-                rows["mean_cr"].append(means[2] if len(means) > 1 else -1)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=JPEG_META_SCHEMA)
+    return _map_rows(df, [id_col, data_col], JPEG_META_SCHEMA, row)
 
 
 # ---- real rational audio resample (the ffmpeg_audio surface) --------------
@@ -1408,10 +1125,6 @@ def resample_pcm(pcm, src_rate: int, dst_rate: int):
     integer division in both Spark and DuckDB — so the whole resampler
     has a closed form an oracle can recompute (numpy floor-division
     alone would floor negatives and drift by 1)."""
-    import math
-
-    import numpy as np
-
     if src_rate <= 0 or dst_rate <= 0:
         raise ValueError("sample rates must be positive")
     pcm = np.asarray(pcm, dtype=np.int64)
@@ -1432,17 +1145,9 @@ def resample_wav_bytes(data: bytes, dst_rate: int) -> bytes:
     """Decode a 16-bit mono WAV, resample (resample_pcm), and re-encode
     a REAL container at the target rate — the ffmpeg -ar analogue as a
     bytes->bytes transform (pluggable into the canned-ETL registry)."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(data)) as w:
-        if w.getsampwidth() != 2 or w.getnchannels() != 1:
-            raise ValueError("resample profile: 16-bit mono PCM")
-        src = w.getframerate()
-        pcm_raw = w.readframes(w.getnframes())
-    import numpy as np
-
-    pcm = np.frombuffer(pcm_raw, dtype="<i2")
+    nch, sw, src, _nf, pcm = _parse_wav(data)
+    if sw != 2 or nch != 1:
+        raise ValueError("resample profile: 16-bit mono PCM")
     out = resample_pcm(pcm, src, dst_rate)
     buf = io.BytesIO()
     with wave.open(buf, "wb") as ww:
@@ -1466,48 +1171,23 @@ def resample_wav(
     change, and sample math are all on the verified path.
     ``dst_rate_of(doc_id)`` picks the per-row target (up- and
     down-sampling in one pass)."""
-    import io
-    import math
-    import wave
-
-    import numpy as np
-
     dst_rate_of = dst_rate_of or (lambda d: 16000)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "src_rate", "dst_rate", "n_frames_in",
-                "n_frames_out", "first_out", "last_out", "rms_out",
-                "n_bytes",
-            )}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                data = bytes(blob)
-                with wave.open(io.BytesIO(data)) as w:
-                    src, n_in = w.getframerate(), w.getnframes()
-                dst = dst_rate_of(int(doc_id))
-                enc = resample_wav_bytes(data, dst)
-                with wave.open(io.BytesIO(enc)) as w2:
-                    if w2.getframerate() != dst:
-                        raise ValueError("re-encoded rate drifted")
-                    back = np.frombuffer(
-                        w2.readframes(w2.getnframes()), dtype="<i2"
-                    ).astype(np.int64)
-                n_out = len(back)
-                rows["doc_id"].append(int(doc_id))
-                rows["src_rate"].append(src)
-                rows["dst_rate"].append(dst)
-                rows["n_frames_in"].append(n_in)
-                rows["n_frames_out"].append(n_out)
-                rows["first_out"].append(int(back[0]) if n_out else 0)
-                rows["last_out"].append(int(back[-1]) if n_out else 0)
-                rows["rms_out"].append(
-                    math.isqrt(int((back * back).sum()) // max(n_out, 1))
-                )
-                rows["n_bytes"].append(len(enc))
-            yield pd.DataFrame(rows)
+    def row(doc_id, data):
+        _nch, _sw, src, n_in, _pcm = _parse_wav(data)
+        dst = dst_rate_of(doc_id)
+        enc = resample_wav_bytes(data, dst)
+        _nch, _sw, rate, _nf, back = _parse_wav(enc)
+        if rate != dst:
+            raise ValueError("re-encoded rate drifted")
+        n_out = len(back)
+        yield (
+            doc_id, src, dst, n_in, n_out,
+            int(back[0]) if n_out else 0, int(back[-1]) if n_out else 0,
+            _rms(back), len(enc),
+        )
 
-    return df.mapInPandas(run, schema=RESAMPLE_SCHEMA)
+    return _map_rows(df, [id_col, data_col], RESAMPLE_SCHEMA, row)
 
 
 DHASH_SCHEMA = "doc_id bigint, band int, val bigint"
@@ -1525,42 +1205,21 @@ def png_dhash(
     ``(doc_id, band, val)``), which keeps every value unsigned-exact
     in a BIGINT and is already the shape the LSH band join wants.
 
-    Scale: Arrow-batched mapInPandas decode (the only Python stage);
+    Scale: the Arrow-batched decode is the only Python stage;
     everything downstream is band-keyed DataFrame joins. The input
     is spread() so single-row-group fixtures still decode on all
     cores (no-op on naturally-split data).
     """
-    import numpy as np
 
-    from aistore_spark.util import spread
+    def row(doc_id, data):
+        s = _nearest(decode_png_pixels(data)[3], 9, 8)
+        gray = (299 * s[:, :, 0] + 587 * s[:, :, 1] + 114 * s[:, :, 2]) // 1000
+        bits = (gray[:, 1:] > gray[:, :-1]).reshape(-1)  # idx = v*8 + u
+        for band in range(4):
+            word = bits[band * 16 : band * 16 + 16]
+            yield (doc_id, band, sum(int(b) << i for i, b in enumerate(word)))
 
-    df = spread(df)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "band": [], "val": []}
-            for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
-                w, h, _n, rgb = decode_png_pixels(bytes(blob))
-                ux = np.array([u * w // 9 for u in range(9)])
-                vy = np.array([v * h // 8 for v in range(8)])
-                sample = rgb[np.ix_(vy, ux)]
-                gray = (
-                    299 * sample[:, :, 0]
-                    + 587 * sample[:, :, 1]
-                    + 114 * sample[:, :, 2]
-                ) // 1000
-                bits = (gray[:, 1:] > gray[:, :-1]).astype(np.int64)
-                flat = bits.reshape(-1)  # idx = v*8 + u, row-major
-                for band in range(4):
-                    val = 0
-                    for i in range(16):
-                        val |= int(flat[band * 16 + i]) << i
-                    out["doc_id"].append(int(doc_id))
-                    out["band"].append(band)
-                    out["val"].append(val)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=DHASH_SCHEMA)
+    return _map_rows(spread(df), [id_col, data_col], DHASH_SCHEMA, row)
 
 
 def dhash_pairs(bands: DataFrame, max_hamming: int = 3) -> DataFrame:

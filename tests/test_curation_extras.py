@@ -407,50 +407,129 @@ def test_media_dispatch_animated_gif_frames(spark):
 
 
 def test_truncated_gif_raises_value_error():
-    """Regression (ADVICE r5): every GIF block walk must raise the
-    ValueError('truncated GIF') contract on a cut-short container —
-    never a raw IndexError/struct.error — matching the hardened
-    lz4frame/_lzw_decode decoders."""
-    from aistore_spark.operators.multimodal import (
-        _gif_byte,
-        _gif_need,
-        synth_gif,
-    )
+    """Regression (ADVICE r5): every container parser must raise
+    ValueError on a cut-short container — never a raw
+    IndexError/struct.error — matching the hardened lz4frame/_lzw_decode
+    decoders. The GIF primitives raise the 'truncated GIF' message."""
+    from aistore_spark.operators import multimodal as mm
 
-    full = synth_gif(7, n_frames=3)
     # exercise the primitives directly
     with pytest.raises(ValueError, match="truncated GIF"):
-        _gif_byte(b"ab", 2)
+        mm._gif_byte(b"ab", 2)
     with pytest.raises(ValueError, match="truncated GIF"):
-        _gif_need(b"abcd", 2, 3)
-    _gif_need(b"abcd", 2, 2)  # exact fit is fine
+        mm._need(b"abcd", 2, 3, "GIF")
+    mm._need(b"abcd", 2, 2, "GIF")  # exact fit is fine
 
-    # every strict prefix of a real GIF must raise ValueError from the
-    # container walk (or decode cleanly if it happens to end at the
-    # trailer — only the full blob does)
-    for cut in range(6, len(full) - 1, max(1, len(full) // 40)):
-        blob = full[:cut]
-        try:
-            _walk_gif(blob)
-        except ValueError:
-            continue
-        raise AssertionError(f"prefix of len {cut} did not raise ValueError")
+    # every strict prefix of a real container must raise ValueError
+    # from its parser (the GIF walk is the one decode_gif_meta,
+    # gif_extract_frames and decode_media_meta share); the full blob
+    # parses
+    for parse, full in (
+        (mm._parse_gif, mm.synth_gif(7, n_frames=3)),
+        (mm._parse_wav, mm.synth_wav(7)),
+        (mm._parse_bmp, mm.synth_bmp(7)),
+        (mm._parse_png, mm.synth_png(7)),
+    ):
+        parse(full)
+        for cut in range(len(full)):
+            try:
+                parse(full[:cut])
+            except ValueError:
+                continue
+            raise AssertionError(
+                f"{parse.__name__}: prefix of len {cut} did not raise ValueError"
+            )
+
+    # a well-formed container whose IDAT inflates one scanline short,
+    # or does not inflate at all, raises ValueError too
+    import struct
+    import zlib
+
+    ihdr = mm._png_chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 3, 8, 2, 0, 0, 0))
+    for idat in (zlib.compress(bytes(2 * 13)), b"not zlib"):
+        blob = (
+            mm.PNG_SIGNATURE + ihdr + mm._png_chunk(b"IDAT", idat)
+            + mm._png_chunk(b"IEND", b"")
+        )
+        with pytest.raises(ValueError, match="PNG"):
+            mm.decode_png_pixels(blob)
 
 
-def _walk_gif(data):
-    """Drive the same walk decode_gif_meta runs, via the public
-    mapInPandas-free path: reuse the pandas batch runner on one row."""
-    import pandas as pd
+def _gif_with_local_tables(doc_id: int, n_frames: int) -> bytes:
+    """synth_gif's pixels, but every image block carries a 4-entry
+    local color table (flag 0x81) whose bytes look like block data."""
+    import struct
 
     from aistore_spark.operators import multimodal as mm
 
-    # call the inner runner through a tiny fake batch iterator so the
-    # test doesn't need a SparkSession
-    class _FakeDF:
-        def mapInPandas(self, fn, schema):
-            return list(fn(iter([pd.DataFrame({"doc_id": [1], "img": [data]})])))
+    full = mm.synth_gif(doc_id)
+    w, h = struct.unpack_from("<HH", full, 6)
+    out = bytearray(full[: 13 + 768])  # header + global table
+    for f in range(n_frames):
+        lzw = mm._lzw_encode(bytes(
+            (doc_id + 3 * x + 5 * y + 11 * f) % 256
+            for y in range(h) for x in range(w)
+        ))
+        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0x81)
+        out += bytes([0x21, 0x2C, 0x3B] * 4)
+        out.append(8)
+        for i in range(0, len(lzw), 255):
+            out.append(len(lzw[i : i + 255]))
+            out += lzw[i : i + 255]
+        out.append(0)
+    return bytes(out) + b"\x3b"
 
-    return mm.decode_gif_meta(_FakeDF())
+
+def test_gif_local_color_table_is_skipped(spark):
+    """A local color table is skipped by the shared GIF walk, never
+    read as image data: the dispatcher reports the true dimensions and
+    frame count and frame extraction decodes the right frames, while
+    decode_gif_meta's profile still rejects the table."""
+    from aistore_spark.operators import multimodal as mm
+
+    d, nf = 19, 4
+    w, h = 6 + d % 27, 4 + d % 19
+    blob = _gif_with_local_tables(d, nf)
+    df = spark.createDataFrame([(d, blob)], "doc_id bigint, img binary")
+
+    r = mm.decode_media_meta(df, data_col="img").collect()[0]
+    assert (r.media_type, r.width, r.height, r.n_frames) == (
+        "image/gif", w, h, nf
+    )
+    got = [
+        (r.n_frames, r.frame_idx, r.mean_index)
+        for r in mm.gif_extract_frames(df, every_n=2, max_frames=3).collect()
+    ]
+    want = [
+        (nf, f, sum((d + 3 * x + 5 * y + 11 * f) % 256
+                    for y in range(h) for x in range(w)) // (w * h))
+        for f in (0, 2)
+    ]
+    assert sorted(got) == want
+    with pytest.raises(Exception, match="local table/interlace unsupported"):
+        mm.decode_gif_meta(df).collect()
+
+
+def test_map_rows_empty_output_keeps_schema(spark):
+    """The Arrow batch helper: an empty input frame, and rows that all
+    yield zero tuples, give an empty output with the declared types."""
+    from pyspark.sql.types import StructType
+
+    from aistore_spark.operators import multimodal as mm
+
+    ids = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
+    empty = mm.decode_png_meta(
+        mm.synth_png_frame(ids).where(F.col("doc_id") < 0)
+    )
+    assert empty.collect() == []
+    assert empty.schema == StructType.fromDDL(mm.PNG_META_SCHEMA)
+    schema = "doc_id bigint, band int, name string, data binary"
+    none = mm._map_rows(ids, ["doc_id"], schema, lambda doc_id: [])
+    assert none.collect() == []
+    assert none.dtypes == [
+        ("doc_id", "bigint"), ("band", "int"),
+        ("name", "string"), ("data", "binary"),
+    ]
 
 
 def test_dup_pipeline_shares_verified_pairs_one_execution(spark, sf_dir):

@@ -44,7 +44,8 @@ SNAPSHOT = REPO / "tests" / "driver_green_fps.json"
 #: reads/writes (sources/io_fixtures.py) the io family executes;
 #: s4b covers the shared catalog view derivations (catalog.py + the
 #: _objects/_members/_requests/_io_members builders in
-#: benchqueries.py, matched by AST name below).
+#: benchqueries.py, matched by AST name below); mm12 covers the
+#: media parsers and Arrow stages every mm/t9-t11 query runs through.
 HELPER_SENTINELS: dict[str, list[str]] = {
     "p2_extract_member": [
         "aistore_spark/sources/tables.py",
@@ -58,6 +59,9 @@ HELPER_SENTINELS: dict[str, list[str]] = {
     ],
     "s4b_zip_listing": [
         "aistore_spark/catalog.py",
+    ],
+    "mm12_media_decode_io": [
+        "aistore_spark/operators/multimodal.py",
     ],
 }
 
