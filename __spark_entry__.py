@@ -74,8 +74,9 @@ DRIVER_CHECK_PRIORITY = [
     "g3_output_formats",
     "p1_pack_archive",
     # operator-family representatives
-    "tx5c_bpe_doc_tokens",
-    "dd10_substring_spans",
+    "t13_face_detect",
+    "mm8_gif_decode",
+    "p3_extract_regex_pack",
     "pipe4_quality_gate",
     "pipe3_dedup_report",
     "dd6_simhash_pairs",
@@ -88,7 +89,6 @@ DRIVER_CHECK_PRIORITY = [
     "mm11_dhash_neardup",
     "mm9_media_dispatch",
     "mm4b_gif_frame_extract",
-    "st1_dedup_stream_mirror",
 ]
 
 

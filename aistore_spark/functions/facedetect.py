@@ -26,6 +26,8 @@ import struct
 
 import numpy as np
 
+from aistore_spark.operators.multimodal import _parse_bmp
+
 WINDOW = 16
 STRIDE = 8
 BG, SKIN, EYE, MOUTH = 200, 180, 60, 80
@@ -76,21 +78,13 @@ def encode_bmp_gray(img: np.ndarray) -> bytes:
 
 
 def decode_bmp_gray(data: bytes) -> np.ndarray:
-    """Decode a 24-bpp bottom-up BMP to a top-down (h, w) gray array
-    (blue channel; the synthetic images carry equal channels)."""
-    if len(data) < 54:
-        raise ValueError("not a BMP (truncated header)")
-    magic, _fsz, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
-    if magic != b"BM":
-        raise ValueError("not a BMP")
-    _hsz, w, h, _pl, bpp = struct.unpack_from("<IiiHH", data, 14)
-    if bpp != 24 or h <= 0:
-        raise ValueError("need 24-bpp bottom-up BMP")
-    stride = (3 * w + 3) & ~3
-    if off + stride * h > len(data):
-        raise ValueError("truncated BMP pixel array")
-    px = np.frombuffer(data, dtype=np.uint8, count=stride * h, offset=off)
-    return px.reshape(h, stride)[::-1, 0 : 3 * w : 3]
+    """Decode a 24-bpp BMP (bottom-up or top-down) to a top-down
+    (h, w) gray array (blue channel; the synthetic images carry equal
+    channels)."""
+    w, _h, bpp, _stride, rows = _parse_bmp(data)
+    if bpp != 24:
+        raise ValueError(f"unsupported BMP bpp {bpp} (need 24)")
+    return rows[:, 0 : 3 * w : 3]
 
 
 def _integral(img: np.ndarray) -> np.ndarray:

@@ -5,9 +5,11 @@ objects into shards (``xact/xs/archive.go``), extract single members or
 regex matches (``ais/tgtobj.go:1341-1400``), and assemble get-batch
 responses as TARs in exact request order (``xact/xs/moss.go:637-749``).
 
-Spark-first: packing is ``groupBy(dst_shard).applyInPandas(tar_builder)``
-— one builder per output shard, embarrassingly parallel, each group
-sized by the packing policy (D6) so memory per task is bounded. The
+Spark-first: every pack is the engine's group map,
+``util.map_groups(df, dst_shard, order, cols, schema, builder)`` — one
+builder call per output shard on its order-sorted column lists,
+embarrassingly parallel, each group sized by the packing policy (D6)
+so memory per task is bounded. The
 member *catalog* (P5's shard index) is how extraction avoids touching
 tar bytes at all: P2/P3 are catalog filters.
 
@@ -28,11 +30,11 @@ import io
 import tarfile
 from collections.abc import Iterable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aistore_spark.sources.binary import _iter_members
+from aistore_spark.util import map_groups
 
 TAR_BLOCK = 512
 TAR_EOF = 1024  # two zero blocks
@@ -118,6 +120,12 @@ def synth_payload(member: str, key_str: str) -> bytes:
     return f"{member}:{key_str}".encode("ascii")
 
 
+def _entries_md5(names: list[str]) -> str:
+    """md5 of the comma-joined *names*: the fingerprint of an archive's
+    exact entry order."""
+    return hashlib.md5(",".join(names).encode()).hexdigest()
+
+
 def pack_members(
     members: DataFrame,
     shard_col: str = "shard",
@@ -135,30 +143,18 @@ def pack_members(
         f"{shard_col} string, n_members bigint, payload_bytes bigint, "
         "tar_bytes bigint, entries_md5 string"
     )
-    order = list(order_cols)
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order, kind="mergesort")
-        payloads = [
-            synth_payload(m, k) for m, k in zip(pdf["member"], pdf["key_str"])
-        ]
-        tar = build_tar(list(pdf["member"]), payloads)
-        fp = hashlib.md5(",".join(pdf["member"]).encode()).hexdigest()
-        return pd.DataFrame(
-            {
-                shard_col: [pdf[shard_col].iloc[0]],
-                "n_members": [len(pdf)],
-                "payload_bytes": [sum(len(p) for p in payloads)],
-                "tar_bytes": [len(tar)],
-                "entries_md5": [fp],
-            }
+    def pack(shards, names, keys):
+        payloads = [synth_payload(m, k) for m, k in zip(names, keys)]
+        tar = build_tar(names, payloads)
+        yield (
+            shards[0], len(names), sum(map(len, payloads)), len(tar),
+            _entries_md5(names),
         )
 
-    n = members.sparkSession.sparkContext.defaultParallelism
-    return (
-        members.repartition(n, shard_col)
-        .groupBy(shard_col)
-        .applyInPandas(pack, schema=schema)
+    return map_groups(
+        members, shard_col, list(order_cols),
+        [shard_col, "member", "key_str"], schema, pack,
     )
 
 
@@ -203,12 +199,9 @@ def assemble_batches(
 
     Scale: one task per batch; a batch is bounded by the loader's
     request size, so payload materialization per task is bounded. The
-    shuffle is on ``batch_col`` only — via an explicit
-    ``repartition(defaultParallelism, batch_col)``: the shuffled rows
-    are tiny (name+size) but the per-group pack is CPU-bound, so AQE's
-    byte-based partition coalescing would serialize the builders onto
-    2-3 tasks; a user-specified partition count keeps the pack wide
-    and satisfies the groupBy's clustering, so no second exchange.
+    shuffle is on ``batch_col`` only, at full default parallelism
+    (``util.map_groups``): the shuffled rows are tiny (name+size) but
+    the per-group pack is CPU-bound.
     """
     builder = ARCHIVE_BUILDERS[output_format]
     schema = (
@@ -216,30 +209,20 @@ def assemble_batches(
         "payload_bytes bigint, tar_bytes bigint, entries_md5 string"
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("req_idx", kind="mergesort")
-        payloads = [b"\0" * int(s) for s in pdf["size"]]
-        tar = builder(list(pdf["out_name"]), payloads)
-        fp = hashlib.md5(",".join(pdf["out_name"]).encode()).hexdigest()
-        return pd.DataFrame(
-            {
-                batch_col: [pdf[batch_col].iloc[0]],
-                "n_entries": [len(pdf)],
-                # every error kind lands under __404__/ (missing object,
-                # missing archived file, unsatisfiable range) — moss.go
-                # addMissingIn handles them uniformly
-                "n_missing": [int((pdf["status"] != "ok").sum())],
-                "payload_bytes": [int(pdf["size"].sum())],
-                "tar_bytes": [len(tar)],
-                "entries_md5": [fp],
-            }
+    def pack(batch, names, sizes, statuses):
+        tar = builder(names, [b"\0" * n for n in sizes])
+        yield (
+            batch[0], len(names),
+            # every error kind lands under __404__/ (missing object,
+            # missing archived file, unsatisfiable range) — moss.go
+            # addMissingIn handles them uniformly
+            sum(st != "ok" for st in statuses),
+            sum(sizes), len(tar), _entries_md5(names),
         )
 
-    n = joined.sparkSession.sparkContext.defaultParallelism
-    return (
-        joined.repartition(n, batch_col)
-        .groupBy(batch_col)
-        .applyInPandas(pack, schema=schema)
+    return map_groups(
+        joined, batch_col, ["req_idx"],
+        [batch_col, "out_name", "size", "status"], schema, pack,
     )
 
 
@@ -258,10 +241,10 @@ def assemble_batches_bytes(
     the scan, not just names and sizes. Missing entries contribute the
     empty payload (md5 of b"" — the sentinel's 0-byte body).
 
-    Scale: same shuffle contract as :func:`assemble_batches` (explicit
-    ``repartition(defaultParallelism, batch_col)``, bounded payload per
-    task) — only the payload bytes now ride the shuffle, which is the
-    honest cost of a disk-backed get-batch.
+    Scale: same shuffle contract as :func:`assemble_batches` (on
+    ``batch_col`` only, bounded payload per task) — only the payload
+    bytes now ride the shuffle, which is the honest cost of a
+    disk-backed get-batch.
     """
     schema = (
         f"{batch_col} bigint, n_entries bigint, n_missing bigint, "
@@ -269,33 +252,18 @@ def assemble_batches_bytes(
         "content_md5 string"
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("req_idx", kind="mergesort")
-        payloads = [
-            bytes(p) if p is not None else b"" for p in pdf["payload"]
-        ]
-        tar = build_tar(list(pdf["out_name"]), payloads)
-        fp = hashlib.md5(",".join(pdf["out_name"]).encode()).hexdigest()
-        cfp = hashlib.md5(
-            ",".join(hashlib.md5(p).hexdigest() for p in payloads).encode()
-        ).hexdigest()
-        return pd.DataFrame(
-            {
-                batch_col: [pdf[batch_col].iloc[0]],
-                "n_entries": [len(pdf)],
-                "n_missing": [int((pdf["status"] != "ok").sum())],
-                "payload_bytes": [sum(len(p) for p in payloads)],
-                "tar_bytes": [len(tar)],
-                "entries_md5": [fp],
-                "content_md5": [cfp],
-            }
+    def pack(batch, names, payloads, statuses):
+        payloads = [b"" if p is None else p for p in payloads]
+        tar = build_tar(names, payloads)
+        cfp = _entries_md5([hashlib.md5(p).hexdigest() for p in payloads])
+        yield (
+            batch[0], len(names), sum(st != "ok" for st in statuses),
+            sum(map(len, payloads)), len(tar), _entries_md5(names), cfp,
         )
 
-    n = joined.sparkSession.sparkContext.defaultParallelism
-    return (
-        joined.repartition(n, batch_col)
-        .groupBy(batch_col)
-        .applyInPandas(pack, schema=schema)
+    return map_groups(
+        joined, batch_col, ["req_idx"],
+        [batch_col, "out_name", "payload", "status"], schema, pack,
     )
 
 
@@ -331,17 +299,11 @@ def assemble_batches_formats(
         "payload_bytes bigint, check_bytes bigint, entries_md5 string"
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(batch, names, sizes):
         from aistore_spark.functions import lz4frame
 
-        pdf = pdf.sort_values("req_idx", kind="mergesort")
-        names = list(pdf["out_name"])
-        payloads = [b"\0" * int(s) for s in pdf["size"]]
-        fp = hashlib.md5(",".join(names).encode()).hexdigest()
-        rows: dict[str, list] = {
-            batch_col: [], "format": [], "n_entries": [],
-            "payload_bytes": [], "check_bytes": [], "entries_md5": [],
-        }
+        payloads = [b"\0" * n for n in sizes]
+        fp = _entries_md5(names)
         # tar, tgz and tar.lz4 share one underlying USTAR stream: build
         # it once per batch instead of three times. The compression
         # settings for the two round-trip formats are free to differ
@@ -358,8 +320,7 @@ def assemble_batches_formats(
 
         for fmt in formats:
             if fmt == "tar":
-                blob = tar_stream()
-                check = len(blob)
+                check = len(tar_stream())
             elif fmt == "tgz":
                 blob = gzip.compress(tar_stream(), compresslevel=1, mtime=0)
                 check = len(gzip.decompress(blob))
@@ -367,21 +328,12 @@ def assemble_batches_formats(
                 blob = lz4frame.compress(tar_stream(), bd_code=7)
                 check = len(lz4frame.decompress(blob))
             else:  # zip: the archive size is the closed form
-                blob = builders[fmt](names, payloads)
-                check = len(blob)
-            rows[batch_col].append(int(pdf[batch_col].iloc[0]))
-            rows["format"].append(fmt)
-            rows["n_entries"].append(len(pdf))
-            rows["payload_bytes"].append(int(pdf["size"].sum()))
-            rows["check_bytes"].append(check)
-            rows["entries_md5"].append(fp)
-        return pd.DataFrame(rows)
+                check = len(builders[fmt](names, payloads))
+            yield batch[0], fmt, len(names), sum(sizes), check, fp
 
-    n = joined.sparkSession.sparkContext.defaultParallelism
-    return (
-        joined.repartition(n, batch_col)
-        .groupBy(batch_col)
-        .applyInPandas(pack, schema=schema)
+    return map_groups(
+        joined, batch_col, ["req_idx"],
+        [batch_col, "out_name", "size"], schema, pack,
     )
 
 
@@ -408,22 +360,16 @@ def round_trip_listing(
     sel = members.groupBy("member").agg(F.min("key_str").alias("key_str"))
     build = ARCHIVE_BUILDERS[fmt]
 
-    def pack_expand(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("member", kind="mergesort")
-        names = list(pdf["member"])
-        payloads = [synth_payload(m, k) for m, k in zip(names, pdf["key_str"])]
+    def pack_expand(names, keys):
+        payloads = [synth_payload(m, k) for m, k in zip(names, keys)]
         listed = _iter_members(f"x.{fmt}", build(names, payloads), False)
-        return pd.DataFrame(
-            [(m, off, size) for m, off, size, _ in listed],
-            columns=["member", offset_col, "size"],
-        )
+        for member, offset, size, _ in listed:
+            yield member, offset, size
 
-    return (
-        sel.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(
-            pack_expand, schema=f"member string, {offset_col} bigint, size bigint"
-        )
+    return map_groups(
+        sel.withColumn("_g", F.lit(1)), "_g", ["member"],
+        ["member", "key_str"],
+        f"member string, {offset_col} bigint, size bigint", pack_expand,
     )
 
 

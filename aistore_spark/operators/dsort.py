@@ -46,7 +46,12 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aistore_spark.util import local_frame, pin, release_cached  # noqa: F401  (re-export)
+from aistore_spark.util import (  # noqa: F401  (re-export)
+    local_frame,
+    map_groups,
+    pin,
+    release_cached,
+)
 
 
 def sized_partitions(
@@ -249,43 +254,26 @@ def estimate_pack_ratio(
     Payloads come from *data_col* (binary) when given, else the
     deterministic ``synth_payload(name, key)`` used by
     :func:`archive.pack_members`. *order_cols* must be column NAMES
-    (the trial pack re-sorts pandas-side like the creation phase).
+    (the trial pack re-sorts each shard by them, like the creation
+    phase).
 
     Scale shape: the trial packs only ``n_sample × shard_size``
-    payload bytes through ``applyInPandas`` groups (one per sampled
-    shard) and collects n_sample manifest rows — cost independent of
-    corpus size.
+    payload bytes through the group map (``util.map_groups``, one
+    group per sampled shard) and collects n_sample manifest rows —
+    cost independent of corpus size.
     """
-    from aistore_spark.operators import archive as _arch
+    from aistore_spark.operators.archive import ARCHIVE_BUILDERS, synth_payload
 
-    builders = {
-        "tar": _arch.build_tar,
-        "tgz": _arch.build_tgz,
-        "zip": _arch.build_zip,
-        "tar.lz4": _arch.build_tar_lz4,
-    }
-    if fmt not in builders:
-        raise ValueError(f"fmt={fmt!r}; expected one of {sorted(builders)}")
-    build = builders[fmt]
-
-    import pandas as pd  # noqa: PLC0415
-
-    def trial(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(list(order_cols), kind="mergesort")
-        if data_col is not None:
-            payloads = [bytes(b) for b in pdf[data_col]]
-        else:
-            payloads = [
-                _arch.synth_payload(m, k)
-                for m, k in zip(pdf[name_col], pdf[key_col])
-            ]
-        blob = build(list(pdf[name_col]), payloads)
-        return pd.DataFrame(
-            {
-                "budget_bytes": [int(pdf[size_col].sum())],
-                "packed_bytes": [len(blob)],
-            }
+    if fmt not in ARCHIVE_BUILDERS:
+        raise ValueError(
+            f"fmt={fmt!r}; expected one of {sorted(ARCHIVE_BUILDERS)}"
         )
+    build = ARCHIVE_BUILDERS[fmt]
+
+    def trial(names, data, sizes):
+        if data_col is None:  # data holds the key_col values
+            data = [synth_payload(m, k) for m, k in zip(names, data)]
+        yield sum(sizes), len(build(names, data))
 
     ratio = 1.0
     for rnd in range(max(1, n_rounds)):
@@ -293,14 +281,11 @@ def estimate_pack_ratio(
             df, list(order_cols), size_col, shard_size,
             compression_ratio=ratio,
         )
-        rows = (
-            pre.filter(F.col("shard_id") < n_sample)
-            .groupBy("shard_id")
-            .applyInPandas(
-                trial, schema="budget_bytes bigint, packed_bytes bigint"
-            )
-            .collect()
-        )
+        rows = map_groups(
+            pre.filter(F.col("shard_id") < n_sample), "shard_id",
+            list(order_cols), [name_col, data_col or key_col, size_col],
+            "budget_bytes bigint, packed_bytes bigint", trial,
+        ).collect()
         budget = sum(r["budget_bytes"] for r in rows)
         packed = sum(r["packed_bytes"] for r in rows)
         if packed <= 0:
@@ -417,7 +402,7 @@ def run_dsort(members: DataFrame, spec: DsortSpec) -> DataFrame:
     """Run the full dsort plan for *spec*: record grouping →
     key derivation → global order → size packing. Returns the packed
     record frame (one row per record with ``shard_id``); feed it to
-    ``shard_manifest`` or a tar-building ``applyInPandas`` for the
+    ``shard_manifest`` or a tar-building ``util.map_groups`` for the
     creation phase (see tests/test_dsort_e2e.py).
     """
     if spec.duplicated_records not in REACTIONS:

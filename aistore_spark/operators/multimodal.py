@@ -1,9 +1,9 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
 metadata (beyond-reference, SURVEY.md §7.8).
 
-Every stage crosses the Python boundary through one helper,
-:func:`_map_rows`: a ``mapInArrow`` stage that runs a per-row function
-over Arrow batches (bounded by
+Every stage crosses the Python boundary through the engine's row map,
+:func:`aistore_spark.util.map_rows`: a ``mapInArrow`` stage that runs
+a per-row function over Arrow batches (bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch``) and emits zero or
 more output rows per input row. Two tiers run on it:
 
@@ -42,41 +42,18 @@ import wave
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from aistore_spark.functions.jpegcodec import decode_jpeg, jpeg_dims, synth_jpeg
-from aistore_spark.util import spread
-
-
-def _map_rows(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
-    """The module's one Python boundary: ``fn(*values)`` runs on the
-    values of *cols* for every input row and returns zero or more
-    output tuples in the column order of the DDL *schema*. Each Arrow
-    batch in becomes one Arrow batch out."""
-    out = to_arrow_schema(StructType.fromDDL(schema))
-
-    def run(batches):
-        for batch in batches:
-            inputs = [batch.column(c).to_pylist() for c in cols]
-            rows = [r for vals in zip(*inputs) for r in fn(*vals)]
-            columns = list(zip(*rows)) or [()] * len(out)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(columns, out)],
-                schema=out,
-            )
-
-    return df.select(*dict.fromkeys(cols)).mapInArrow(run, schema)
+from aistore_spark.util import map_rows, spread
 
 
 def _synth_frame(ids, id_col, col, make, seed_col=None) -> DataFrame:
     """``(doc_id, col)`` rows: one container ``make(seed)`` per id row,
     seeded by *seed_col* (default: the id). The generator stands in
     for an object-store read; ``spread`` keeps it on every core."""
-    return _map_rows(
+    return map_rows(
         spread(ids),
         [id_col, seed_col or id_col],
         f"doc_id bigint, {col} binary",
@@ -127,7 +104,7 @@ def decode_media(
             n_frames, h.hexdigest(),
         )
 
-    return _map_rows(df, [name_col, type_col, data_col], DECODED_SCHEMA, row)
+    return map_rows(df, [name_col, type_col, data_col], DECODED_SCHEMA, row)
 
 
 RESIZED_SCHEMA = (
@@ -155,7 +132,7 @@ def resize_media(
         ck = hashlib.md5(f"{checksum}:{target_width}x{rs_h}".encode())
         yield (name, w, h, target_width, rs_h, ck.hexdigest())
 
-    return _map_rows(
+    return map_rows(
         decoded, ["name", "width", "height", "checksum"], RESIZED_SCHEMA, row
     )
 
@@ -178,7 +155,7 @@ def extract_features(
         h = hashlib.md5(data).hexdigest()
         yield (name, ",".join(h[i * 8 : i * 8 + 8] for i in range(dim)), dim)
 
-    return _map_rows(
+    return map_rows(
         df, [name_col, data_col],
         "name string, features string, feature_dim bigint", row,
     )
@@ -282,7 +259,7 @@ def decode_wav_meta(
             raise ValueError(f"WAV sample rate {sr} <= 0")
         yield (doc_id, nch, sw, sr, nf, nf * 1000 // sr, _rms(pcm), len(data))
 
-    return _map_rows(df, [id_col, data_col], WAV_META_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], WAV_META_SCHEMA, row)
 
 
 def synth_wav_frame(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -320,10 +297,10 @@ def _parse_bmp(data: bytes):
     ``uint8[height, row_stride]`` view (rows are padded to 4 bytes;
     bottom-up files are flipped). Truncated containers raise
     ValueError."""
-    _need(data, 0, 30, "BMP")
-    magic, _fsz, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
-    if magic != b"BM":
+    if data[:2] != b"BM":
         raise ValueError("not a BMP")
+    _need(data, 0, 30, "BMP")
+    (off,) = struct.unpack_from("<I", data, 10)
     _hsz, w, h, _pl, bpp = struct.unpack_from("<IiiHH", data, 14)
     stride = (bpp * w + 31) // 32 * 4
     _need(data, off, stride * abs(h), "BMP")
@@ -350,7 +327,7 @@ def decode_bmp_meta(
         blue, _green, red = _channel_means(rows[:, : 3 * w].reshape(h, w, 3))
         yield (doc_id, w, h, bpp, stride, blue, red, len(data))
 
-    return _map_rows(df, [id_col, data_col], BMP_META_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], BMP_META_SCHEMA, row)
 
 
 def synth_bmp_frame(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -582,7 +559,7 @@ def decode_png_meta(
         w, h, n_idat, rgb = decode_png_pixels(data)
         yield (doc_id, w, h, 8, 2, n_idat, *_channel_means(rgb), w * h)
 
-    return _map_rows(df, [id_col, data_col], PNG_META_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], PNG_META_SCHEMA, row)
 
 
 def synth_png_frame(
@@ -752,6 +729,18 @@ def synth_gif(doc_id: int, n_frames: int = 1) -> bytes:
     )
 
 
+def _gif_sub_blocks(data: bytes, pos: int, into: bytearray | None) -> int:
+    """Step over the sub-block chain at *pos* up to its 0 terminator,
+    appending the payloads to *into* unless it is None; return the
+    position after the terminator."""
+    while (blen := _gif_byte(data, pos)) != 0:
+        _need(data, pos + 1, blen, "GIF")
+        if into is not None:
+            into += data[pos + 1 : pos + 1 + blen]
+        pos += 1 + blen
+    return pos + 1
+
+
 def _parse_gif(data: bytes, want=lambda frame: True):
     """One structural walk of a GIF87a/89a container: screen
     descriptor, global color table, then image blocks up to the
@@ -761,7 +750,9 @@ def _parse_gif(data: bytes, want=lambda frame: True):
     block's local color table is skipped, never read as image data;
     *lzw* is the frame's joined sub-block bytes when ``want(index)``,
     else None (the sub-blocks are stepped over without copying).
-    Extension blocks and truncated containers raise ValueError."""
+    GIF89a extension blocks (graphic control, comment, application)
+    are stepped over; any other block and truncated containers raise
+    ValueError."""
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     _need(data, 6, 7, "GIF")
@@ -771,12 +762,12 @@ def _parse_gif(data: bytes, want=lambda frame: True):
     palette = data[13 : 13 + n_pal]
     pos = 13 + n_pal
     frames = []
-    while _gif_byte(data, pos) != 0x3B:  # until trailer
-        if data[pos] != 0x2C:
-            raise ValueError(
-                f"unsupported GIF block 0x{data[pos]:02x} "
-                "(extensions not in the synthesizable profile)"
-            )
+    while (block := _gif_byte(data, pos)) != 0x3B:  # until trailer
+        if block == 0x21:  # extension: introducer, label, sub-blocks
+            pos = _gif_sub_blocks(data, pos + 2, None)
+            continue
+        if block != 0x2C:
+            raise ValueError(f"unsupported GIF block 0x{block:02x}")
         _need(data, pos + 1, 9, "GIF")
         _ix, _iy, iw, ih, iflags = struct.unpack_from("<HHHHB", data, pos + 1)
         pos += 10
@@ -785,12 +776,7 @@ def _parse_gif(data: bytes, want=lambda frame: True):
         min_code = _gif_byte(data, pos)
         pos += 1
         lzw = bytearray() if want(len(frames)) else None
-        while (blen := _gif_byte(data, pos)) != 0:
-            _need(data, pos + 1, blen, "GIF")
-            if lzw is not None:
-                lzw += data[pos + 1 : pos + 1 + blen]
-            pos += 1 + blen
-        pos += 1  # block terminator
+        pos = _gif_sub_blocks(data, pos, lzw)
         frames.append(
             (iw, ih, iflags, min_code, None if lzw is None else bytes(lzw))
         )
@@ -813,8 +799,8 @@ def decode_gif_meta(
     fold them into integer-exact stats. Completes the codec matrix:
     mm5 PCM audio, mm6 raw bitmaps, mm7 DEFLATE (PNG), mm8 LZW (GIF).
     Supports the synthesizable profile (global color table,
-    non-interlaced images without local tables, no extensions);
-    anything else raises."""
+    non-interlaced images without local tables); extension blocks are
+    skipped, anything else raises."""
 
     def row(doc_id, data):
         # report the LOGICAL SCREEN dims (w, h) — per-frame image
@@ -840,7 +826,7 @@ def decode_gif_meta(
             idx_sum // n_px, g_sum // n_px, n_px,
         )
 
-    return _map_rows(df, [id_col, data_col], GIF_META_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], GIF_META_SCHEMA, row)
 
 
 def synth_gif_frame(
@@ -922,7 +908,7 @@ def decode_media_meta(
     (animated GIFs are the multi-frame/video case). This is the
     dispatch layer a mixed-media lake needs before routing content to
     the per-format pixel/sample decoders (mm5-mm8)."""
-    return _map_rows(
+    return map_rows(
         df, [id_col, data_col], MEDIA_META_SCHEMA,
         lambda doc_id, data: [(doc_id, *_media_dims(data))],
     )
@@ -965,7 +951,7 @@ def png_thumbnail(
         thumb = _nearest(rgb, target_w, target_h)
         yield (doc_id, w, h, target_w, target_h, *_channel_means(thumb))
 
-    return _map_rows(df, [id_col, data_col], THUMB_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], THUMB_SCHEMA, row)
 
 
 FRAME_EXTRACT_SCHEMA = (
@@ -998,7 +984,7 @@ def gif_extract_frames(
                 mean = int(_gif_indices(lzw, min_code).sum()) // (iw * ih)
                 yield (doc_id, len(frames), f, mean)
 
-    return _map_rows(df, [id_col, data_col], FRAME_EXTRACT_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], FRAME_EXTRACT_SCHEMA, row)
 
 
 GRID_FEATURE_SCHEMA = (
@@ -1027,7 +1013,7 @@ def png_grid_features(
                 if n:
                     yield (doc_id, gx, gy, n, *_channel_means(cell))
 
-    return _map_rows(df, [id_col, data_col], GRID_FEATURE_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], GRID_FEATURE_SCHEMA, row)
 
 
 TRANSCODE_SCHEMA = (
@@ -1057,7 +1043,7 @@ def transcode_bmp_to_png(
         pw, ph, _n, back = decode_png_pixels(png)
         yield (doc_id, pw, ph, len(png), *_channel_means(back))
 
-    return _map_rows(df, [id_col, data_col], TRANSCODE_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], TRANSCODE_SCHEMA, row)
 
 
 # ---- real lossy-DCT image codec (baseline JFIF) ---------------------------
@@ -1102,7 +1088,7 @@ def decode_jpeg_meta(
             means[0], cb, cr,
         )
 
-    return _map_rows(df, [id_col, data_col], JPEG_META_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], JPEG_META_SCHEMA, row)
 
 
 # ---- real rational audio resample (the ffmpeg_audio surface) --------------
@@ -1187,7 +1173,7 @@ def resample_wav(
             _rms(back), len(enc),
         )
 
-    return _map_rows(df, [id_col, data_col], RESAMPLE_SCHEMA, row)
+    return map_rows(df, [id_col, data_col], RESAMPLE_SCHEMA, row)
 
 
 DHASH_SCHEMA = "doc_id bigint, band int, val bigint"
@@ -1219,7 +1205,7 @@ def png_dhash(
             word = bits[band * 16 : band * 16 + 16]
             yield (doc_id, band, sum(int(b) << i for i, b in enumerate(word)))
 
-    return _map_rows(spread(df), [id_col, data_col], DHASH_SCHEMA, row)
+    return map_rows(spread(df), [id_col, data_col], DHASH_SCHEMA, row)
 
 
 def dhash_pairs(bands: DataFrame, max_hamming: int = 3) -> DataFrame:

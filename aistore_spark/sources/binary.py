@@ -6,8 +6,9 @@ source, and TAR shards are expanded into member rows by reading the
 actual archive bytes — the engine's S4 (archive-expanded listing) and
 P5 (shard index build) against genuine shards.
 
-Scale: ``binaryFile`` splits by file; expansion is a ``mapInPandas``
-flatMap (1 shard in → N member rows out) with no shuffle. Only member
+Scale: ``binaryFile`` splits by file; expansion is the engine's row
+map (``util.map_rows``, ``mapInArrow``: 1 shard in → N member rows
+out) with no shuffle. Only member
 *metadata* (+ optionally bytes) leaves the task; pass
 ``with_bytes=False`` to index multi-GB shards without materializing
 payloads. Listing is not free: a glob path with more than 32 matches
@@ -23,10 +24,10 @@ from __future__ import annotations
 import io
 import tarfile
 import zipfile
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from aistore_spark.util import map_rows
 
 MEMBER_SCHEMA = (
     "shard string, member string, offset bigint, size bigint, bytes binary"
@@ -196,28 +197,12 @@ def expand_archive_members(
     the reference's listable-shard MIME set (``cmn/archive/mime.go:
     25-29``, read modes ``cmn/archive/read.go:137-165``).
     """
+
+    def expand(path, content):
+        # (member, offset, size, bytes|None); the bytes column exists
+        # only with_bytes
+        for m in _iter_members(path, content, with_bytes):
+            yield (path, *m) if with_bytes else (path, *m[:3])
+
     schema = MEMBER_SCHEMA if with_bytes else MEMBER_META_SCHEMA
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "shard": [],
-                "member": [],
-                "offset": [],
-                "size": [],
-            }
-            if with_bytes:
-                out["bytes"] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for member, offset, size, payload in _iter_members(
-                    path, bytes(content), with_bytes
-                ):
-                    out["shard"].append(path)
-                    out["member"].append(member)
-                    out["offset"].append(offset)
-                    out["size"].append(size)
-                    if with_bytes:
-                        out["bytes"].append(payload)
-            yield pd.DataFrame(out)
-
-    return binary_df.select("path", "content").mapInPandas(expand, schema=schema)
+    return map_rows(binary_df, ["path", "content"], schema, expand)

@@ -17,23 +17,26 @@ The DuckDB oracles still derive the expected values analytically from
 the ``members`` CTE, so a correctness row over an ``*_io`` query proves
 the full write → store → scan → parse round trip bit-for-bit.
 
-Scale: the writer is one ``applyInPandas`` task per shard (bounded by
-the packing policy, exactly the D6/P1 shape); on a cluster the target
-directory would be shared storage — in local mode it is
-``_scale/io/<sf>/shards`` (gitignored), cached across runs behind a
-versioned ``_SUCCESS`` marker so bench's min-of-2 second run is pure
-read-side I/O.
+Scale: the writer is one group-map call per shard
+(``util.map_groups``, bounded by the packing policy, exactly the D6/P1
+shape); on a cluster the target directory would be shared storage — in
+local mode it is ``_scale/io/<sf>/shards`` (gitignored), cached across
+runs behind a versioned ``_SUCCESS`` marker so bench's min-of-2 second
+run is pure read-side I/O.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
+import tempfile
 from pathlib import Path
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from aistore_spark.util import map_groups
 
 #: bump when the on-disk layout or payload derivation changes — stale
 #: cached fixtures from an older format are rebuilt, not trusted
@@ -75,77 +78,37 @@ def sample_mod(n_members: int) -> int:
     return SAMPLE_MOD if n_members > SAMPLE_THRESHOLD else 1
 
 
-def materialize_shards(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
-    """Write one real USTAR ``.tar`` per members-catalog shard; return
-    the directory. Idempotent: a ``_SUCCESS`` marker (format version +
-    shard/member counts) skips the rebuild on later calls."""
-    from aistore_spark import catalog
-    from aistore_spark.operators.archive import build_tar, synth_payload
-    from aistore_spark.sources.tables import load_table
+def _publish(out: Path, marker: dict, build, force: bool = False) -> str:
+    """Build the fixture directory *out* once and publish it atomically.
 
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    mod = sample_mod(lineitem.count())
-    out = shards_root(sf_dir, mod)
-    marker = out / "_SUCCESS"
-    corpus = str(Path(sf_dir).resolve())
-    if not force and marker.exists():
-        # the directory name keys on Path(sf_dir).name only — validate
-        # the marker's recorded corpus path so two different corpora
-        # sharing a basename never silently share stale shards
+    A ``_SUCCESS`` marker in *out* that records the same ``sf_dir`` as
+    *marker* means the fixture is current: return at once. The
+    directory name keys on ``Path(sf_dir).name`` only, so a marker
+    recording another (or no) corpus path triggers a rebuild, as does
+    *force*. ``build(dir)`` writes the shards into a fresh temporary
+    directory and returns their manifest rows; the shard totals join
+    *marker* in the new ``_SUCCESS``. The directory is then published
+    by rename: a reader (another process mid-bench) sees either a
+    complete directory or none, never a half-written or vanishing one.
+    """
+    done = out / "_SUCCESS"
+    if not force and done.exists():
         try:
-            recorded = json.loads(marker.read_text()).get("sf_dir")
+            recorded = json.loads(done.read_text()).get("sf_dir")
         except (OSError, ValueError):
             recorded = None
-        if recorded == corpus:
+        if recorded == marker["sf_dir"]:
             return str(out)
-        force = True  # wrong/unknown corpus: rebuild and swap
-    # build into a unique temp dir, publish by atomic rename: a reader
-    # (another process mid-bench) either sees the complete directory or
-    # none — never a half-written or vanishing one. If a concurrent
-    # builder won the rename, its output is byte-identical
-    # (deterministic build); keep the winner's.
-    import os
-    import tempfile
-
+        force = True  # wrong/unknown corpus: rebuild first, swap after
     out.parent.mkdir(parents=True, exist_ok=True)
-    build = Path(
+    tmp = Path(
         tempfile.mkdtemp(prefix=out.name + ".build-", dir=str(out.parent))
     )
-    members = catalog.members_catalog(lineitem)
-    if mod != 1:
-        members = members.filter(F.col("orderkey") % mod == 0)
-    out_str = str(build)
-
-    def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["member", "key_str"], kind="mergesort")
-        payloads = [
-            synth_payload(m, k) for m, k in zip(pdf["member"], pdf["key_str"])
-        ]
-        blob = build_tar(list(pdf["member"]), payloads)
-        name = pdf["shard"].iloc[0]
-        Path(out_str, name).write_bytes(blob)
-        return pd.DataFrame(
-            {"shard": [name], "n_members": [len(pdf)], "tar_bytes": [len(blob)]}
-        )
-
-    n = spark.sparkContext.defaultParallelism
-    manifest = (
-        members.select("shard", "member", "key_str")
-        .repartition(n, "shard")
-        .groupBy("shard")
-        .applyInPandas(
-            write_shard, schema="shard string, n_members bigint, tar_bytes bigint"
-        )
-        .collect()  # O(n_shards) rows — the write-job barrier
-    )
-    (build / "_SUCCESS").write_text(
+    manifest = build(str(tmp))
+    (tmp / "_SUCCESS").write_text(
         json.dumps(
             {
-                "format_version": FORMAT_VERSION,
-                "sample_mod": mod,
-                "sf_dir": corpus,
+                **marker,
                 "n_shards": len(manifest),
                 "n_members": sum(m.n_members for m in manifest),
                 "tar_bytes": sum(m.tar_bytes for m in manifest),
@@ -161,17 +124,60 @@ def materialize_shards(
             tempfile.mkdtemp(prefix=out.name + ".old-", dir=str(out.parent))
         )
         os.rename(out, aside)
-        os.rename(build, out)
+        os.rename(tmp, out)
         shutil.rmtree(aside, ignore_errors=True)
         return str(out)
     try:
-        os.rename(build, out)  # atomic publish
+        os.rename(tmp, out)
     except OSError:
-        if marker.exists():  # concurrent identical build won the race
-            shutil.rmtree(build, ignore_errors=True)
-        else:
+        # a concurrent builder won the rename; its output is
+        # byte-identical (deterministic build), so keep the winner's
+        if not done.exists():
             raise
+        shutil.rmtree(tmp, ignore_errors=True)
     return str(out)
+
+
+#: the manifest row every shard writer returns
+_MANIFEST_SCHEMA = "shard string, n_members bigint, tar_bytes bigint"
+
+
+def materialize_shards(
+    spark: SparkSession, sf_dir: str, force: bool = False
+) -> str:
+    """Write one real USTAR ``.tar`` per members-catalog shard; return
+    the directory. Idempotent: a ``_SUCCESS`` marker (format version +
+    shard/member counts) skips the rebuild on later calls."""
+    from aistore_spark import catalog
+    from aistore_spark.operators.archive import build_tar, synth_payload
+    from aistore_spark.sources.tables import load_table
+
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    mod = sample_mod(lineitem.count())
+
+    def build(out_str: str) -> list:
+        members = catalog.members_catalog(lineitem)
+        if mod != 1:
+            members = members.filter(F.col("orderkey") % mod == 0)
+
+        def write_shard(shards, names, keys):
+            blob = build_tar(
+                names, [synth_payload(m, k) for m, k in zip(names, keys)]
+            )
+            Path(out_str, shards[0]).write_bytes(blob)
+            yield shards[0], len(names), len(blob)
+
+        return map_groups(
+            members, "shard", ["member", "key_str"],
+            ["shard", "member", "key_str"], _MANIFEST_SCHEMA, write_shard,
+        ).collect()  # O(n_shards) rows — the write-job barrier
+
+    marker = {
+        "format_version": FORMAT_VERSION,
+        "sample_mod": mod,
+        "sf_dir": str(Path(sf_dir).resolve()),
+    }
+    return _publish(shards_root(sf_dir, mod), marker, build, force)
 
 
 def read_shard_files(spark: SparkSession, shards_dir: str) -> DataFrame:
@@ -217,8 +223,8 @@ def write_packed_shards(
 ) -> list:
     """WRITE-side real I/O: group member (name, bytes) rows by
     ``shard_col`` and durably write one genuine USTAR ``.tar`` per
-    group to ``out_dir`` (one applyInPandas task per shard — the
-    D6/P1 packing shape), entries in sorted member order. Returns the
+    group to ``out_dir`` (one group-map call per shard — the D6/P1
+    packing shape), entries in sorted member order. Returns the
     per-shard manifest rows (shard, n_members, tar_bytes). The caller
     owns the output directory lifecycle (p1b rebuilds it per
     invocation — the write IS what the query measures)."""
@@ -228,28 +234,15 @@ def write_packed_shards(
     out.mkdir(parents=True, exist_ok=True)
     out_str = str(out)
 
-    def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("member", kind="mergesort")
-        blob = build_tar(
-            list(pdf["member"]), [bytes(b) for b in pdf["bytes"]]
-        )
-        name = pdf[shard_col].iloc[0]
-        Path(out_str, name).write_bytes(blob)
-        return pd.DataFrame(
-            {"shard": [name], "n_members": [len(pdf)], "tar_bytes": [len(blob)]}
-        )
+    def write_shard(shards, names, payloads):
+        blob = build_tar(names, payloads)
+        Path(out_str, shards[0]).write_bytes(blob)
+        yield shards[0], len(names), len(blob)
 
-    spark = members.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    return (
-        members.select(shard_col, "member", "bytes")
-        .repartition(n, shard_col)
-        .groupBy(shard_col)
-        .applyInPandas(
-            write_shard, schema="shard string, n_members bigint, tar_bytes bigint"
-        )
-        .collect()  # O(n_shards) rows — the write-job barrier
-    )
+    return map_groups(
+        members, shard_col, ["member"], [shard_col, "member", "bytes"],
+        _MANIFEST_SCHEMA, write_shard,
+    ).collect()  # O(n_shards) rows — the write-job barrier
 
 
 def materialize_media_shards(spark: SparkSession, sf_dir: str) -> str:
@@ -260,78 +253,30 @@ def materialize_media_shards(spark: SparkSession, sf_dir: str) -> str:
     :func:`materialize_shards`: marker-gated, atomic publish, corpus
     path validated. mm12 reads these back via binaryFile and runs the
     FULL decode pipeline on bytes that crossed the filesystem."""
-    import os
-    import tempfile
-
     from aistore_spark.operators import multimodal
-    from aistore_spark.operators.archive import build_tar
     from aistore_spark.sources.tables import load_table
 
-    out = _REPO / "_scale" / "io" / Path(sf_dir).name / "media-v1"
-    marker = out / "_SUCCESS"
-    corpus = str(Path(sf_dir).resolve())
-    stale = False
-    if marker.exists():
-        try:
-            recorded = json.loads(marker.read_text()).get("sf_dir")
-        except (OSError, ValueError):
-            recorded = None
-        if recorded == corpus:
-            return str(out)
-        stale = True  # wrong/unknown corpus: rebuild first, swap after
+    def build(out_str: str) -> list:
+        ids = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 7 == 3)
+            .select("doc_id")
+        )
+        frame = multimodal.synth_jpeg_frame(ids).select(
+            F.concat(
+                F.lit("media-"),
+                F.lpad((F.col("doc_id") % 16).cast("string"), 5, "0"),
+                F.lit(".tar"),
+            ).alias("shard"),
+            F.concat(
+                F.lit("img-"),
+                F.lpad(F.col("doc_id").cast("string"), 8, "0"),
+                F.lit(".jpg"),
+            ).alias("member"),
+            F.col("img").alias("bytes"),
+        )
+        return write_packed_shards(frame, out_str)
 
-    ids = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 7 == 3)
-        .select("doc_id")
-    )
-    frame = multimodal.synth_jpeg_frame(ids).select(
-        F.concat(
-            F.lit("media-"),
-            F.lpad((F.col("doc_id") % 16).cast("string"), 5, "0"),
-            F.lit(".tar"),
-        ).alias("shard"),
-        F.concat(
-            F.lit("img-"),
-            F.lpad(F.col("doc_id").cast("string"), 8, "0"),
-            F.lit(".jpg"),
-        ).alias("member"),
-        F.col("img").alias("bytes"),
-    )
-    out.parent.mkdir(parents=True, exist_ok=True)
-    build = Path(
-        tempfile.mkdtemp(prefix=out.name + ".build-", dir=str(out.parent))
-    )
-    manifest = write_packed_shards(frame, str(build))
-    (build / "_SUCCESS").write_text(
-        json.dumps(
-            {
-                "format_version": 1,
-                "sf_dir": corpus,
-                "n_shards": len(manifest),
-                "n_members": sum(m.n_members for m in manifest),
-                "tar_bytes": sum(m.tar_bytes for m in manifest),
-            }
-        )
-    )
-    if stale and out.exists():
-        # swap, never rmtree-then-rename: a concurrent reader must see
-        # either the old complete directory or the new one, with no
-        # window where the path is absent. mkdtemp gives a unique
-        # aside target (a leftover from a crashed prior run can't
-        # collide); POSIX rename onto an empty dir replaces it.
-        aside = Path(
-            tempfile.mkdtemp(prefix=out.name + ".old-", dir=str(out.parent))
-        )
-        os.rename(out, aside)
-        os.rename(build, out)
-        shutil.rmtree(aside, ignore_errors=True)
-        return str(out)
-    try:
-        os.rename(build, out)  # atomic publish
-    except OSError:
-        if marker.exists():
-            shutil.rmtree(build, ignore_errors=True)
-        else:
-            raise
-    return str(out)
+    out = _REPO / "_scale" / "io" / Path(sf_dir).name / "media-v1"
+    marker = {"format_version": 1, "sf_dir": str(Path(sf_dir).resolve())}
+    return _publish(out, marker, build)

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def ntz_micros_sql(col: str = "ts") -> str:
@@ -193,7 +196,8 @@ def ensure_shipped(spark) -> None:
     """Make the ``aistore_spark`` package importable on executor Python
     workers regardless of how the SparkSession was built.
 
-    Our Pandas-UDF/mapInPandas closures pickle by module reference; a
+    Our Python-boundary closures (:func:`map_rows`, :func:`map_groups`,
+    pandas UDFs) pickle by module reference; a
     caller-provided session (the driver's harness) may spawn workers
     without this repo on PYTHONPATH. ``addPyFile`` of a package zip is
     runtime-safe and idempotent per SparkContext.
@@ -212,3 +216,64 @@ def ensure_shipped(spark) -> None:
             z.write(py, arcname=str(py.relative_to(pkg_root.parent)))
     sc.addPyFile(str(zpath))
     sc._aistore_spark_shipped = True
+
+
+def _arrow_batch(rows: list[tuple], out: pa.Schema) -> pa.RecordBatch:
+    """Output tuples *rows* as one Arrow batch with the types of *out*:
+    ``applyInArrow`` rejects a column whose Arrow type differs from the
+    declared one (an int64 column where the schema says ``int``)."""
+    columns = list(zip(*rows)) or [()] * len(out)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, out)], schema=out
+    )
+
+
+def map_rows(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
+    """The engine's row map across the Python boundary: ``fn(*values)``
+    runs on the values of *cols* for every input row and returns zero
+    or more output tuples in the column order of the DDL *schema*. Each
+    ``mapInArrow`` batch in (bounded by
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``) becomes one Arrow
+    batch out; no shuffle."""
+    out = to_arrow_schema(StructType.fromDDL(schema))
+
+    def run(batches):
+        for batch in batches:
+            inputs = [batch.column(c).to_pylist() for c in cols]
+            yield _arrow_batch(
+                [r for vals in zip(*inputs) for r in fn(*vals)], out
+            )
+
+    return df.select(*dict.fromkeys(cols)).mapInArrow(run, schema)
+
+
+def map_groups(
+    df: DataFrame, key: str, order: list[str], cols: list[str], schema: str, fn
+) -> DataFrame:
+    """The grouped twin of :func:`map_rows`: one ``fn(*columns)`` call
+    per *key* value, on that group's *cols* as plain lists, stably
+    sorted by the *order* columns (ties keep their input order, nulls
+    last). *fn* returns zero or more output tuples in the column order
+    of the DDL *schema*.
+
+    Only *key*, *order* and *cols* are shuffled, through an explicit
+    ``repartition(defaultParallelism, key)``: the rows are small but
+    the per-group work (archive builds) is CPU-bound, so AQE's
+    byte-based coalescing would otherwise pack the groups onto 2-3
+    tasks. The explicit width also satisfies the ``groupBy``
+    clustering, so there is no second exchange."""
+    out = to_arrow_schema(StructType.fromDDL(schema))
+    sort_keys = [(c, "ascending") for c in order]
+
+    def run(table: pa.Table) -> pa.Table:
+        table = table.sort_by(sort_keys)
+        rows = list(fn(*(table.column(c).to_pylist() for c in cols)))
+        return pa.Table.from_batches([_arrow_batch(rows, out)])
+
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.select(*dict.fromkeys([key, *order, *cols]))
+        .repartition(n, key)
+        .groupBy(key)
+        .applyInArrow(run, schema)
+    )

@@ -426,6 +426,7 @@ def test_truncated_gif_raises_value_error():
     # parses
     for parse, full in (
         (mm._parse_gif, mm.synth_gif(7, n_frames=3)),
+        (mm._parse_gif, _gif_with_gce(mm.synth_gif(7, n_frames=3))),
         (mm._parse_wav, mm.synth_wav(7)),
         (mm._parse_bmp, mm.synth_bmp(7)),
         (mm._parse_png, mm.synth_png(7)),
@@ -453,6 +454,14 @@ def test_truncated_gif_raises_value_error():
         )
         with pytest.raises(ValueError, match="PNG"):
             mm.decode_png_pixels(blob)
+
+
+def _gif_with_gce(plain: bytes) -> bytes:
+    """A synth_gif file as GIF89a with an 8-byte Graphic Control
+    Extension (delay 10, no transparency) after its global table."""
+    table_end = 13 + 3 * 256
+    gce = b"\x21\xf9\x04\x00\x0a\x00\x00\x00"
+    return b"GIF89a" + plain[6:table_end] + gce + plain[table_end:]
 
 
 def _gif_with_local_tables(doc_id: int, n_frames: int) -> bytes:
@@ -510,12 +519,39 @@ def test_gif_local_color_table_is_skipped(spark):
         mm.decode_gif_meta(df).collect()
 
 
+def test_gif_extension_blocks_are_skipped(spark):
+    """GIF89a extension blocks (here a Graphic Control Extension, what
+    animated-GIF encoders write before each frame) are stepped over by
+    the shared GIF walk: dims, frame count, extracted frames and the
+    decoded stats equal those of the same file without them."""
+    from aistore_spark.operators import multimodal as mm
+
+    plain = mm.synth_gif(5, n_frames=2)
+    ext = _gif_with_gce(plain)
+    assert mm._media_dims(ext) == mm._media_dims(plain)
+    df = spark.createDataFrame(
+        [(0, plain), (1, ext)], "doc_id bigint, img binary"
+    )
+
+    def by_doc(out):
+        rows = {0: [], 1: []}
+        for r in out.collect():
+            rows[r.doc_id].append(tuple(r)[1:])
+        return sorted(rows[0]), sorted(rows[1])
+
+    frames = by_doc(mm.gif_extract_frames(df, every_n=1, max_frames=2))
+    assert len(frames[0]) == 2 and frames[0] == frames[1]
+    meta = by_doc(mm.decode_gif_meta(df))
+    assert meta[0] == meta[1]
+
+
 def test_map_rows_empty_output_keeps_schema(spark):
-    """The Arrow batch helper: an empty input frame, and rows that all
+    """The engine's row map: an empty input frame, and rows that all
     yield zero tuples, give an empty output with the declared types."""
     from pyspark.sql.types import StructType
 
     from aistore_spark.operators import multimodal as mm
+    from aistore_spark.util import map_rows
 
     ids = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
     empty = mm.decode_png_meta(
@@ -524,7 +560,7 @@ def test_map_rows_empty_output_keeps_schema(spark):
     assert empty.collect() == []
     assert empty.schema == StructType.fromDDL(mm.PNG_META_SCHEMA)
     schema = "doc_id bigint, band int, name string, data binary"
-    none = mm._map_rows(ids, ["doc_id"], schema, lambda doc_id: [])
+    none = map_rows(ids, ["doc_id"], schema, lambda doc_id: [])
     assert none.collect() == []
     assert none.dtypes == [
         ("doc_id", "bigint"), ("band", "int"),

@@ -271,3 +271,95 @@ def test_direct_zip_builder_byte_identical_to_zipfile():
         assert build_zip(names, payloads) == _build_zip_zipfile(
             names, payloads
         ), names[:2]
+
+
+def test_map_groups_types_order_and_null_payload(spark):
+    """The engine's group map: output columns take the DDL schema's
+    types even when the input key is ``int``; each group is stably
+    sorted by *order* (ties keep input order, nulls last); and
+    assemble_batches_bytes, built on it, counts a null payload as a
+    0-byte entry whose md5 is that of b""."""
+    import hashlib
+
+    from aistore_spark.operators.archive import assemble_batches_bytes
+    from aistore_spark.util import map_groups
+
+    rows = [(1, 2, "a"), (1, 1, "b"), (1, None, "z"), (1, 2, "c"),
+            (1, 1, "d"), (2, 5, "e")]
+    df = spark.createDataFrame(rows, "k int, o bigint, v string").coalesce(1)
+    out = map_groups(
+        df, "k", ["o"], ["k", "v"], "k int, n bigint, vs string",
+        lambda ks, vs: [(ks[0], len(vs), "".join(vs))],
+    )
+    assert out.dtypes == [("k", "int"), ("n", "bigint"), ("vs", "string")]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 5, "bdacz"), (2, 1, "e"),
+    ]
+
+    joined = spark.createDataFrame(
+        [
+            (7, 0, "a.bin", b"xy", "ok"),
+            (7, 1, "__404__/b.bin", None, "missing"),
+        ],
+        "batch_id int, req_idx bigint, out_name string, payload binary, "
+        "status string",
+    )
+    (r,) = assemble_batches_bytes(joined).collect()
+    md5 = lambda b: hashlib.md5(b).hexdigest()  # noqa: E731
+    assert (r.batch_id, r.n_entries, r.n_missing) == (7, 2, 1)
+    assert r.payload_bytes == 2
+    assert r.tar_bytes == len(
+        build_tar(["a.bin", "__404__/b.bin"], [b"xy", b""])
+    )
+    assert r.content_md5 == md5(f"{md5(b'xy')},{md5(b'')}".encode())
+
+
+def test_expand_archive_without_members_keeps_schema(spark):
+    """A shard with no members expands to no rows, with the declared
+    member schema (with and without the bytes column)."""
+    from pyspark.sql.types import StructType
+
+    from aistore_spark.sources.binary import (
+        MEMBER_META_SCHEMA,
+        MEMBER_SCHEMA,
+        expand_archive_members,
+    )
+
+    shards = spark.createDataFrame(
+        [("empty.tar", build_tar([], []))], "path string, content binary"
+    )
+    for with_bytes, ddl in (
+        (True, MEMBER_SCHEMA),
+        (False, MEMBER_META_SCHEMA),
+    ):
+        out = expand_archive_members(shards, with_bytes=with_bytes)
+        assert out.collect() == []
+        assert out.schema == StructType.fromDDL(ddl)
+
+
+def test_write_packed_shards_long_names_match_build_tar(spark, tmp_path):
+    """write_packed_shards writes each shard as build_tar over its rows
+    in member order, also when a name over 100 bytes sends build_tar
+    to its tarfile fallback."""
+    from aistore_spark.sources.io_fixtures import write_packed_shards
+
+    long = "d" * 60 + "/" + "x" * 60 + "/m.txt"  # 128 bytes: prefix field
+    rows = [
+        ("s0.tar", "b.txt", b"bee"),
+        ("s0.tar", long, b"long" * 300),
+        ("s0.tar", "a.txt", b""),
+        ("s1.tar", "c.txt", b"c" * 513),
+    ]
+    df = spark.createDataFrame(
+        rows, "shard string, member string, bytes binary"
+    )
+    manifest = write_packed_shards(df, str(tmp_path))
+    assert sorted((m.shard, m.n_members) for m in manifest) == [
+        ("s0.tar", 3), ("s1.tar", 1),
+    ]
+    for shard in ("s0.tar", "s1.tar"):
+        mine = sorted((m, b) for s, m, b in rows if s == shard)
+        expect = build_tar([m for m, _ in mine], [b for _, b in mine])
+        assert (tmp_path / shard).read_bytes() == expect
+    with tarfile.open(tmp_path / "s0.tar") as tf:
+        assert tf.getnames() == ["a.txt", "b.txt", long]

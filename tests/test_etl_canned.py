@@ -95,6 +95,29 @@ def test_face_detection_canned_boxes_faces():
         CANNED["face_detection"](b"nope", "p", "")
 
 
+def test_top_down_bmp_decodes_like_bottom_up():
+    """decode_bmp_gray reads BMPs through the shared BMP parser: a
+    top-down (negative-height) file decodes to the same array as its
+    bottom-up twin."""
+    import struct
+
+    import numpy as np
+
+    from aistore_spark.functions.facedetect import (
+        decode_bmp_gray,
+        synth_face_bmp,
+    )
+
+    up = synth_face_bmp(24)
+    _hsz, w, h = struct.unpack_from("<Iii", up, 14)
+    stride = (3 * w + 3) & ~3
+    rows = [up[54 + y * stride : 54 + (y + 1) * stride] for y in range(h)]
+    down = (
+        up[:22] + struct.pack("<i", -h) + up[26:54] + b"".join(rows[::-1])
+    )
+    assert np.array_equal(decode_bmp_gray(down), decode_bmp_gray(up))
+
+
 def test_torchvision_canned_is_real_jpeg_resize():
     """decode → nearest-neighbor resize → re-encode with the in-repo
     baseline-JPEG codec; the output is a decodable JPEG at the target

@@ -93,3 +93,29 @@ def test_shard_read_lists_directory_on_driver(spark, sf_dir):
     expect = rows(ref)
     assert len(expect) == 6000
     assert rows(got) == expect
+
+
+def test_media_shards_rebuild_for_another_corpus(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """The media materializer shares the marker-gated publish: a
+    ``_SUCCESS`` marker that records another corpus path triggers a
+    rebuild into the same directory, which then records this corpus;
+    a matching marker is reused as is."""
+    monkeypatch.setattr(io_fixtures, "_REPO", tmp_path)
+    media = Path(io_fixtures.materialize_media_shards(spark, sf_dir))
+    marker = media / "_SUCCESS"
+    first = json.loads(marker.read_text())
+    assert first["sf_dir"] == str(Path(sf_dir).resolve())
+    assert first["n_shards"] == len(list(media.glob("*.tar"))) > 0
+    tars = {p.name: p.read_bytes() for p in media.glob("*.tar")}
+
+    marker.write_text(json.dumps({**first, "sf_dir": "/elsewhere/sf0.001"}))
+    (media / "media-00000.tar").write_bytes(b"stale")
+    assert io_fixtures.materialize_media_shards(spark, sf_dir) == str(media)
+    assert json.loads(marker.read_text()) == first
+    assert {p.name: p.read_bytes() for p in media.glob("*.tar")} == tars
+
+    before = marker.stat().st_mtime_ns
+    assert io_fixtures.materialize_media_shards(spark, sf_dir) == str(media)
+    assert marker.stat().st_mtime_ns == before
