@@ -61,11 +61,13 @@ DRIVER_CHECK_PRIORITY = [
     "t6_canned_sha256",
     "t8_direct_put",
     "s4c_lz4_listing",
+    "t13_face_detect",
     # helper sentinels (tools/query_fps.py HELPER_SENTINELS)
     "p2_extract_member",
     "p4_archive_append",
     "s4b_zip_listing",
     "mm12_media_decode_io",
+    "ann8_pq_adc_topk",
     # standing shortlist
     "dd2_ngram_jaccard",
     "dd7_dup_groups",
@@ -74,15 +76,13 @@ DRIVER_CHECK_PRIORITY = [
     "g3_output_formats",
     "p1_pack_archive",
     # operator-family representatives
-    "t13_face_detect",
+    "ann9_ivfpq_topk",
+    "ann7b_pq_train",
+    "dd9_semantic_dedup",
+    "dd5_embedding_neardup",
     "mm8_gif_decode",
     "p3_extract_regex_pack",
-    "pipe4_quality_gate",
     "pipe3_dedup_report",
-    "dd6_simhash_pairs",
-    "dd6b_simhash_prod",
-    "j1_get_batch",
-    "j1b_mixed_entries",
     "g4_batch_loader",
     "p1b_pack_archive_io",
     "s4d_shard_index_io",

@@ -40,7 +40,9 @@ from aistore_spark.operators import (
 )
 from aistore_spark.sources import downloader
 from aistore_spark.sources.io_fixtures import SAMPLE_WHERE as _IO_SAMPLE_WHERE
-from aistore_spark.util import ensure_shipped, ntz_micros_sql, session_frame
+from aistore_spark.util import (
+    ensure_shipped, map_rows, ntz_micros_sql, session_frame,
+)
 from aistore_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -3248,38 +3250,21 @@ def t13_face_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 5 == 0
     ).select("doc_id")
 
-    def run(batches):
-        import numpy as np
-        import pandas as pd
+    def detect(doc_id):
+        boxed = etl.CANNED["face_detection"](
+            facedetect.synth_face_bmp(doc_id), f"img/{doc_id}.bmp", ""
+        )
+        gray = facedetect.decode_bmp_gray(boxed)
+        hits = facedetect.detect_faces(gray)
+        x, y = hits[0] if hits else (-1, -1)
+        mean = int(gray.astype("int64").sum()) // gray.size
+        return [(doc_id, gray.shape[1], gray.shape[0], len(hits), x, y, mean)]
 
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "n_faces", "face_x", "face_y",
-                "mean_gray",
-            )}
-            for i in pdf["doc_id"]:
-                boxed = etl.CANNED["face_detection"](
-                    facedetect.synth_face_bmp(int(i)), f"img/{i}.bmp", ""
-                )
-                gray = facedetect.decode_bmp_gray(boxed)
-                hits = facedetect.detect_faces(gray)
-                rows["doc_id"].append(int(i))
-                rows["height"].append(gray.shape[0])
-                rows["width"].append(gray.shape[1])
-                rows["n_faces"].append(len(hits))
-                rows["face_x"].append(hits[0][0] if hits else -1)
-                rows["face_y"].append(hits[0][1] if hits else -1)
-                rows["mean_gray"].append(
-                    int(gray.astype(np.int64).sum()) // gray.size
-                )
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, width bigint, height bigint, n_faces bigint, "
-            "face_x bigint, face_y bigint, mean_gray bigint"
-        ),
+    return map_rows(
+        ids, ["doc_id"],
+        "doc_id bigint, width bigint, height bigint, n_faces bigint, "
+        "face_x bigint, face_y bigint, mean_gray bigint",
+        detect,
     )
 
 

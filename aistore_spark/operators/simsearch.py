@@ -20,11 +20,13 @@ Scale design:
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aistore_spark.util import round_robin
+from aistore_spark.util import (
+    map_arrays, map_groups, numpy_column, round_robin,
+)
 
 QUANT = 10_000
 
@@ -188,6 +190,10 @@ def lsh_topk(
     return _ranked(scored, "dot", k)
 
 
+#: output of the all-pairs operators
+_PAIR_SCHEMA = "vec_a bigint, vec_b bigint, dot bigint"
+
+
 def block_pairs_above(
     corpus: DataFrame,
     threshold: int,
@@ -206,42 +212,25 @@ def block_pairs_above(
     sign-LSH buckets (``lsh_topk``) or IVF shards first and run this
     per bucket.
     """
-    import numpy as np
-    import pandas as pd
-
     q = corpus.select(
         F.col(id_col).alias("_id"), quantized(vec_col).alias("_q")
     )
-    # Arrow transfer, never per-row Row objects (same rationale as
-    # dedup.dup_groups): at the ~10^6-vector viability limit collect()
-    # would build millions of Row objects on the driver
-    pdf = q.toPandas()
-    ids = pdf["_id"].to_numpy(dtype=np.int64)
-    mat = np.array(pdf["_q"].tolist(), dtype=np.int64)
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
+    # one Arrow collect, never per-row Row objects: at the ~10^6-vector
+    # viability limit collect() would build millions of them
+    sc = corpus.sparkSession.sparkContext
+    b_ids, b_mat = map(sc.broadcast, _collect_cents(q))
 
     def blocks(batches):
         all_ids, all_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            my_ids = pdf["_id"].to_numpy(dtype=np.int64)
-            my_mat = np.array(list(pdf["_q"]), dtype=np.int64)
-            dots = my_mat @ all_mat.T  # exact int64
+        for my_ids, my_q in batches:
+            # fixed-point operands: every dot is exact in float64
+            dots = my_q.astype(np.float64) @ all_mat.T
             li, ri = np.nonzero(dots >= threshold)
             va, vb = my_ids[li], all_ids[ri]
             keep = va < vb  # upper triangle only, no self-pairs
-            yield pd.DataFrame(
-                {
-                    "vec_a": va[keep],
-                    "vec_b": vb[keep],
-                    "dot": dots[li, ri][keep],
-                }
-            )
+            yield va[keep], vb[keep], dots[li, ri][keep].astype(np.int64)
 
-    return q.mapInPandas(blocks, schema="vec_a bigint, vec_b bigint, dot bigint")
+    return map_arrays(q, ["_id", "_q"], _PAIR_SCHEMA, blocks)
 
 
 def blocked_pairs_above(
@@ -272,9 +261,6 @@ def blocked_pairs_above(
     At 100 TB, cut candidates with sign-LSH/IVF first and run this per
     bucket.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     q = corpus.select(
         F.col(id_col).alias("_id"),
@@ -287,58 +273,41 @@ def blocked_pairs_above(
         .crossJoin(spark.range(n_blocks).select(F.col("id").alias("bj")))
         .filter(F.col("bi") <= F.col("bj"))
     )
+    cell = (F.col("bi") * n_blocks + F.col("bj")).alias("_cell")
     a_side = q.join(F.broadcast(cells), q["_blk"] == cells["bi"]).select(
-        "bi", "bj", F.lit("a").alias("_role"), "_id", "_q"
+        cell, "bi", "bj", F.lit("a").alias("_role"), "_id", "_q"
     )
     b_side = q.join(
         F.broadcast(cells),
         (q["_blk"] == cells["bj"]) & (cells["bi"] != cells["bj"]),
-    ).select("bi", "bj", F.lit("b").alias("_role"), "_id", "_q")
+    ).select(cell, "bi", "bj", F.lit("b").alias("_role"), "_id", "_q")
 
-    def cell_mm(pdf: pd.DataFrame) -> pd.DataFrame:
+    def cell_mm(bi, bj, role, ids, vecs):
         # Diagonality comes from the CELL KEY, never from which roles
         # showed up: a sparse id distribution can leave a cross cell
         # with only a-rows (empty bj block), and treating that as a
         # diagonal cell would re-emit the (bi, bi) pairs — duplicates.
-        diagonal = bool(pdf["bi"].iat[0] == pdf["bj"].iat[0])
-        a = pdf[pdf["_role"] == "a"]
-        b = a if diagonal else pdf[pdf["_role"] == "b"]
-        if not len(a) or not len(b):
-            return pd.DataFrame(
-                {
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "dot": np.array([], dtype=np.int64),
-                }
-            )
-        A = np.array(list(a["_q"]), dtype=np.int64)
-        ai = a["_id"].to_numpy(dtype=np.int64)
-        B = np.array(list(b["_q"]), dtype=np.int64)
-        bi_ = b["_id"].to_numpy(dtype=np.int64)
-        dots = A @ B.T  # exact int64
+        diagonal = bi[0] == bj[0]
+        ids = np.array(ids, dtype=np.int64)
+        vecs = np.array(vecs, dtype=np.int64)
+        is_a = np.array(role) == "a"
+        a, b = is_a, is_a if diagonal else ~is_a
+        dots = vecs[a] @ vecs[b].T  # exact int64
         li, ri = np.nonzero(dots >= threshold)
-        va, vb, d = ai[li], bi_[ri], dots[li, ri]
+        va, vb, d = ids[a][li], ids[b][ri], dots[li, ri]
         if diagonal:
             keep = va < vb  # upper triangle once
-            return pd.DataFrame(
-                {"vec_a": va[keep], "vec_b": vb[keep], "dot": d[keep]}
-            )
-        # cross cell: each unordered pair appears once; normalize order
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(va, vb),
-                "vec_b": np.maximum(va, vb),
-                "dot": d,
-            }
+            va, vb, d = va[keep], vb[keep], d[keep]
+        # a cross cell holds each unordered pair once; normalize order
+        return zip(
+            np.minimum(va, vb).tolist(),
+            np.maximum(va, vb).tolist(),
+            d.tolist(),
         )
 
-    return (
-        a_side.unionByName(b_side)
-        .groupBy("bi", "bj")
-        .applyInPandas(
-            lambda pdf: cell_mm(pdf),
-            schema="vec_a bigint, vec_b bigint, dot bigint",
-        )
+    return map_groups(
+        a_side.unionByName(b_side), "_cell", ["_id"],
+        ["bi", "bj", "_role", "_id", "_q"], _PAIR_SCHEMA, cell_mm,
     )
 
 
@@ -384,13 +353,13 @@ def _collect_cents(centroids_q: DataFrame) -> tuple:
     int64[K], mat float64[K, d]), sorted by id so vectorized
     tie-breaks (first max) equal the declarative ones (lower id). For
     centroids K is sqrt(N) at worst — the same K rows the old
-    crossJoin(broadcast) shipped to every task."""
-    import numpy as np
-
-    rows = sorted(centroids_q.collect(), key=lambda r: r[0])
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    return ids, mat
+    crossJoin(broadcast) shipped to every task. One Arrow collect,
+    converted as :func:`~aistore_spark.util.map_arrays` converts a
+    batch."""
+    table = centroids_q.toArrow()
+    ids, vecs = (numpy_column(c.combine_chunks()) for c in table.columns)
+    order = np.argsort(ids, kind="stable")
+    return ids[order].astype(np.int64), vecs[order].astype(np.float64)
 
 
 def _top_cells(vecs, ids, mat, nprobe: int):
@@ -399,8 +368,6 @@ def _top_cells(vecs, ids, mat, nprobe: int):
     :data:`_CENT_BLOCK`-wide blocks with a running merge, ties to the
     LOWER id (stable lexsort on (-dot, id)). Returns ``(dots, ids)``,
     each ``[n, min(nprobe, K)]``."""
-    import numpy as np
-
     best_d = best_c = None
     for s in range(0, len(ids), _CENT_BLOCK):
         scores = vecs @ mat[s : s + _CENT_BLOCK].T
@@ -419,8 +386,6 @@ def _nearest_code(vj, book):
     L2 (|a|²+|b|²−2a·b, every term exact in float64) against the
     code-sorted *book*: ``(index into book, distance)``. numpy argmin
     takes the FIRST minimum, so ties go to the lower code id."""
-    import numpy as np
-
     d = (
         (vj**2).sum(axis=1)[:, None]
         + (book**2).sum(axis=1)[None, :]
@@ -428,6 +393,29 @@ def _nearest_code(vj, book):
     )
     best = np.argmin(d, axis=1)
     return best, d[np.arange(len(vj)), best]
+
+
+def _pq_codes(vq, book: tuple, m: int, dim: int):
+    """PQ codes of the quantized vectors *vq* ``[n, dim]``: in each of
+    the *m* subspaces, the :func:`_nearest_code` of the subvectors in
+    *book* (the codebook as collected by :func:`_collect_cents`).
+    Returns ``(codes, dists)``, each int64 ``[n, m]``."""
+    cids, cmat = book
+    csub = cmat.reshape(len(cids), m, dim // m)
+    vecs = vq.astype(np.float64).reshape(len(vq), m, dim // m)
+    code = np.empty((len(vq), m), dtype=np.int64)
+    dist = np.empty((len(vq), m), dtype=np.int64)
+    for j in range(m):
+        best, dist[:, j] = _nearest_code(vecs[:, j, :], csub[:, j, :])
+        code[:, j] = cids[best]
+    return code, dist
+
+
+def _vectors(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The corpus as ``(vec_id, vq)``: ids and quantized vectors."""
+    return corpus.select(
+        F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
+    )
 
 
 def _assign_topk(
@@ -448,32 +436,22 @@ def _assign_topk(
     a stable lexsort on (-dot, centroid_id). Bit-identical to the
     declarative form, just vectorized.
     """
-    import numpy as np
-
     def run(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            vecs = np.stack(pdf["vq"].to_numpy()).astype(np.float64)
+        for vec_ids, vq in batches:
+            vecs = vq.astype(np.float64)
             best_d, best_c = _top_cells(vecs, ids, mat, nprobe)
-            kk = best_d.shape[1]
-            rep = np.repeat(np.arange(n), kk)
-            yield pd.DataFrame(
-                {
-                    out_id: pdf[out_id].to_numpy()[rep],
-                    "centroid_id": best_c.reshape(-1),
-                    "cdot": best_d.reshape(-1).astype(np.int64),
-                    "vq": pdf["vq"].to_numpy()[rep],
-                }
+            rep = np.repeat(np.arange(len(vq)), best_d.shape[1])
+            yield (
+                vec_ids[rep],
+                best_c.reshape(-1),
+                best_d.reshape(-1).astype(np.int64),
+                vq[rep],
             )
 
-    return v.mapInPandas(
+    return map_arrays(
+        v, [out_id, "vq"],
+        f"{out_id} bigint, centroid_id bigint, cdot bigint, vq array<bigint>",
         run,
-        schema=(
-            f"{out_id} bigint, centroid_id bigint, cdot bigint, "
-            "vq array<bigint>"
-        ),
     )
 
 
@@ -501,11 +479,12 @@ def _cells(
 
 def _rebalance(df: DataFrame) -> DataFrame:
     """Round-robin exchange breaking input-split inheritance before a
-    compute-heavy stage. mapInPandas preserves the scan's input
+    compute-heavy stage. The Arrow map (``mapInArrow``, through
+    :func:`~aistore_spark.util.map_arrays`) preserves the scan's input
     splits, so on a clustered corpus one split can hold all the
-    heavily-probed rows — the r11 sf10 straggler (one 40-min task,
-    twelve idle). Seam kept separate so tests/test_skew.py can patch
-    it to identity and prove the bench straggler detector
+    heavily-probed rows: measured at sf10, one 40-min task while
+    twelve sat idle. Seam kept separate so tests/test_skew.py can
+    patch it to identity and prove the bench straggler detector
     (aistore_spark/skew.py) trips on exactly that plan shape."""
     return round_robin(df)
 
@@ -630,15 +609,13 @@ def kmeans_train(
     matmul per Arrow batch (:func:`_assign_topk` — no crossJoin, no
     window over the vector×centroid product), then one (centroid, dim)
     agg. The corpus moves through ONE linear-bytes round-robin
-    exchange before the loop (r14: ``_assign_topk``'s mapInPandas
-    preserves the scan's input splits, so a single-row-group parquet
-    ran every pass's matmul in one task — the sf10 skew probe read
-    28x on ann6b), and the plan depth is constant in *iters* because
+    exchange before the loop, because ``_assign_topk``'s Arrow map
+    preserves the scan's input splits: a single-row-group parquet
+    would run every pass's matmul in one task (the sf10 skew probe
+    read 28x on ann6b). The plan depth is constant in *iters* because
     each pass's means are literals in the next pass's closure (empty
     cells drop out, exactly as the SQL twin's GROUP BY does).
     """
-    import numpy as np
-
     # exchange first, quantize after — the projection compute spreads
     # with the rows instead of running inside the (possibly single)
     # scan split. PINNED (r16): every training pass re-reads this
@@ -705,46 +682,22 @@ def pq_encode(
     codeword matrix is sorted by code and numpy argmin takes the
     first minimum.
     """
-    import numpy as np
-
-    sub = dim // m
-    cids, cmat = _collect_cents(
-        codebook.select(
-            F.col(id_col).alias("code"), quantized(vec_col).alias("cbvec")
-        )
-    )
-    csub = cmat.reshape(len(cids), m, sub)  # (k, m, sub)
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
-    )
+    book = _collect_cents(codebook.select(id_col, quantized(vec_col)))
+    m_idx = np.arange(m, dtype=np.int32)
 
     def run(batches):
-        m_idx = np.arange(m, dtype=np.int32)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            vecs = (
-                np.stack(pdf["vq"].to_numpy())
-                .astype(np.float64)
-                .reshape(n, m, sub)
-            )
-            code = np.empty((n, m), dtype=np.int64)
-            dist = np.empty((n, m), dtype=np.int64)
-            for j in range(m):
-                best, dist[:, j] = _nearest_code(vecs[:, j, :], csub[:, j, :])
-                code[:, j] = cids[best]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), m),
-                    "m": np.tile(m_idx, n),
-                    "code": code.reshape(-1),
-                    "dist": dist.reshape(-1),
-                }
+        for vec_ids, vq in batches:
+            code, dist = _pq_codes(vq, book, m, dim)
+            yield (
+                np.repeat(vec_ids, m),
+                np.tile(m_idx, len(vq)),
+                code.reshape(-1),
+                dist.reshape(-1),
             )
 
-    return v.mapInPandas(
-        run, schema="vec_id bigint, m int, code bigint, dist bigint"
+    return map_arrays(
+        _vectors(corpus, id_col, vec_col), ["vec_id", "vq"],
+        "vec_id bigint, m int, code bigint, dist bigint", run,
     )
 
 
@@ -778,8 +731,8 @@ def pq_adc_topk(
     codes = pq_encode_wide(
         corpus, codebook, m=m, dim=dim, id_col=id_col, vec_col=vec_col
     )
-    # Round-robin the codes before the fan-out — the vectorized
-    # pq_encode preserves the corpus scan's input splits, so the
+    # Round-robin the codes before the fan-out — pq_encode_wide's
+    # Arrow map preserves the corpus scan's input splits, so the
     # dominant scoring work would otherwise run at split-count
     # parallelism. The shuffle moves one m-int code row per vector —
     # linear, trivial against the #queries-scaled fan-out it
@@ -789,9 +742,8 @@ def pq_adc_topk(
     cids, cmat = _collect_cents(codebook.select(id_col, quantized(vec_col)))
     q_ids, qmat = _collect_cents(queries.select(id_col, quantized(vec_col)))
     lut = _adc_lut(qmat, cmat, m, dim)
-    # r16: the query fan-out happens inside the scoring kernel — the
-    # old crossJoin(broadcast(query ids)) shipped Q×N candidate rows
-    # through Arrow just so _adc_score could gather them row-wise.
+    # the query fan-out happens inside the scoring kernel, so only the
+    # N code rows cross the Python boundary, never Q×N candidate rows
     scored = _adc_topk_full_scan(codes, q_ids, cids, lut, m, k)
     return _ranked(scored, "adc", k, desc=False)
 
@@ -810,41 +762,16 @@ def pq_encode_wide(
     candidate stream is never exploded ×m (at sf100 the long form
     turned 566M candidates into 4.5B join-probe rows — the r14
     third-decade finding)."""
-    import numpy as np
-
-    sub = dim // m
-    cids, cmat = _collect_cents(
-        codebook.select(
-            F.col(id_col).alias("code"), quantized(vec_col).alias("cbvec")
-        )
-    )
-    csub = cmat.reshape(len(cids), m, sub)
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
-    )
+    book = _collect_cents(codebook.select(id_col, quantized(vec_col)))
 
     def run(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            vecs = (
-                np.stack(pdf["vq"].to_numpy())
-                .astype(np.float64)
-                .reshape(n, m, sub)
-            )
-            code = np.empty((n, m), dtype=np.int64)
-            for j in range(m):
-                best, _ = _nearest_code(vecs[:, j, :], csub[:, j, :])
-                code[:, j] = cids[best]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "codes": list(code),
-                }
-            )
+        for vec_ids, vq in batches:
+            yield vec_ids, _pq_codes(vq, book, m, dim)[0]
 
-    return v.mapInPandas(run, schema="vec_id bigint, codes array<bigint>")
+    return map_arrays(
+        _vectors(corpus, id_col, vec_col), ["vec_id", "vq"],
+        "vec_id bigint, codes array<bigint>", run,
+    )
 
 
 def _assign_encode_wide(
@@ -857,13 +784,11 @@ def _assign_encode_wide(
     vec_col: str,
 ) -> DataFrame:
     """ONE corpus pass producing both the rn=1 cell assignment and the
-    wide PQ codes — ``(vec_id, centroid_id, codes[m])`` (r16, guide
-    §1.2/§2.4): ivfpq_topk previously scanned the corpus twice (one
-    mapInPandas for :func:`_cells`, one for :func:`pq_encode_wide`)
-    and re-joined the two corpus-sized frames on vec_id — a shuffle
-    of both sides that exists only because the index was built in two
-    passes. The fused kernel runs the same two numpy blocks per Arrow
-    batch and the join disappears.
+    wide PQ codes — ``(vec_id, centroid_id, codes[m])``: one Arrow map
+    (:func:`~aistore_spark.util.map_arrays`) runs the numpy blocks of
+    :func:`_cells` and :func:`pq_encode_wide` on each batch, so the
+    index needs no second corpus scan and no corpus-sized join of the
+    two results on vec_id.
 
     Exactness: identical math to the two parents — blocked argmax-dot
     with ties to the LOWER centroid id (ids sorted, lexsort), per-
@@ -871,39 +796,16 @@ def _assign_encode_wide(
     the code-sorted matrix); all operands fixed-point ints exact in
     float64. *cents* and *code* are the centroid and codebook frames
     as collected by :func:`_collect_cents`."""
-    import numpy as np
-
-    sub = dim // m
     ids, mat = cents
-    cids, cmat = code
-    csub = cmat.reshape(len(cids), m, sub)
-    v = corpus.select(
-        F.col(id_col).alias("vec_id"), quantized(vec_col).alias("vq")
-    )
 
     def run(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            flat = np.stack(pdf["vq"].to_numpy()).astype(np.float64)
-            _, best_c = _top_cells(flat, ids, mat, 1)
-            vecs = flat.reshape(n, m, sub)
-            code = np.empty((n, m), dtype=np.int64)
-            for j in range(m):
-                best, _ = _nearest_code(vecs[:, j, :], csub[:, j, :])
-                code[:, j] = cids[best]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "centroid_id": best_c.reshape(-1),
-                    "codes": list(code),
-                }
-            )
+        for vec_ids, vq in batches:
+            _, best_c = _top_cells(vq.astype(np.float64), ids, mat, 1)
+            yield vec_ids, best_c.reshape(-1), _pq_codes(vq, code, m, dim)[0]
 
-    return v.mapInPandas(
-        run,
-        schema="vec_id bigint, centroid_id bigint, codes array<bigint>",
+    return map_arrays(
+        _vectors(corpus, id_col, vec_col), ["vec_id", "vq"],
+        "vec_id bigint, centroid_id bigint, codes array<bigint>", run,
     )
 
 
@@ -927,8 +829,6 @@ def _adc_lut(qmat, cmat, m: int, dim: int):
     Exactness: operands are fixed-point integers (|q| ≤ 1e4), so every
     squared difference and sub-dim sum is an exact integer in float64
     before the int64 cast."""
-    import numpy as np
-
     sub = dim // m
     csub = cmat.reshape(len(cmat), m, sub)  # (k, m, sub)
     qsub = qmat.reshape(len(qmat), m, sub)
@@ -939,17 +839,23 @@ def _adc_lut(qmat, cmat, m: int, dim: int):
     ).astype(np.int64)
 
 
-def _keep_best(acc, out: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Merge a batch's ``(query_id, neighbor_id, adc)`` rows into the
+def _keep_best(acc, out: tuple, k: int) -> tuple:
+    """Merge a batch's ``(query_id, neighbor_id, adc)`` columns into the
     running per-query best *k* under the final window's total order
     (adc asc, neighbor_id asc) — exact, so partial top-k never drops a
-    global winner."""
-    acc = out if acc is None else pd.concat([acc, out])
-    return (
-        acc.sort_values(["query_id", "adc", "neighbor_id"])
-        .groupby("query_id", sort=False)
-        .head(k)
-    )
+    global winner. Returns the kept columns sorted by (query_id, adc,
+    neighbor_id)."""
+    if acc is not None:
+        out = tuple(np.concatenate(c) for c in zip(acc, out))
+    order = np.lexsort((out[1], out[2], out[0]))
+    q = out[0][order]
+    # rank within the query: position minus the query's first position
+    keep = order[np.arange(len(q)) - np.searchsorted(q, q) < k]
+    return tuple(c[keep] for c in out)
+
+
+#: output of the ADC scoring kernels
+_ADC_SCHEMA = "query_id bigint, neighbor_id bigint, adc bigint"
 
 
 def _adc_score(
@@ -969,16 +875,10 @@ def _adc_score(
     asc, neighbor_id asc) — per-partition top-k is exact for a total
     order, so the global window sees ≤ partitions × queries × k rows
     instead of the full candidate stream."""
-    import numpy as np
-
     def run(batches):
         js = np.arange(m)
         acc = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bq = pdf["query_id"].to_numpy()
-            bc = np.stack(pdf["codes"].to_numpy())
+        for bq, bn, bc in batches:
             qi = np.searchsorted(q_ids, bq).clip(0, len(q_ids) - 1)
             ci = np.searchsorted(code_ids, bc).clip(0, len(code_ids) - 1)
             # membership check (ADVICE-r14): searchsorted on an absent
@@ -995,23 +895,16 @@ def _adc_score(
                     "the ADC LUT — candidates were built against a "
                     "different queries/codebook frame"
                 )
-            adc = lut[qi[:, None], js[None, :], ci].sum(axis=1)
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "adc": adc,
-                }
-            )
+            out = bq, bn, lut[qi[:, None], js[None, :], ci].sum(axis=1)
             if k_keep is None:
                 yield out
-                continue
-            acc = _keep_best(acc, out, k_keep)
-        if k_keep is not None and acc is not None:
+            else:
+                acc = _keep_best(acc, out, k_keep)
+        if acc is not None:
             yield acc
 
-    return cands.mapInPandas(
-        run, schema="query_id bigint, neighbor_id bigint, adc bigint"
+    return map_arrays(
+        cands, ["query_id", "neighbor_id", "codes"], _ADC_SCHEMA, run
     )
 
 
@@ -1033,19 +926,11 @@ def _adc_topk_full_scan(
     to the lower neighbor, the final window's comparator; self-matches
     (vec_id == query_id) are dropped, so a k+1 per-batch cut always
     leaves k valid rows when they exist."""
-    import numpy as np
-
     def run(batches):
         acc = None
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            bn = pdf["vec_id"].to_numpy()
-            bc = np.stack(pdf["codes"].to_numpy())
+        for bn, bc in batches:
             order = np.argsort(bn, kind="stable")
-            bn = bn[order]
-            bc = bc[order]
+            bn, bc = bn[order], bc[order]
             ci = np.searchsorted(code_ids, bc).clip(0, len(code_ids) - 1)
             if not np.array_equal(code_ids[ci], bc):
                 raise ValueError(
@@ -1053,37 +938,29 @@ def _adc_topk_full_scan(
                     "ADC LUT — codes were built against a different "
                     "codebook frame"
                 )
-            kk = min(k + 1, n)
-            frames = []
+            kk = min(k + 1, len(bn))
+            parts = []
             # chunk the query axis so the (Qc, n) score block stays
             # bounded regardless of query count
             for s in range(0, len(q_ids), 512):
                 qs = q_ids[s : s + 512]
                 lut_s = lut[s : s + 512]
-                adc = np.zeros((len(qs), n), dtype=np.int64)
+                adc = np.zeros((len(qs), len(bn)), dtype=np.int64)
                 for j in range(m):
                     adc += lut_s[:, j, :][:, ci[:, j]]
                 idx = np.argsort(adc, axis=1, kind="stable")[:, :kk]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(qs, kk),
-                            "neighbor_id": bn[idx].reshape(-1),
-                            "adc": np.take_along_axis(
-                                adc, idx, axis=1
-                            ).reshape(-1),
-                        }
-                    )
-                )
-            out = pd.concat(frames)
-            out = out[out["query_id"] != out["neighbor_id"]]
-            acc = _keep_best(acc, out, k)
+                parts.append((
+                    np.repeat(qs, kk),
+                    bn[idx].reshape(-1),
+                    np.take_along_axis(adc, idx, axis=1).reshape(-1),
+                ))
+            q, nb, adc = (np.concatenate(c) for c in zip(*parts))
+            other = q != nb
+            acc = _keep_best(acc, (q[other], nb[other], adc[other]), k)
         if acc is not None:
             yield acc
 
-    return codes.mapInPandas(
-        run, schema="query_id bigint, neighbor_id bigint, adc bigint"
-    )
+    return map_arrays(codes, ["vec_id", "codes"], _ADC_SCHEMA, run)
 
 
 #: per-partition ADC top-k pruning is applied when k is at most this —
@@ -1420,35 +1297,27 @@ def semantic_cell_pairs(
     k ~ sqrt(N) (k-means refined via :func:`kmeans_step`) so cells stay
     executor-sized; skewed cells split the same way LSH hot buckets do.
     """
-    import numpy as np
-    import pandas as pd
-
-    # one pass: _cells(nprobe=1) assigns via a partial-aggregable
-    # min(struct) (no window over the vector x centroid product) and
-    # carries the quantized vector along — no re-quantize, no second
-    # corpus join
+    # one pass: _cells(nprobe=1) assigns each vector in one Arrow map
+    # (no window over the vector x centroid product) and carries the
+    # quantized vector along — no re-quantize, no second corpus join
     cents = _collect_cents(centroids.select(id_col, quantized(vec_col)))
     cells = _cells(corpus, cents, "vec_id", 1, id_col, vec_col).withColumnRenamed(
         "vq", "q"
     )
-    schema = "centroid_id bigint, vec_a bigint, vec_b bigint, dot bigint"
 
-    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        M = np.array(pdf["q"].tolist(), dtype=np.int64)
+    def pairs(cell, ids, vecs):
+        ids, M = np.array(ids, dtype=np.int64), np.array(vecs, dtype=np.int64)
         G = M @ M.T
         ii, jj = np.nonzero(np.triu(G >= threshold, k=1))
-        return pd.DataFrame(
-            {
-                "centroid_id": np.full(len(ii), int(pdf["centroid_id"].iloc[0]), dtype=np.int64),
-                "vec_a": ids[ii],
-                "vec_b": ids[jj],
-                "dot": G[ii, jj],
-            }
+        return zip(
+            [cell[0]] * len(ii), ids[ii].tolist(), ids[jj].tolist(),
+            G[ii, jj].tolist(),
         )
 
-    return cells.groupBy("centroid_id").applyInPandas(pairs, schema=schema)
+    return map_groups(
+        cells, "centroid_id", ["vec_id"], ["centroid_id", "vec_id", "q"],
+        "centroid_id bigint, " + _PAIR_SCHEMA, pairs,
+    )
 
 
 def pq_train(
@@ -1474,34 +1343,26 @@ def pq_train(
     Returns the final pass's long form ``(m, code, dim, mean_q,
     n_vecs)`` with ``dim`` 1..dim/m within the subspace.
 
-    Scale shape per pass: the codebook (m×k rows of 16 ints)
-    broadcasts; assignment is a partial-aggregable min(struct) per
-    (vector, subspace); means are one (m, code, dim) agg. The corpus
-    never shuffles; the codebook frame is localCheckpoint-ed between
-    passes so plan depth stays constant.
+    Scale shape per pass: the codebook (m×k rows of 16 ints) is a
+    literal of the pass's closure, so plan depth stays constant; each
+    partition assigns its vectors in one numpy kernel and emits partial
+    integer (sum, count) rows per (m, code, dim); means are one
+    (m, code, dim) agg over those partials. The corpus never shuffles.
     """
-    import numpy as np
-
     from aistore_spark.util import pin, spread
 
     sub = dim // m
-    # r16 vectorization (guide §4.2, the pq_encode pattern): the old
-    # pass joined every (vector, subspace) row against the broadcast
-    # codebook (×k rows), evaluated the L2 in interpreted zip_with/
-    # aggregate HOFs, and min(struct)-assigned via SortAggregate (the
-    # struct buffer is immutable, so no hash agg). Each pass now runs
-    # ONE numpy kernel per Arrow batch — blocked |a|²+|b|²−2a·b per
-    # subspace, argmin over the code axis — and emits PARTIAL integer
-    # (sum, count) rows per (m, code, dim): k×dim short rows per batch
-    # instead of N×k scored rows, so the means agg shuffles a constant
-    # regardless of corpus size. Identical values: operands are
-    # fixed-point ints |q| ≤ 1e4, every squared diff (≤ 4e8) and
-    # sub-dim sum (≤ 6.4e9) is exact in float64; codeword rows are
-    # sorted by code id and numpy argmin takes the FIRST minimum, so
-    # ties break to the lower code exactly like min(struct(dist,
-    # code)); the final mean is `sum(partial sums) div sum(partial
-    # counts)` — the same total sum and count the old per-row agg fed
-    # to the same `div`.
+    # Each pass runs ONE numpy kernel per partition — blocked
+    # |a|²+|b|²−2a·b per subspace, argmin over the code axis — and
+    # emits PARTIAL integer (sum, count) rows per (m, code, dim): k×dim
+    # short rows per partition instead of N×k scored rows, so the means
+    # agg shuffles a constant regardless of corpus size. Exact values:
+    # operands are fixed-point ints |q| ≤ 1e4, every squared diff
+    # (≤ 4e8) and sub-dim sum (≤ 6.4e9) is exact in float64; codeword
+    # rows are sorted by code id and numpy argmin takes the FIRST
+    # minimum, so ties break to the lower code exactly like
+    # min(struct(dist, code)); the final mean is `sum(partial sums)
+    # div sum(partial counts)`, the cell's total sum and count.
     cids0, cmat0 = _collect_cents(
         codebook0.select(
             F.col(id_col).alias("code"), quantized(vec_col).alias("cbvec")
@@ -1530,46 +1391,29 @@ def pq_train(
         def run(batches):
             sums = [np.zeros((len(ids_list[j]), sub), np.int64) for j in range(m)]
             cnts = [np.zeros(len(ids_list[j]), np.int64) for j in range(m)]
-            seen = False
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                seen = True
-                vecs = (
-                    np.stack(pdf["vq"].to_numpy())
-                    .astype(np.float64)
-                    .reshape(n, m, sub)
-                )
+            for (vq,) in batches:
+                vecs = vq.reshape(len(vq), m, sub)
                 for j in range(m):
                     vj = vecs[:, j, :]
-                    best, _ = _nearest_code(vj, mats[j])
-                    np.add.at(sums[j], best, vj.astype(np.int64))
+                    best, _ = _nearest_code(vj.astype(np.float64), mats[j])
+                    np.add.at(sums[j], best, vj)
                     np.add.at(cnts[j], best, 1)
-            if not seen:
-                return
-            rows_m, rows_code, rows_dim, rows_sum, rows_n = [], [], [], [], []
+            # one partial row per (subspace, live code, dim)
+            parts = []
             for j in range(m):
                 live = np.nonzero(cnts[j])[0]
-                for idx in live:
-                    rows_m.extend([j] * sub)
-                    rows_code.extend([int(ids_list[j][idx])] * sub)
-                    rows_dim.extend(range(1, sub + 1))
-                    rows_sum.extend(int(x) for x in sums[j][idx])
-                    rows_n.extend([int(cnts[j][idx])] * sub)
-            yield pd.DataFrame(
-                {
-                    "m": pd.array(rows_m, dtype="int32"),
-                    "code": pd.array(rows_code, dtype="int64"),
-                    "dim": pd.array(rows_dim, dtype="int64"),
-                    "sum_q": pd.array(rows_sum, dtype="int64"),
-                    "n": pd.array(rows_n, dtype="int64"),
-                }
-            )
+                parts.append((
+                    np.full(len(live) * sub, j, dtype=np.int32),
+                    np.repeat(ids_list[j][live], sub),
+                    np.tile(np.arange(1, sub + 1), len(live)),
+                    sums[j][live].reshape(-1),
+                    np.repeat(cnts[j][live], sub),
+                ))
+            yield tuple(np.concatenate(c) for c in zip(*parts))
 
-        partials = v.mapInPandas(
-            run,
-            schema="m int, code bigint, dim bigint, sum_q bigint, n bigint",
+        partials = map_arrays(
+            v, ["vq"],
+            "m int, code bigint, dim bigint, sum_q bigint, n bigint", run,
         )
         return (
             partials.groupBy("m", "code", "dim")

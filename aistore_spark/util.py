@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -196,8 +198,8 @@ def ensure_shipped(spark) -> None:
     """Make the ``aistore_spark`` package importable on executor Python
     workers regardless of how the SparkSession was built.
 
-    Our Python-boundary closures (:func:`map_rows`, :func:`map_groups`,
-    pandas UDFs) pickle by module reference; a
+    Our Python-boundary closures (:func:`map_rows`, :func:`map_arrays`,
+    :func:`map_groups`, pandas UDFs) pickle by module reference; a
     caller-provided session (the driver's harness) may spawn workers
     without this repo on PYTHONPATH. ``addPyFile`` of a package zip is
     runtime-safe and idempotent per SparkContext.
@@ -218,14 +220,48 @@ def ensure_shipped(spark) -> None:
     sc._aistore_spark_shipped = True
 
 
-def _arrow_batch(rows: list[tuple], out: pa.Schema) -> pa.RecordBatch:
-    """Output tuples *rows* as one Arrow batch with the types of *out*:
-    ``applyInArrow`` rejects a column whose Arrow type differs from the
-    declared one (an int64 column where the schema says ``int``)."""
-    columns = list(zip(*rows)) or [()] * len(out)
+def numpy_column(col: pa.Array) -> np.ndarray:
+    """One Arrow column of a batch as numpy: a scalar column as a 1-D
+    array, a list column as a 2-D ``[rows, width]`` array over its
+    ``flatten()`` values, so a sliced batch reads only its own rows. A
+    ragged or null list raises ``ValueError``."""
+    if not pa.types.is_list(col.type):
+        return col.to_numpy(zero_copy_only=False)
+    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    width = int(lengths[0]) if len(col) else 0
+    if (lengths != width).any():
+        raise ValueError(
+            f"list column is ragged or null: row lengths {set(lengths)}"
+        )
+    return col.flatten().to_numpy().reshape(len(col), width)
+
+
+def _arrow_column(values, arrow_type: pa.DataType) -> pa.Array:
+    """*values* (a sequence, a 1-D numpy array, or a 2-D numpy array
+    for a list type) as an Arrow array of *arrow_type*."""
+    if isinstance(values, np.ndarray) and values.ndim == 2:
+        rows, width = values.shape
+        return pa.ListArray.from_arrays(
+            np.arange(rows + 1, dtype=np.int32) * width,
+            pa.array(values.reshape(-1), type=arrow_type.value_type),
+            type=arrow_type,
+        )
+    return pa.array(values, type=arrow_type)
+
+
+def _arrow_batch(columns, out: pa.Schema) -> pa.RecordBatch:
+    """The output builder of all three maps: *columns*, one per field
+    of *out*, as one Arrow batch with the types of *out*. The Arrow
+    maps reject a column whose Arrow type differs from the declared one
+    (an int64 column where the schema says ``int``)."""
     return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(columns, out)], schema=out
+        [_arrow_column(c, f.type) for c, f in zip(columns, out)], schema=out
     )
+
+
+def _row_batch(rows: list[tuple], out: pa.Schema) -> pa.RecordBatch:
+    """Output tuples *rows* through :func:`_arrow_batch`."""
+    return _arrow_batch(list(zip(*rows)) or [()] * len(out), out)
 
 
 def map_rows(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
@@ -240,9 +276,32 @@ def map_rows(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
     def run(batches):
         for batch in batches:
             inputs = [batch.column(c).to_pylist() for c in cols]
-            yield _arrow_batch(
+            yield _row_batch(
                 [r for vals in zip(*inputs) for r in fn(*vals)], out
             )
+
+    return df.select(*dict.fromkeys(cols)).mapInArrow(run, schema)
+
+
+def map_arrays(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
+    """The column map for numpy kernels: ``fn`` takes an iterator over
+    the non-empty ``mapInArrow`` batches of one partition, each a
+    tuple of numpy arrays for *cols* (a scalar column as 1-D, an
+    ``array<bigint>`` column as a 2-D ``[rows, width]`` array; see
+    :func:`numpy_column`), and yields tuples of numpy columns in the
+    column order of the DDL *schema*, where a 2-D array goes out as a
+    list column. Because ``fn`` owns the iterator, a kernel may
+    accumulate across batches and yield once at the end. No shuffle."""
+    out = to_arrow_schema(StructType.fromDDL(schema))
+
+    def run(batches):
+        arrays = (
+            tuple(numpy_column(batch.column(c)) for c in cols)
+            for batch in batches
+            if batch.num_rows
+        )
+        for columns in fn(arrays):
+            yield _arrow_batch(columns, out)
 
     return df.select(*dict.fromkeys(cols)).mapInArrow(run, schema)
 
@@ -268,7 +327,7 @@ def map_groups(
     def run(table: pa.Table) -> pa.Table:
         table = table.sort_by(sort_keys)
         rows = list(fn(*(table.column(c).to_pylist() for c in cols)))
-        return pa.Table.from_batches([_arrow_batch(rows, out)])
+        return pa.Table.from_batches([_row_batch(rows, out)])
 
     n = df.sparkSession.sparkContext.defaultParallelism
     return (

@@ -4,6 +4,7 @@ consistency."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -546,12 +547,13 @@ def test_gif_extension_blocks_are_skipped(spark):
 
 
 def test_map_rows_empty_output_keeps_schema(spark):
-    """The engine's row map: an empty input frame, and rows that all
-    yield zero tuples, give an empty output with the declared types."""
+    """The engine's row and column maps: an empty input frame, and rows
+    (or a kernel) that yield nothing, give an empty output with the
+    declared types."""
     from pyspark.sql.types import StructType
 
     from aistore_spark.operators import multimodal as mm
-    from aistore_spark.util import map_rows
+    from aistore_spark.util import map_arrays, map_rows
 
     ids = spark.createDataFrame([(1,), (2,)], "doc_id bigint")
     empty = mm.decode_png_meta(
@@ -566,6 +568,62 @@ def test_map_rows_empty_output_keeps_schema(spark):
         ("doc_id", "bigint"), ("band", "int"),
         ("name", "string"), ("data", "binary"),
     ]
+    # the column map: an empty input, and a kernel that yields nothing
+    arrays_schema = "doc_id bigint, band int, vq array<bigint>"
+
+    def echo(batches):
+        for (doc_id,) in batches:
+            yield doc_id, doc_id, np.stack([doc_id, doc_id], axis=1)
+
+    no_ids = ids.where(F.col("doc_id") < 0)
+    for out in (
+        map_arrays(no_ids, ["doc_id"], arrays_schema, echo),
+        map_arrays(ids, ["doc_id"], arrays_schema, lambda batches: iter(())),
+    ):
+        assert out.collect() == []
+        assert out.dtypes == [
+            ("doc_id", "bigint"), ("band", "int"), ("vq", "array<bigint>"),
+        ]
+
+
+def test_map_arrays_list_columns_round_trip(spark):
+    """An ``array<bigint>`` column reaches the kernel as a 2-D array and
+    a 2-D output goes back out as ``array<bigint>``, row for row."""
+    from aistore_spark.util import map_arrays
+
+    rows = [(i, [i, -i, 3 * i]) for i in range(50)]
+    df = spark.createDataFrame(rows, "vec_id bigint, vq array<bigint>")
+
+    def negate(batches):
+        for vec_id, vq in batches:
+            assert vq.shape == (len(vec_id), 3) and vq.dtype == np.int64
+            yield vec_id, -vq
+
+    schema = "vec_id bigint, vq array<bigint>"
+    out = map_arrays(df, ["vec_id", "vq"], schema, negate)
+    assert out.dtypes == [("vec_id", "bigint"), ("vq", "array<bigint>")]
+    got = sorted((r.vec_id, list(r.vq)) for r in out.collect())
+    assert got == [(i, [-x for x in v]) for i, v in rows]
+
+
+def test_numpy_column_reads_a_sliced_list_array_and_rejects_ragged():
+    """A sliced ``list<int64>`` array (non-zero offset) converts to its
+    own rows only; a ragged or null list raises ``ValueError``."""
+    import pyarrow as pa
+
+    from aistore_spark.util import numpy_column
+
+    lists = pa.array([[0, 1], [2, 3], [4, 5], [6, 7]], pa.list_(pa.int64()))
+    part = lists.slice(1, 2)
+    assert part.offset == 1
+    np.testing.assert_array_equal(numpy_column(part), [[2, 3], [4, 5]])
+    assert numpy_column(lists.slice(2, 0)).shape == (0, 0)
+    np.testing.assert_array_equal(
+        numpy_column(pa.array([7, 8], pa.int64()).slice(1)), [8]
+    )
+    for bad in ([[1, 2], [3]], [[1, 2], None]):
+        with pytest.raises(ValueError):
+            numpy_column(pa.array(bad, pa.list_(pa.int64())))
 
 
 def test_dup_pipeline_shares_verified_pairs_one_execution(spark, sf_dir):

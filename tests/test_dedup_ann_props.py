@@ -4,6 +4,9 @@ test style: invariants, not golden files — SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from aistore_spark.operators import dedup, simsearch
@@ -691,3 +694,35 @@ def test_ann9d_sqrt_cells_recall_floor(spark):
     assert hits / nt >= 0.9
     emb.unpersist()
     truth.unpersist()
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 3),  # query_id
+            st.integers(0, 40),  # neighbor_id
+            st.integers(0, 3),  # adc: few values, so ties span batches
+            st.integers(0, 3),  # batch the row arrives in
+        ),
+        unique_by=lambda r: (r[0], r[1]),
+        max_size=60,
+    ),
+    k=st.integers(1, 12),
+)
+def test_keep_best_equals_sorted_reference(rows, k):
+    """The running per-partition top-k of the ADC kernels, folded over
+    batches, keeps exactly the first *k* rows per query of one sort by
+    (query_id, adc, neighbor_id), including for queries with fewer
+    than *k* rows and for batches that arrive empty."""
+    acc = None
+    for b in range(4):
+        batch = [r[:3] for r in rows if r[3] == b]
+        cols = np.array(batch, dtype=np.int64).reshape(-1, 3).T
+        acc = simsearch._keep_best(acc, tuple(cols), k)
+    want, taken = [], {}
+    for q, nb, adc, _ in sorted(rows, key=lambda r: (r[0], r[2], r[1])):
+        taken[q] = taken.get(q, 0) + 1
+        if taken[q] <= k:
+            want.append((q, nb, adc))
+    assert list(zip(*(c.tolist() for c in acc))) == want

@@ -10,6 +10,7 @@ Analysis-only: plans are compiled at sf0.001 without executing.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 import pytest
 
@@ -31,6 +32,31 @@ def test_no_plan_antipatterns(spark, name):
     )
     for pattern, why in FORBIDDEN:
         assert not re.search(pattern, plan), f"{name}: {why}\n{plan[:2000]}"
+
+
+#: physical operators that run Python code
+PYTHON_NODE = re.compile(r"InPandas|InArrow|Python")
+
+
+def test_ivfpq_topk_crosses_python_through_arrow_maps_only(spark):
+    """Every numpy kernel of the IVF-PQ read path (assign + encode, probe
+    cells, ADC scoring) crosses the Python boundary through the Arrow
+    map: the executed plan's Python nodes are all ``MapInArrow``."""
+    df = QUERIES["ann9_ivfpq_topk"](spark, SF)
+    assert df.collect()
+    python = [n for n, _ in _final_nodes(df) if PYTHON_NODE.search(n)]
+    assert python and set(python) == {"MapInArrow"}, python
+
+
+@pytest.mark.parametrize(
+    "path", ["aistore_spark/operators/simsearch.py", "aistore_spark/util.py"]
+)
+def test_module_has_no_pandas_boundary(path):
+    """The similarity-search kernels and the engine's Python-boundary
+    maps use Arrow and numpy only: no pandas import, no pandas map."""
+    src = (Path(__file__).resolve().parent.parent / path).read_text()
+    for needle in ("import pandas", "mapInPandas(", "applyInPandas("):
+        assert needle not in src, f"{path} contains {needle!r}"
 
 
 def _final_nodes(df):

@@ -45,7 +45,9 @@ SNAPSHOT = REPO / "tests" / "driver_green_fps.json"
 #: s4b covers the shared catalog view derivations (catalog.py + the
 #: _objects/_members/_requests/_io_members builders in
 #: benchqueries.py, matched by AST name below); mm12 covers the
-#: media parsers and Arrow stages every mm/t9-t11 query runs through.
+#: media parsers and Arrow stages every mm/t9-t11 query runs through;
+#: ann8 covers the similarity-search kernels (it reaches
+#: pq_encode_wide, _adc_topk_full_scan and _keep_best).
 HELPER_SENTINELS: dict[str, list[str]] = {
     "p2_extract_member": [
         "aistore_spark/sources/tables.py",
@@ -62,6 +64,9 @@ HELPER_SENTINELS: dict[str, list[str]] = {
     ],
     "mm12_media_decode_io": [
         "aistore_spark/operators/multimodal.py",
+    ],
+    "ann8_pq_adc_topk": [
+        "aistore_spark/operators/simsearch.py",
     ],
 }
 
