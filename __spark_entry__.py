@@ -62,6 +62,11 @@ DRIVER_CHECK_PRIORITY = [
     "t8_direct_put",
     "s4c_lz4_listing",
     "t13_face_detect",
+    "t11_keras_augment",
+    "t12_ws_etl_channel",
+    "ds2_download_exec",
+    "ds2b_download_http",
+    "ds3b_download_etl_http",
     # helper sentinels (tools/query_fps.py HELPER_SENTINELS)
     "p2_extract_member",
     "p4_archive_append",
@@ -77,16 +82,11 @@ DRIVER_CHECK_PRIORITY = [
     "p1_pack_archive",
     # operator-family representatives
     "ann9_ivfpq_topk",
-    "ann7b_pq_train",
-    "dd9_semantic_dedup",
     "dd5_embedding_neardup",
     "mm8_gif_decode",
-    "p3_extract_regex_pack",
     "pipe3_dedup_report",
-    "g4_batch_loader",
     "p1b_pack_archive_io",
     "s4d_shard_index_io",
-    "mm11_dhash_neardup",
     "mm9_media_dispatch",
     "mm4b_gif_frame_extract",
 ]

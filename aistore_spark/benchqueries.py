@@ -1038,7 +1038,7 @@ def _docs_with_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t1_inline_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1/T5: inline ETL through the 3-arg transform contract
-    (base_etl_server.py:196-235) — a real Pandas UDF computes
+    (base_etl_server.py:196-235) — a real Arrow UDF computes
     path|args|charlen per object."""
 
     def char_info(data: bytes, path: str, args: str) -> bytes:
@@ -1151,7 +1151,7 @@ _TAR_SIZE_SQL = """
 def p1_pack_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1: pack members into real TAR shards (xact/xs/archive.go:106-161).
 
-    Spark builds actual USTAR bytes per shard (applyInPandas); the
+    Spark builds actual USTAR bytes per shard (applyInArrow); the
     oracle cross-checks the exact archive size analytically and the
     entry ORDER via an md5 fingerprint.
     """
@@ -1612,7 +1612,7 @@ def p1b_pack_archive_io(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards (``orderkey % 23`` — coprime to the 128-way input layout,
     the D5 reshard shape), durably WRITE one genuine USTAR ``.tar``
     per output shard to disk (io_fixtures.write_packed_shards — one
-    applyInPandas packing task per shard), then RE-READ the written
+    applyInArrow packing task per shard), then RE-READ the written
     files via binaryFile and index them: member counts and payload
     bytes from the re-parsed tar headers, ``tar_bytes`` the actual
     file length on disk, and an entries fingerprint over per-member
@@ -3090,7 +3090,7 @@ def t11_keras_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synthesized baseline JPEG with the in-repo codec, apply
     theta=180 + horizontal flip + 5/4 brightness (the keras
     apply_transform parameter shape) and re-encode at quality 90,
-    all through the actual T1 inline-ETL Pandas-UDF plumbing; then a
+    all through the actual T1 inline-ETL Arrow-UDF plumbing; then a
     second full decode of the TRANSFORMED container reports the meta.
     Rotation/flip are block permutations of the DC-only synthesis
     profile and brightness is a per-block rational, so the oracle
@@ -3157,7 +3157,7 @@ def t12_ws_etl_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     as direct puts, and roll up per connection. The order-preservation
     guarantee IS the oracle: chain_md5 concatenates each response
     digest in the EXECUTED per-connection response order (resp_order,
-    stamped inside the mapInPandas worker), while the DuckDB twin
+    stamped inside the mapInArrow worker), while the DuckDB twin
     concatenates in SEND order (seq) — the hashes agree only if every
     connection matched responses to requests in order, exactly the
     property WebSocket's message ordering provides the reference
@@ -3494,7 +3494,7 @@ def ds1_download_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ds2_download_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 execution: mapInPandas fetch (deterministic fake fetcher —
+    """S10 execution: mapInArrow fetch (deterministic fake fetcher —
     body = md5(url) hex; real HTTP fetcher gated behind network)."""
     plan = downloader.range_job_plan(
         spark, "http://data.example.com/corpus/part-{00000..00049}.bin"
@@ -3524,7 +3524,7 @@ def ds2b_download_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     ThreadingHTTPServer (sources/http_fixture.py) serves deterministic
     bodies — body(path) = md5hex(path) repeated 1+(md5[0:2]%32) times —
     and the previously-dead downloader.http_fetch path moves genuine
-    bytes over genuine sockets through mapInPandas, with the token
+    bytes over genuine sockets through mapInArrow, with the token
     bucket active (BytesPerHour limits, ext/dload/api.go:70-73;
     dispatcher: ext/dload/dispatcher.go). The oracle reproduces
     size/checksum analytically from the path string, and the output
@@ -3590,7 +3590,7 @@ def ds2c_download_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic ``/404/`` path class; ``continue_on_err=True`` turns
     each failure into an error row (err text, size=-1 sentinel,
     checksum='__err__') while the good half moves real bytes, all in
-    one mapInPandas pass. Strict mode (the default
+    one mapInArrow pass. Strict mode (the default
     ``continue_on_err=False``) is pinned by a unit test: the same
     plan raises out of the job on the first 404
     (tests/test_sources_streaming.py). The oracle reproduces both row
@@ -3946,7 +3946,7 @@ def a3_job_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def t6_canned_sha256(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T6: canned HASH transform (etl_templates.py) via the Pandas-UDF
+    """T6: canned HASH transform (etl_templates.py) via the Arrow-UDF
     path, value-checked against DuckDB's sha256."""
     df = etl.etl_inline(_docs_with_data(spark, sf_dir), ["sha256"])
     return df.select("name", F.col("out").cast("string").alias("out"))
@@ -4127,9 +4127,10 @@ def ds3b_download_etl_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     flow the reference runs when a download job carries an ETL spec
     (ext/dload/api.go:84-86). The oracle reproduces the fetched body
     analytically from the path and hashes the same prepended bytes.
-    100 TB: fetch and transform fuse into ONE mapInPandas stage per
-    partition — bytes never hit storage between download and ETL,
-    exactly the reference's on-the-fly transform-on-ingest."""
+    100 TB: the fetch (mapInArrow) and the transform (an Arrow UDF)
+    run in ONE stage per partition — bytes never hit storage between
+    download and ETL, exactly the reference's on-the-fly
+    transform-on-ingest."""
     from aistore_spark.sources.http_fixture import loopback_url
 
     base = loopback_url()

@@ -26,10 +26,12 @@ test-scale oracle of the verify stage; never run it on a full corpus.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from aistore_spark.util import pin, round_robin, spread
+from aistore_spark.util import numpy_column, pin, round_robin, spread
 
 
 def exact_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
@@ -704,13 +706,10 @@ def dup_groups(
 
     if local_edges_threshold is None:
         local_edges_threshold = _local_edge_budget(pairs.sparkSession)
-    pdf = edges.limit(local_edges_threshold + 1).toPandas()
-    if len(pdf) <= local_edges_threshold:
-        import numpy as np
-        import pandas as pd
-
-        src = pdf["src"].to_numpy(dtype=np.int64)
-        dst = pdf["dst"].to_numpy(dtype=np.int64)
+    table = edges.limit(local_edges_threshold + 1).toArrow()
+    if table.num_rows <= local_edges_threshold:
+        src = numpy_column(table["src"].combine_chunks()).astype(np.int64)
+        dst = numpy_column(table["dst"].combine_chunks()).astype(np.int64)
         nodes = np.unique(src)  # edges are doubled, so src covers all
         si = np.searchsorted(nodes, src)
         di = np.searchsorted(nodes, dst)
@@ -732,7 +731,7 @@ def dup_groups(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         roots = np.array([find(i) for i in range(len(nodes))], dtype=np.int64)
-        out = pd.DataFrame({"doc_id": nodes, "group_id": nodes[roots]})
+        out = pa.table({"doc_id": nodes, "group_id": nodes[roots]})
         return pairs.sparkSession.createDataFrame(
             out, "doc_id bigint, group_id bigint"
         )

@@ -7,10 +7,11 @@ bucket-to-bucket (``xact/xs/tcb.go``). The Python transform contract is
 (``python/aistore/sdk/etl/webserver/base_etl_server.py:196-235``), with
 an iterator variant ``transform_stream`` for large objects.
 
-Spark-first: a transform is an Arrow-batched Pandas UDF; a pipeline
-(``TCBMsg.Transform.Pipeline``, api/apc/tcbtco.go:53-54) is function
-composition *inside one UDF* (one Python hop per batch, not one per
-stage); ``transform_stream`` maps to ``mapInPandas`` (iterator form).
+Spark-first: a transform is one scalar Arrow UDF over the ``(data,
+path, args)`` columns; a pipeline (``TCBMsg.Transform.Pipeline``,
+api/apc/tcbtco.go:53-54) is function composition *inside that UDF*
+(one Python hop per batch, not one per stage); ``transform_stream``
+maps to :func:`~aistore_spark.util.map_rows` (iterator form).
 The K8s pod lifecycle (boot/readiness/abort) is infrastructure Spark
 already owns — executors play the pods.
 
@@ -23,11 +24,13 @@ from __future__ import annotations
 
 import gzip
 import hashlib
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from aistore_spark.util import map_rows
 
 #: the reference's transform contract: (data, path, etl_args) -> bytes
 TransformFn = Callable[[bytes, str, str], bytes]
@@ -372,22 +375,27 @@ def resolve(pipeline: Sequence[str | TransformFn]) -> TransformFn:
 # ---- UDF plumbing -----------------------------------------------------------
 
 
+def _arrow_udf(pipeline: Sequence[str | TransformFn]):
+    """One scalar Arrow UDF running *pipeline* per object over the
+    ``(data, path, args)`` columns of each Arrow batch."""
+    fn = resolve(pipeline)
+
+    @F.arrow_udf("binary")
+    def udf(data: pa.Array, path: pa.Array, args: pa.Array) -> pa.Array:
+        rows = zip(data.to_pylist(), path.to_pylist(), args.to_pylist())
+        return pa.array([fn(d, p, a) for d, p, a in rows], type=pa.binary())
+
+    return udf
+
+
 def transform_udf(
     pipeline: Sequence[str | TransformFn], etl_args: str = ""
 ) -> Callable[[Column, Column], Column]:
-    """Build an Arrow-batched Pandas UDF for a transform pipeline.
-
-    Returns a callable of (data_col, path_col) -> bytes column —
+    """The Arrow UDF of a transform pipeline with job-constant
+    *etl_args*: a callable of (data_col, path_col) -> bytes column —
     the inline-ETL GET shape (T1)."""
-    fn = resolve(pipeline)
-
-    @F.pandas_udf("binary")
-    def udf(data: pd.Series, path: pd.Series) -> pd.Series:
-        return pd.Series(
-            [fn(d, p, etl_args) for d, p in zip(data, path)], dtype=object
-        )
-
-    return udf
+    udf = _arrow_udf(pipeline)
+    return lambda data, path: udf(data, path, F.lit(etl_args))
 
 
 def etl_inline(
@@ -416,17 +424,10 @@ def etl_inline_args(
     GET (``QparamETLArgs``, ``api/apc/query.go:24`` area; per-request
     args on the transform contract,
     ``python/.../base_etl_server.py:196-235``) — so args is a COLUMN,
-    not a job constant. Same Arrow-batched UDF, one extra input
-    series; no change in plan shape.
+    not a job constant. Same Arrow UDF, fed the args column instead of
+    a literal; no change in plan shape.
     """
-    fn = resolve(pipeline)
-
-    @F.pandas_udf("binary")
-    def udf(data: pd.Series, path: pd.Series, args: pd.Series) -> pd.Series:
-        return pd.Series(
-            [fn(d, p, a) for d, p, a in zip(data, path, args)], dtype=object
-        )
-
+    udf = _arrow_udf(pipeline)
     return df.withColumn(
         out_col, udf(F.col(data_col), F.col(path_col), F.col(args_col))
     )
@@ -534,17 +535,15 @@ def etl_stream(
     path_col: str = "name",
     etl_args: str = "",
 ) -> DataFrame:
-    """T5 ``transform_stream`` → ``mapInPandas`` iterator form: the
-    transform sees an iterator of Arrow batches, never the whole object
-    set in memory."""
+    """T5 ``transform_stream`` → :func:`~aistore_spark.util.map_rows`,
+    the iterator form: the transform sees one Arrow batch at a time,
+    never the whole object set in memory. Each row of *df* comes out
+    with its transformed bytes appended, in the DDL *schema*."""
     fn = resolve(pipeline)
+    cols = df.columns
+    di, pi = cols.index(data_col), cols.index(path_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["out"] = [
-                fn(d, p, etl_args) for d, p in zip(pdf[data_col], pdf[path_col])
-            ]
-            yield pdf
+    def row(*vals):
+        yield (*vals, fn(vals[di], vals[pi], etl_args))
 
-    return df.mapInPandas(run, schema=schema)
+    return map_rows(df, cols, schema, row)

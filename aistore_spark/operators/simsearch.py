@@ -728,8 +728,9 @@ def pq_adc_topk(
     at encode time and never again — the memory-bound regime PQ
     exists for.
     """
+    book = _collect_cents(codebook.select(id_col, quantized(vec_col)))
     codes = pq_encode_wide(
-        corpus, codebook, m=m, dim=dim, id_col=id_col, vec_col=vec_col
+        corpus, book, m=m, dim=dim, id_col=id_col, vec_col=vec_col
     )
     # Round-robin the codes before the fan-out — pq_encode_wide's
     # Arrow map preserves the corpus scan's input splits, so the
@@ -739,7 +740,7 @@ def pq_adc_topk(
     # parallelizes. (ivfpq_topk doesn't need this: its
     # codes-joins-assign shuffle does it.)
     codes = _rebalance(codes)
-    cids, cmat = _collect_cents(codebook.select(id_col, quantized(vec_col)))
+    cids, cmat = book
     q_ids, qmat = _collect_cents(queries.select(id_col, quantized(vec_col)))
     lut = _adc_lut(qmat, cmat, m, dim)
     # the query fan-out happens inside the scoring kernel, so only the
@@ -750,7 +751,7 @@ def pq_adc_topk(
 
 def pq_encode_wide(
     corpus: DataFrame,
-    codebook: DataFrame,
+    book: tuple,
     m: int = 4,
     dim: int = 64,
     id_col: str = "vec_id",
@@ -761,8 +762,9 @@ def pq_encode_wide(
     (vector, subspace). The ADC read paths consume this form so the
     candidate stream is never exploded ×m (at sf100 the long form
     turned 566M candidates into 4.5B join-probe rows — the r14
-    third-decade finding)."""
-    book = _collect_cents(codebook.select(id_col, quantized(vec_col)))
+    third-decade finding). *book* is the codebook as collected by
+    :func:`_collect_cents`, so a caller that also needs it for the ADC
+    table collects it once."""
 
     def run(batches):
         for vec_ids, vq in batches:

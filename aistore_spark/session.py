@@ -8,7 +8,8 @@ chosen to also be correct defaults on a real cluster at 100 TB:
   (ext/dsort/conc_adjuster.go, mem_watcher.go).
 - shuffle partitions sized to cores locally; on a cluster this should be
   2-3x total executor cores (AQE coalesces down as needed).
-- Arrow enabled: every bytes-transform UDF (ETL surface) is a Pandas UDF.
+- Arrow enabled for pandas conversions; every bytes-transform UDF (ETL
+  surface) is a scalar Arrow UDF.
 - Session timezone pinned UTC so timestamp semantics are stable across
   engines and clusters.
 """
@@ -151,7 +152,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python UDTFs evaluate Arrow-batched (ArrowEvalPythonUDTF),
-        # never row-at-a-time — same contract as the Pandas-UDF rule
+        # never row-at-a-time — same contract as the ETL's Arrow UDF
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)

@@ -9,10 +9,12 @@ limits ``{Connections, BytesPerHour}`` and optional ETL on ingest
 
 Spark-first: a download job *plan* is a DataFrame of (url, objname)
 work items — template expansion is the F2 generator, regex subsetting
-is a filter, limits are throttling metadata. Execution is
-``mapInPandas`` over the plan with a pluggable fetcher; partition
-count ≈ ``Connections`` caps concurrency, and a per-partition byte
-budget implements ``BytesPerHour`` coarsely.
+is a filter, limits are throttling metadata. Execution is one
+:func:`~aistore_spark.util.map_arrays` pass over the plan with a
+pluggable fetcher: the map's kernel owns a partition's batches, so
+each partition is one fetch stream with one token bucket. Partition
+count ≈ ``Connections`` caps concurrency, and the per-stream bucket
+implements ``BytesPerHour``.
 
 No network in this container: the default fetcher is a deterministic
 fake (content = md5(url) hex bytes); the real HTTP fetcher is gated
@@ -22,14 +24,13 @@ behind an import-try and marked for real deployments.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aistore_spark.functions.templates import expand_template
-from aistore_spark.util import local_frame
+from aistore_spark.util import local_frame, map_arrays
 
 FetchFn = Callable[[str], bytes]
 
@@ -189,8 +190,8 @@ class TokenBucket:
 
 
 #: sentinels for error rows when ``continue_on_err`` is set — fixed
-#: non-NULL values so downstream aggregations and the SQL oracle keep
-#: stable dtypes (a NULL bigint would drift to float64 in pandas).
+#: non-NULL values, so downstream aggregations and the SQL oracle see
+#: a size and a checksum on every row.
 ERR_SIZE = -1
 ERR_CHECKSUM = "__err__"
 
@@ -203,7 +204,8 @@ def execute_download(
     bucket_factory: Callable[[float], "TokenBucket"] | None = None,
     continue_on_err: bool = False,
 ) -> DataFrame:
-    """Run a download plan: ``mapInPandas`` fetch per work item.
+    """Run a download plan: one fetch per work item, through
+    :func:`~aistore_spark.util.map_arrays`.
 
     ``connections`` bounds parallel fetch streams via partition count
     (the reference's per-job ``Connections`` limit); ``bytes_per_hour``
@@ -229,7 +231,9 @@ def execute_download(
     # first throttle() divides by zero
     per_stream = max(bytes_per_hour / max(connections, 1), 1.0)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
+        # one stream per partition: the kernel owns the partition's
+        # batches, so the bucket outlives each batch
         bucket = None
         if bytes_per_hour > 0:
             bucket = (
@@ -237,43 +241,25 @@ def execute_download(
                 if bucket_factory
                 else TokenBucket(per_stream)
             )
-        for pdf in batches:
-            data: list[bytes | None] = []
-            sizes: list[int] = []
-            sums: list[str] = []
-            errs: list[str] = []
-            for u in pdf["url"]:
-                try:
-                    body = fetch(u)
-                except Exception as exc:  # noqa: BLE001
-                    if not continue_on_err:
-                        raise
-                    data.append(None)
-                    sizes.append(ERR_SIZE)
-                    sums.append(ERR_CHECKSUM)
-                    errs.append(str(exc))
-                    continue
-                if bucket is not None:
-                    bucket.throttle(len(body))
-                data.append(body)
-                sizes.append(len(body))
-                sums.append(hashlib.md5(body).hexdigest())
-                errs.append("")
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "objname": pdf["objname"],
-                    "data": data,
-                    "size": pd.array(sizes, dtype="int64"),
-                    "checksum": sums,
-                    "err": errs,
-                }
-            )
 
-    return plan.mapInPandas(
+        def fetch_row(url):
+            try:
+                body = fetch(url)
+            except Exception as exc:  # noqa: BLE001
+                if not continue_on_err:
+                    raise
+                return None, ERR_SIZE, ERR_CHECKSUM, str(exc)
+            if bucket is not None:
+                bucket.throttle(len(body))
+            return body, len(body), hashlib.md5(body).hexdigest(), ""
+
+        for urls, objnames in batches:
+            yield (urls, objnames, *zip(*map(fetch_row, urls)))
+
+    return map_arrays(
+        plan,
+        ["url", "objname"],
+        "url string, objname string, data binary, size bigint, "
+        "checksum string, err string",
         run,
-        schema=(
-            "url string, objname string, data binary, size bigint, "
-            "checksum string, err string"
-        ),
     )

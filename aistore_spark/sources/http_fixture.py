@@ -4,7 +4,7 @@ The reference's downloader is its most-used ingest surface
 (``ext/dload/dispatcher.go``): work items arrive as URLs and real bytes
 move over HTTP with per-job ``{Connections, BytesPerHour}`` limits
 (``ext/dload/api.go:70-73``). Until round 10 our execution row
-(ds2_download_exec) proved the *plan* and the mapInPandas fetch shape
+(ds2_download_exec) proved the *plan* and the Arrow-map fetch shape
 with a deterministic fake fetcher, leaving
 :func:`aistore_spark.sources.downloader.http_fetch` dead code
 (verdict-r10 #3/#4). This module stands up a loopback

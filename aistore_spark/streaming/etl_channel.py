@@ -18,10 +18,10 @@ Spark-first mapping — model the CONTRACT, not the transport:
   bucketing primitive, so an oracle can replay the fan-out);
 - *order preservation*: tasks carry ``seq`` (send order); each
   connection processes its tasks sorted by ``seq`` inside one
-  ``mapInPandas`` partition (``repartition(multiplier, conn_id)`` +
-  ``sortWithinPartitions``) and stamps ``resp_order`` — the EXECUTED
-  processing order, the witness tests and the oracle's chain digest
-  assert against;
+  partition of a :func:`~aistore_spark.util.map_arrays` pass
+  (``repartition(multiplier, conn_id)`` + ``sortWithinPartitions``)
+  and stamps ``resp_order`` — the EXECUTED processing order, the
+  witness tests and the oracle's chain digest assert against;
 - *control message*: (path, etl_args, packed pipeline) resolved per
   task through the same CANNED registry the inline/offline paths use;
 - *direct put*: tasks whose path matches ``direct_put_prefix`` are
@@ -35,14 +35,13 @@ Spark-first mapping — model the CONTRACT, not the transport:
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aistore_spark.operators.etl import TransformFn, resolve
-from aistore_spark.util import ensure_shipped, md5_bucket
+from aistore_spark.util import ensure_shipped, map_arrays, md5_bucket
 
 CHANNEL_SCHEMA = (
     "conn_id int, seq bigint, path string, ctrl string, resp_order bigint, "
@@ -85,45 +84,31 @@ def ws_etl_session(
     ctrl = pack_pipeline(pipeline)
     ensure_shipped(tasks.sparkSession)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         # per-CONNECTION response counters: hash partitioning may
         # co-locate two conn_ids in one partition, and the in-order
         # guarantee is per connection, not per partition
         order: dict[int, int] = {}
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "conn_id", "seq", "path", "ctrl", "resp_order",
-                    "acked", "written", "err", "out",
-                )
-            }
-            for conn_id, seq, path, data in zip(
-                pdf["conn_id"], pdf[seq_col], pdf[path_col], pdf[data_col]
-            ):
-                acked, written, err, out = False, 0, None, None
-                if abort_after is not None and seq > abort_after:
-                    err = f"aborted: {abort_cause}"
+
+        def respond(conn_id, seq, path, data):
+            acked, written, err, out = False, 0, None, None
+            if abort_after is not None and seq > abort_after:
+                err = f"aborted: {abort_cause}"
+            else:
+                res = fn(bytes(data), str(path), etl_args)
+                if direct_put_prefix is not None and str(path).startswith(
+                    direct_put_prefix
+                ):
+                    acked, written = True, len(res)
                 else:
-                    res = fn(bytes(data), str(path), etl_args)
-                    if direct_put_prefix is not None and str(path).startswith(
-                        direct_put_prefix
-                    ):
-                        acked, written = True, len(res)
-                    else:
-                        out, written = res, len(res)
-                rows["conn_id"].append(int(conn_id))
-                rows["seq"].append(int(seq))
-                rows["path"].append(str(path))
-                rows["ctrl"].append(ctrl)
-                o = order.get(int(conn_id), 0)
-                rows["resp_order"].append(o)
-                order[int(conn_id)] = o + 1
-                rows["acked"].append(acked)
-                rows["written"].append(written)
-                rows["err"].append(err)
-                rows["out"].append(out)
-            yield pd.DataFrame(rows)
+                    out, written = res, len(res)
+            o = order.get(conn_id, 0)
+            order[conn_id] = o + 1
+            return ctrl, o, acked, written, err, out
+
+        for conn_id, seq, path, data in batches:
+            resp = map(respond, conn_id.tolist(), seq.tolist(), path, data)
+            yield (conn_id, seq, path, *zip(*resp))
 
     fanned = (
         tasks.withColumn(
@@ -132,7 +117,9 @@ def ws_etl_session(
         .repartition(multiplier, "conn_id")
         .sortWithinPartitions(seq_col)
     )
-    return fanned.mapInPandas(run, schema=CHANNEL_SCHEMA)
+    return map_arrays(
+        fanned, ["conn_id", seq_col, path_col, data_col], CHANNEL_SCHEMA, run
+    )
 
 
 def ws_etl_stream(

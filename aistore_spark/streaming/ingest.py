@@ -17,6 +17,13 @@ an incremental Structured Streaming query:
 The events table additionally gets a real event-time pipeline
 (watermark + windowed aggregation) as the beyond-reference streaming
 surface for pipeline telemetry.
+
+The two stateful operators here (the sessionizer and the late-event
+counter) are the engine's only pandas boundary: they run
+``applyInPandasWithState``. Its Arrow-native successor,
+``transformWithState``, needs the ``protobuf`` package, which this
+deployment does not ship; every other Python map in the engine goes
+through :mod:`aistore_spark.util`'s Arrow maps.
 """
 
 from __future__ import annotations

@@ -199,7 +199,7 @@ def ensure_shipped(spark) -> None:
     workers regardless of how the SparkSession was built.
 
     Our Python-boundary closures (:func:`map_rows`, :func:`map_arrays`,
-    :func:`map_groups`, pandas UDFs) pickle by module reference; a
+    :func:`map_groups`, Arrow UDFs) pickle by module reference; a
     caller-provided session (the driver's harness) may spawn workers
     without this repo on PYTHONPATH. ``addPyFile`` of a package zip is
     runtime-safe and idempotent per SparkContext.

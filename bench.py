@@ -21,6 +21,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from aistore_spark.benchqueries import QUERIES  # noqa: E402
 from aistore_spark.operators.dsort import release_cached  # noqa: E402
 from aistore_spark.session import get_spark  # noqa: E402
+from aistore_spark.util import ensure_shipped, map_arrays  # noqa: E402
 
 
 #: stdout-line stability contract (r17, verdict-r16 item 2): the
@@ -156,17 +157,12 @@ def main() -> None:
 
     spark = get_spark("aistore_spark_bench", cpus=cpus, sf_dir=sf_dir)
     # warmup: JVM + parquet footers + Python/Arrow worker spin-up, so
-    # the first Pandas-UDF query isn't charged the daemon startup
+    # the first Arrow-map query isn't charged the daemon startup
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(1000).select(_warm("id")).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    ensure_shipped(spark)  # the map's kernel imports aistore_spark
+    map_arrays(spark.range(1000), ["id"], "id bigint", lambda b: b).write.mode(
+        "overwrite"
+    ).format("noop").save()
 
     # min of 2 runs per query: wall-clock on a shared host is noisy
     # (first-run JIT, page cache, neighbor load); the min is the

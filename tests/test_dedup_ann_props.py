@@ -197,6 +197,24 @@ def test_pq_codeword_self_encoding_and_adc(spark):
         assert adc_d == exact, (qid, nid)
 
 
+def test_pq_adc_topk_construction_collects_the_codebook_once(spark):
+    """Constructing flat PQ ADC search runs two driver jobs: one
+    collect of the codebook, shared by the encode kernel and the ADC
+    lookup table, and one of the queries."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    codebook = emb.filter(F.col("vec_id") < 16)
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    sc = spark.sparkContext
+    group = "pq-adc-topk-construct"
+    sc.setJobGroup(group, "pq_adc_topk")
+    try:
+        simsearch.pq_adc_topk(emb, codebook, queries, k=10, m=4, dim=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
 def test_ivfpq_full_probe_equals_pq_adc(spark):
     """With nprobe = #centroids the IVF stage prunes nothing, so
     IVF-PQ must reproduce flat PQ ADC search bit-for-bit."""

@@ -18,7 +18,7 @@ from aistore_spark.benchqueries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 FORBIDDEN = (
-    ("BatchEvalPython", "row-at-a-time Python UDF — use a Pandas UDF"),
+    ("BatchEvalPython", "row-at-a-time Python UDF — use an Arrow UDF"),
     ("CartesianProduct", "cartesian product"),
     ("Exchange SinglePartition", "single-partition exchange"),
 )
@@ -49,13 +49,43 @@ def test_ivfpq_topk_crosses_python_through_arrow_maps_only(spark):
 
 
 @pytest.mark.parametrize(
-    "path", ["aistore_spark/operators/simsearch.py", "aistore_spark/util.py"]
+    "name", ["t12_ws_etl_channel", "ds2_download_exec"]
+)
+def test_stateful_maps_cross_python_through_arrow_maps_only(spark, name):
+    """The ETL channel (per-connection response counters) and the
+    download (one token bucket per stream) keep per-partition state
+    across batches, and still cross the Python boundary through the
+    Arrow map: the executed plan's Python nodes are all
+    ``MapInArrow``."""
+    df = QUERIES[name](spark, SF)
+    assert df.collect()
+    python = [n for n, _ in _final_nodes(df) if PYTHON_NODE.search(n)]
+    assert python and set(python) == {"MapInArrow"}, python
+
+
+REPO = Path(__file__).resolve().parent.parent
+
+#: the one module allowed a pandas boundary: its two
+#: ``applyInPandasWithState`` calls have no Arrow form without protobuf
+PANDAS_STATE_MODULE = "aistore_spark/streaming/ingest.py"
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(
+        str(p.relative_to(REPO))
+        for p in (REPO / "aistore_spark").rglob("*.py")
+        if str(p.relative_to(REPO)) != PANDAS_STATE_MODULE
+    ),
 )
 def test_module_has_no_pandas_boundary(path):
-    """The similarity-search kernels and the engine's Python-boundary
-    maps use Arrow and numpy only: no pandas import, no pandas map."""
-    src = (Path(__file__).resolve().parent.parent / path).read_text()
-    for needle in ("import pandas", "mapInPandas(", "applyInPandas("):
+    """The engine crosses the Python boundary through Arrow and numpy
+    only: no pandas import, no pandas map or UDF, no pandas collect."""
+    src = (REPO / path).read_text()
+    for needle in (
+        "import pandas", "mapInPandas(", "applyInPandas(", "pandas_udf",
+        "toPandas(",
+    ):
         assert needle not in src, f"{path} contains {needle!r}"
 
 

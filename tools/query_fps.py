@@ -47,7 +47,10 @@ SNAPSHOT = REPO / "tests" / "driver_green_fps.json"
 #: benchqueries.py, matched by AST name below); mm12 covers the
 #: media parsers and Arrow stages every mm/t9-t11 query runs through;
 #: ann8 covers the similarity-search kernels (it reaches
-#: pq_encode_wide, _adc_topk_full_scan and _keep_best).
+#: pq_encode_wide, _adc_topk_full_scan and _keep_best); t1, ds2c, dd7
+#: and t12 cover the ETL UDF, the download map, the dup-group
+#: components and the ETL channel map, each through a query that
+#: executes it.
 HELPER_SENTINELS: dict[str, list[str]] = {
     "p2_extract_member": [
         "aistore_spark/sources/tables.py",
@@ -67,6 +70,18 @@ HELPER_SENTINELS: dict[str, list[str]] = {
     ],
     "ann8_pq_adc_topk": [
         "aistore_spark/operators/simsearch.py",
+    ],
+    "t1_inline_etl": [
+        "aistore_spark/operators/etl.py",
+    ],
+    "ds2c_download_errors": [
+        "aistore_spark/sources/downloader.py",
+    ],
+    "dd7_dup_groups": [
+        "aistore_spark/operators/dedup.py",
+    ],
+    "t12_ws_etl_channel": [
+        "aistore_spark/streaming/etl_channel.py",
     ],
 }
 

@@ -20,7 +20,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from aistore_spark.benchqueries import QUERIES  # noqa: E402
 from aistore_spark.session import get_spark  # noqa: E402
-from aistore_spark.util import release_cached  # noqa: E402
+from aistore_spark.util import (  # noqa: E402
+    ensure_shipped,
+    map_arrays,
+    release_cached,
+)
 
 
 def main() -> int:
@@ -36,15 +40,10 @@ def main() -> int:
     # same warmup as bench.py so the first query isn't charged JVM /
     # Arrow-daemon spin-up
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("long")
-    def _warm(s):
-        return s
-
-    spark.range(1000).select(_warm("id")).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    ensure_shipped(spark)  # the map's kernel imports aistore_spark
+    map_arrays(spark.range(1000), ["id"], "id bigint", lambda b: b).write.mode(
+        "overwrite"
+    ).format("noop").save()
 
     out: dict[str, float] = {}
     for name in names:
