@@ -117,33 +117,24 @@ def get_batch_join_mixed(
     # previously re-aggregated the members table twice more.
     from aistore_spark.util import pin
 
-    # Semi-join the corpus-scale members table to the request's key
-    # sets BEFORE the aggregate (r17, guide §3.2): plain entries can
-    # only match on member name, arch entries on (shard, member) —
-    # rows outside both sets never surface through the left joins.
-    # The two semi-joins may keep one row twice (a member that is
-    # both a plain target and an arch extraction); min() is
-    # duplicate-insensitive, so the aggregate is unchanged. Key
-    # frames are broadcast — bounded by the batch contract.
-    is_arch_req = F.col("archpath") != ""
-    plain_keys = (
-        requests.filter(~is_arch_req).select("objname").distinct()
-    )
-    arch_keys = (
-        requests.filter(is_arch_req)
-        .select(
-            F.col("objname").alias("shard"),
-            F.col("archpath").alias("member"),
-        )
-        .distinct()
-    )
-    requested = members.join(
-        F.broadcast(plain_keys.select(F.col("objname").alias("member"))),
-        "member",
-        "left_semi",
-    ).unionByName(
-        members.join(F.broadcast(arch_keys), ["shard", "member"], "left_semi")
-    )
+    # Semi-join the corpus-scale members table to the requested member
+    # names BEFORE the aggregate (r17, guide §3.2), in ONE pass over
+    # members: the key of a plain entry is its objname, of an arch
+    # entry its archpath. The kept set is a superset of what the joins
+    # below can match: it adds (shard, member) rows for arch-only
+    # members in shards no entry names. Those rows cannot match the
+    # arch join, which is on (shard, member), nor the plain join,
+    # since no plain entry names that member; every plain-requested
+    # member keeps all its shards, so its min(size) and min(key_str)
+    # are unchanged. The key frame is broadcast — bounded by the
+    # batch contract.
+    is_arch = F.col("archpath") != ""
+    keys = requests.select(
+        F.when(is_arch, F.col("archpath"))
+        .otherwise(F.col("objname"))
+        .alias("member")
+    ).distinct()
+    requested = members.join(F.broadcast(keys), "member", "left_semi")
     aggs = [F.min("size").alias("asize")]
     if with_keys:
         aggs.append(F.min("key_str").alias("akey"))
@@ -152,7 +143,6 @@ def get_batch_join_mixed(
     if with_keys:
         pl_aggs.append(F.min("akey").alias("pkey"))
     plain_content = arch_content.groupBy("member").agg(*pl_aggs)
-    is_arch = F.col("archpath") != ""
     j = requests.join(
         plain_content,
         (~is_arch) & (requests["objname"] == plain_content["member"]),

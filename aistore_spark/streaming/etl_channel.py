@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aistore_spark.operators.etl import TransformFn, resolve
-from aistore_spark.util import ensure_shipped, map_arrays, md5_bucket
+from aistore_spark.util import map_arrays, md5_bucket
 
 CHANNEL_SCHEMA = (
     "conn_id int, seq bigint, path string, ctrl string, resp_order bigint, "
@@ -82,7 +82,6 @@ def ws_etl_session(
         raise ValueError("multiplier must be positive")
     fn = resolve(pipeline)
     ctrl = pack_pipeline(pipeline)
-    ensure_shipped(tasks.sparkSession)
 
     def run(batches):
         # per-CONNECTION response counters: hash partitioning may

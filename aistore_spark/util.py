@@ -25,26 +25,6 @@ def ntz_micros_sql(col: str = "ts") -> str:
         f"TIMESTAMP_NTZ '1970-01-01 00:00:00', {col})"
     )
 
-#: local_frame() falls back to createDataFrame above this row count —
-#: a VALUES literal is a parser payload, not a data path
-_LOCAL_FRAME_MAX_ROWS = 20_000
-
-
-def _sql_literal(v) -> str | None:
-    """Render one int/bool/str/None as a Spark SQL literal, or None if
-    the value cannot round-trip exactly as a literal."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, str):
-        if "\x00" in v:
-            return None
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return None
-
 
 def local_frame(spark, rows, schema: str) -> DataFrame:
     """A small driver-side frame as a LocalRelation, not a python RDD.
@@ -53,39 +33,22 @@ def local_frame(spark, rows, schema: str) -> DataFrame:
     rows into an RDD-backed scan: EVERY action or broadcast over it
     schedules ``defaultParallelism`` python-worker tasks (measured at
     local[32]: 32 tasks, ~0.4-2.2 s per broadcast collect — for 32
-    rows). Rendering the same rows as a SQL ``VALUES`` literal yields
-    a LocalRelation the driver reads with zero tasks and zero python
-    workers, which is also the right shape on a cluster: request
-    lists, partition offsets and rule tables are plan metadata, not
-    distributed data.
+    rows). Handing Spark the same rows as one Arrow table instead
+    yields a LocalRelation the driver reads with zero tasks and zero
+    python workers, which is also the right shape on a cluster:
+    request lists, partition offsets and rule tables are plan
+    metadata, not distributed data.
 
-    Exact-round-trip types only (int/bool/str/None); any other value
-    type, an empty list, or an oversized list falls back to
-    ``createDataFrame`` unchanged. *schema* is a DDL string; every
-    column is CAST to its declared type, so all-NULL columns type
-    correctly.
+    Every input takes this one path: any row count (an empty list
+    gives an empty frame), any value Arrow converts to the declared
+    column type. *rows* are tuples in the column order of the DDL
+    *schema*, built into Arrow by the maps' own :func:`_row_batch`;
+    a value Arrow cannot convert (a ``str`` in a ``bigint`` column)
+    raises.
     """
-    if not rows or len(rows) > _LOCAL_FRAME_MAX_ROWS:
-        return spark.createDataFrame(rows, schema=schema)
-    lits: list[str] = []
-    for row in rows:
-        vals = []
-        for v in row:
-            lit = _sql_literal(v)
-            if lit is None:
-                return spark.createDataFrame(rows, schema=schema)
-            vals.append(lit)
-        lits.append("(" + ", ".join(vals) + ")")
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(schema)
-    if any(len(r) != len(fields) for r in rows):
-        return spark.createDataFrame(rows, schema=schema)
-    proj = ", ".join(
-        f"CAST(col{i + 1} AS {f.dataType.simpleString()}) AS `{f.name}`"
-        for i, f in enumerate(fields)
-    )
-    return spark.sql(f"SELECT {proj} FROM VALUES " + ", ".join(lits))
+    struct = StructType.fromDDL(schema)
+    batch = _row_batch(rows, to_arrow_schema(struct))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema=struct)
 
 
 #: frames pinned by operators whose plans re-reference an expensive
@@ -201,8 +164,10 @@ def ensure_shipped(spark) -> None:
     Our Python-boundary closures (:func:`map_rows`, :func:`map_arrays`,
     :func:`map_groups`, Arrow UDFs) pickle by module reference; a
     caller-provided session (the driver's harness) may spawn workers
-    without this repo on PYTHONPATH. ``addPyFile`` of a package zip is
-    runtime-safe and idempotent per SparkContext.
+    without this repo on PYTHONPATH. The three maps call this
+    themselves, so an operator called directly (not through a
+    registered query) ships the package too. ``addPyFile`` of a
+    package zip is runtime-safe and idempotent per SparkContext.
     """
     sc = spark.sparkContext
     if getattr(sc, "_aistore_spark_shipped", False):
@@ -271,6 +236,7 @@ def map_rows(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
     ``mapInArrow`` batch in (bounded by
     ``spark.sql.execution.arrow.maxRecordsPerBatch``) becomes one Arrow
     batch out; no shuffle."""
+    ensure_shipped(df.sparkSession)
     out = to_arrow_schema(StructType.fromDDL(schema))
 
     def run(batches):
@@ -292,6 +258,7 @@ def map_arrays(df: DataFrame, cols: list[str], schema: str, fn) -> DataFrame:
     column order of the DDL *schema*, where a 2-D array goes out as a
     list column. Because ``fn`` owns the iterator, a kernel may
     accumulate across batches and yield once at the end. No shuffle."""
+    ensure_shipped(df.sparkSession)
     out = to_arrow_schema(StructType.fromDDL(schema))
 
     def run(batches):
@@ -321,6 +288,7 @@ def map_groups(
     byte-based coalescing would otherwise pack the groups onto 2-3
     tasks. The explicit width also satisfies the ``groupBy``
     clustering, so there is no second exchange."""
+    ensure_shipped(df.sparkSession)
     out = to_arrow_schema(StructType.fromDDL(schema))
     sort_keys = [(c, "ascending") for c in order]
 

@@ -3,6 +3,7 @@ cardinality."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aistore_spark.catalog import batch_requests, ekm_table, members_catalog
@@ -132,3 +133,113 @@ def test_salted_join_rejects_right_and_full(spark):
     for how in ("right", "full", "full_outer", "right_outer", "cross"):
         with pytest.raises(ValueError, match="salted_join"):
             salted_join(hot, dim, "key", how=how)
+
+
+#: (shard, member, size, key_str): a.jpg sits in two shards with
+#: different sizes and keys; b.cls is only ever requested by archpath,
+#: so the semi-join also keeps its copy in s3.tar, a shard no request
+#: names; d.jpg is never requested
+_MIXED_MEMBERS = [
+    ("s1.tar", "a.jpg", 100, "k1"),
+    ("s2.tar", "a.jpg", 50, "k9"),
+    ("s1.tar", "b.cls", 200, "kb"),
+    ("s3.tar", "b.cls", 70, "kb3"),
+    ("s2.tar", "c.xml", 300, "kc"),
+    ("s1.tar", "d.jpg", 10, "kd"),
+]
+
+#: (req_idx, objname, archpath, rstart, rlength)
+_MIXED_REQUESTS = [
+    (0, "a.jpg", "", 0, 0),  # plain
+    (1, "s1.tar", "a.jpg", 0, 0),  # the same member by archpath
+    (2, "s3.tar", "c.xml", 0, 0),  # archpath aimed at the wrong shard
+    (3, "a.jpg", "", 0, 0),  # duplicate of 0
+    (4, "s1.tar", "b.cls", 10, 20),  # ranged archived file
+    (5, "s1.tar", "b.cls", 150, -1),  # open-ended range
+    (6, "c.xml", "", 299, 5),  # range past the end
+    (7, "zz.jpg", "", 0, 0),  # missing plain
+    (8, "s1.tar", "b.cls", 10, 20),  # duplicate of 4
+    (9, "a.jpg", "", 60, -1),  # open range past the plain min size
+    (10, "s2.tar", "a.jpg", 0, 50),  # exactly the whole file
+]
+
+
+def _mixed_join_union_reference(requests, members, continue_on_err, with_keys):
+    """The mixed get-batch join in its two-semi-join form, in Python:
+    members kept by plain name, plus members kept by (shard, member),
+    aggregated per (shard, member) and then per member."""
+    plain_keys = {o for _, o, a, _, _ in requests if not a}
+    arch_keys = {(o, a) for _, o, a, _, _ in requests if a}
+    kept = [m for m in members if m[1] in plain_keys] + [
+        m for m in members if (m[0], m[1]) in arch_keys
+    ]
+    arch: dict = {}
+    for shard, member, size, key in kept:
+        s, k = arch.get((shard, member), (size, key))
+        arch[(shard, member)] = (min(s, size), min(k, key))
+    plain: dict = {}
+    for (_, member), (size, key) in arch.items():
+        s, k = plain.get(member, (size, key))
+        plain[member] = (min(s, size), min(k, key))
+    out = []
+    for idx, obj, ap, start, length in requests:
+        size, key = (arch.get((obj, ap)) if ap else plain.get(obj)) or (None, None)
+        if size is None:
+            eff = None
+        elif (start, length) == (0, 0):
+            eff = size
+        elif length == -1:
+            eff = size - start if start < size else None
+        else:
+            eff = length if start + length <= size else None
+        status = (
+            "missing" if size is None
+            else "range_not_satisfiable" if eff is None
+            else "ok"
+        )
+        name = f"ais://shards/{obj}" + (f"/{ap}" if ap else "")
+        row = (
+            idx, obj, ap, name if status == "ok" else "__404__/" + name,
+            eff or 0, status,
+        )
+        if with_keys:
+            row += (None, key) if ap else (key, None)
+        if continue_on_err or status == "ok":
+            out.append(row)
+    return sorted(out)
+
+
+@pytest.mark.parametrize("with_keys", [False, True])
+@pytest.mark.parametrize("continue_on_err", [True, False])
+def test_mixed_join_single_semi_join_equals_union_form(
+    spark, with_keys, continue_on_err
+):
+    """Semi-joining members once, on plain names and archpaths
+    together, keeps a superset of the two-semi-join form's rows; the
+    join's output rows are identical to that form's."""
+    from aistore_spark.util import local_frame, release_cached
+
+    req = local_frame(
+        spark,
+        [(i, "ais://shards", o, a, s, n) for i, o, a, s, n in _MIXED_REQUESTS],
+        "req_idx long, bucket string, objname string, archpath string, "
+        "rstart long, rlength long",
+    )
+    members = local_frame(
+        spark, _MIXED_MEMBERS,
+        "shard string, member string, size bigint, key_str string",
+    )
+    got = sorted(
+        tuple(r)
+        for r in joins.get_batch_join_mixed(
+            req, members, continue_on_err=continue_on_err, with_keys=with_keys
+        ).collect()
+    )
+    release_cached()
+    want = _mixed_join_union_reference(
+        _MIXED_REQUESTS, _MIXED_MEMBERS, continue_on_err, with_keys
+    )
+    assert got == want
+    assert {r[5] for r in want} == (
+        {"ok", "missing", "range_not_satisfiable"} if continue_on_err else {"ok"}
+    )

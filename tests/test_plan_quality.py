@@ -89,11 +89,13 @@ def test_module_has_no_pandas_boundary(path):
         assert needle not in src, f"{path} contains {needle!r}"
 
 
-def _final_nodes(df):
+def _final_nodes(df, into_cache=False):
     """Physical operators of *df*'s executed (final adaptive) plan,
-    through query stages but not into cached relations, which run once
-    and are shared. Returns ``[(nodeName, simpleString)]``."""
+    through query stages, and into the plans of cached relations (which
+    run once and are shared, so each is walked once) only when
+    *into_cache*. Returns ``[(nodeName, simpleString)]``."""
     out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    cached = set()
     while stack:
         node = stack.pop()
         name = node.nodeName()
@@ -103,10 +105,46 @@ def _final_nodes(df):
         if name.endswith("QueryStage"):
             stack.append(node.plan())
             continue
+        if into_cache and name == "InMemoryTableScan":
+            plan = node.relation().cachedPlan()
+            if plan.toString() not in cached:
+                cached.add(plan.toString())
+                stack.append(plan)
         out.append((name, node.simpleString(100)))
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
     return out
+
+
+def test_mixed_get_batch_scans_members_once(spark):
+    """A mixed get-batch over real shards reads its members once: one
+    semi-join on member names feeds the pinned (shard, member)
+    aggregate, so the executed plan, cached subplans included, holds
+    exactly one ``binaryFile`` scan."""
+    from aistore_spark.operators.joins import get_batch_join_mixed
+    from aistore_spark.sources import io_fixtures
+    from aistore_spark.util import local_frame, release_cached
+
+    release_cached()
+    members = io_fixtures.read_shard_members(
+        spark, io_fixtures.materialize_shards(spark, SF), with_bytes=False
+    )
+    req = local_frame(
+        spark,
+        [
+            (0, "ais://shards", "rec-000000001.cls", "", 0, 0),
+            (1, "ais://shards", "shard-00001.tar", "rec-000000001.jpg", 0, 0),
+            (2, "ais://shards", "rec-000000002.xml", "", 0, 0),
+        ],
+        "req_idx long, bucket string, objname string, archpath string, "
+        "rstart long, rlength long",
+    )
+    df = get_batch_join_mixed(req, members)
+    assert df.collect()
+    nodes = _final_nodes(df, into_cache=True)
+    release_cached()
+    scans = [s for _, s in nodes if "Scan binaryFile" in s]
+    assert len(scans) == 1, scans
 
 
 #: exchanges above the pinned frames in verified_pairs' executed plan

@@ -1,11 +1,11 @@
 """local_frame: LocalRelation-backed driver-side frames.
 
-The contract under test: for int/bool/str/None rows, local_frame
-returns exactly the rows createDataFrame would (same schema, same
-values, null-for-null), while its plan is a LocalRelation — zero
-python-RDD scan tasks on every collect/broadcast. Anything outside
-the exact-round-trip envelope must fall back to createDataFrame
-unchanged.
+The contract under test: local_frame returns exactly the rows
+createDataFrame would (same schema, same values, null-for-null), while
+its plan is a LocalRelation — zero python-RDD scan tasks on every
+collect/broadcast. Every input takes that one Arrow path, including
+floats, NUL bytes, numpy scalars and an empty list; a value Arrow
+cannot convert to its declared column type raises.
 """
 
 from __future__ import annotations
@@ -58,22 +58,26 @@ def test_local_frame_bool_column(spark):
     assert _plan_class(lf) == "LocalRelation"
 
 
-def test_local_frame_falls_back_outside_envelope(spark):
-    # floats cannot round-trip as literals here -> createDataFrame path
-    f = local_frame(spark, [(1.5, "x", 1)], "a double, b string, c bigint")
-    assert _plan_class(f) != "LocalRelation"
-    assert _rows(f) == [(1.5, "x", 1)]
-    # numpy scalars are not exact-typed python ints -> fallback, which
-    # preserves createDataFrame's own type error for them
+def test_local_frame_is_one_local_relation_for_every_input(spark):
     import numpy as np
+    import pyarrow as pa
     import pytest
-    from pyspark.errors.exceptions.base import PySparkTypeError
 
-    with pytest.raises(PySparkTypeError):
-        local_frame(spark, [(np.int64(7),)], "a bigint")
-    # NUL byte cannot ride in a SQL literal -> fallback
-    f3 = local_frame(spark, [("a\x00b",)], "s string")
-    assert _rows(f3) == [("a\x00b",)]
-    # empty list -> fallback (VALUES needs a row)
-    f4 = local_frame(spark, [], "a int, b string")
-    assert f4.count() == 0 and len(f4.schema.fields) == 2
+    for rows, schema in (
+        ([(1.5, "x", 1)], "a double, b string, c bigint"),
+        ([("a\x00b",)], "s string"),
+        ([(np.int64(7), np.int32(3))], "a bigint, b int"),
+        ([], "a int, b string"),
+    ):
+        lf = local_frame(spark, rows, schema)
+        cd = spark.createDataFrame(
+            [tuple(v.item() if isinstance(v, np.generic) else v for v in r)
+             for r in rows],
+            schema=schema,
+        )
+        assert _plan_class(lf) == "LocalRelation", schema
+        assert lf.schema == cd.schema, schema
+        assert _rows(lf) == _rows(cd), schema
+    # a value Arrow cannot convert to its column type raises
+    with pytest.raises(pa.ArrowInvalid):
+        local_frame(spark, [("x",)], "a bigint")

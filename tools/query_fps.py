@@ -50,7 +50,8 @@ SNAPSHOT = REPO / "tests" / "driver_green_fps.json"
 #: pq_encode_wide, _adc_topk_full_scan and _keep_best); t1, ds2c, dd7
 #: and t12 cover the ETL UDF, the download map, the dup-group
 #: components and the ETL channel map, each through a query that
-#: executes it.
+#: executes it; g1_mixed_batches covers the join operators
+#: (operators/joins.py) through the mixed-kind get-batch join it runs.
 HELPER_SENTINELS: dict[str, list[str]] = {
     "p2_extract_member": [
         "aistore_spark/sources/tables.py",
@@ -82,6 +83,9 @@ HELPER_SENTINELS: dict[str, list[str]] = {
     ],
     "t12_ws_etl_channel": [
         "aistore_spark/streaming/etl_channel.py",
+    ],
+    "g1_mixed_batches": [
+        "aistore_spark/operators/joins.py",
     ],
 }
 
